@@ -87,30 +87,6 @@ def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFram
     return df
 
 
-def invalidate_table_cache(
-    spark: SparkSession, sf_dir: str | None = None, name: str | None = None
-) -> None:
-    """Escape hatch for the handle memo: drop every cached handle (no
-    args), every handle under ``sf_dir``, or one table's handle — for
-    the (out-of-contract) case of a fixture path being rewritten
-    in-session, where the memoized InMemoryFileIndex would otherwise
-    serve a stale file listing (ADVICE r11)."""
-    cache = getattr(spark, "_graft_table_cache", None)
-    if not cache:
-        return
-    if sf_dir is None:
-        cache.clear()
-        return
-    if name is not None:
-        cache.pop(
-            os.path.abspath(os.path.join(sf_dir, f"{name}.parquet")), None
-        )
-        return
-    prefix = os.path.abspath(sf_dir) + os.sep
-    for key in [k for k in cache if k.startswith(prefix)]:
-        cache.pop(key, None)
-
-
 def tables(
     spark: SparkSession, names: list[str], sf_dir: str | None = None
 ) -> dict[str, DataFrame]:

@@ -2,10 +2,9 @@
 
 Replaces the IVF centroid "stand-in" (a deterministic id-prefix
 sample) with a real fit: deterministic hash-sample seeding, then
-``n_iter`` Lloyd rounds expressed entirely as DataFrame ops — the
-assign step is a broadcast join against the (tiny) centroid table
-reduced by a map-side-combining argmin aggregate, the update step a
-``posexplode`` + two-level groupBy producing element-wise means.
+``n_iter`` Lloyd rounds — the assign step is an Arrow GEMM against
+the collected (tiny) centroid table, the update step one
+``groupBy(cid)`` of per-position means.
 
 Reference parity: the reference engine has no clustering operator;
 this exists to make the IVF ANN path (operators/similarity.py,
@@ -15,18 +14,13 @@ for real corpora.
 
 Scale notes (100 TB / billions of vectors)
 ------------------------------------------
-- Per iteration: one broadcast join (centroids are k×dim doubles —
-  tiny, always under the broadcast threshold) and two aggregations.
-  The argmin aggregate partial-combines map-side, so the first
-  shuffle carries ≤1 row per vector (never the N×k scored rows); the
-  mean aggregate partial-combines (cid, pos) sums, so the second
-  shuffle carries ~k×dim×n_partitions partial rows, independent of
-  corpus size.
-- A window (`row_number over partitionBy(_id)`) would shuffle all
-  N×k scored rows — the aggregate argmin is the scalable shape.
-- Iterations are driver-side loop steps over distributed plans; each
-  new centroid table ``localCheckpoint``s to cut lineage, exactly
-  like operators/graph.py's label propagation.
+- Per iteration: one map-side GEMM assign (centroids are k×dim
+  doubles — tiny, shipped in the task closure) and one aggregation
+  whose partial combine shuffles ~k×n_partitions rows, independent
+  of corpus size.
+- Iterations are driver-side loop steps: each generation's centroid
+  table is collected and feeds the next assign; only the last one
+  ``localCheckpoint``s.
 - Seeding samples the k rows with the smallest ``xxhash64(id,
   seed)`` — engine- and partitioning-independent. The fitted means
   are float-sum-order dependent in the last ulps (as in every
@@ -98,84 +92,70 @@ def kmeans_fit(
     vec_col: str = "emb",
     n_iter: int = 5,
     seed: int = 42,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Fit k centroids with Lloyd's algorithm; returns
-    ``(cid int, cv array<double>)``. The Lloyd loop's assign step
-    defaults to the Arrow GEMM engine (see :func:`_assign`) — the
-    fit is ulp-tolerant by contract (tests assert inertia descent
-    and assignment quality, never bit-exact centroids), and the
-    GEMM keeps per-iteration cost flat as k grows toward the √N
-    centroid counts a real IVF fit wants. Pass ``engine='expr'``
-    for the pure-JVM fold loop."""
-    vecs = corpus.select(
-        F.col(id_col).alias("_id"), as_double_vec(vec_col).alias("vd")
-    ).localCheckpoint(eager=True)
+    ``(cid int, cv array<double>)``.
+
+    Which vectors take part: every non-null vector, read as its
+    zero-padded extension to ``dim``, the longest length in the whole
+    corpus. Every centroid therefore has ``dim`` elements, and at a
+    position none of its members has it holds 0.0 (the mean of their
+    padding). Null vectors take no part; an empty or all-null corpus
+    fits no centroid (0 rows).
+
+    The assign step is the Arrow GEMM (see :func:`_assign`): the fit
+    is ulp-tolerant by contract (tests assert inertia descent and
+    assignment quality, never bit-exact centroids), and the GEMM
+    keeps per-iteration cost flat as k grows toward the √N centroid
+    counts a real IVF fit wants."""
+    vecs = (
+        corpus.select(F.col(id_col).alias("_id"), as_double_vec(vec_col).alias("vd"))
+        .where(F.col("vd").isNotNull())
+        .localCheckpoint(eager=True)
+    )
+
+    def _pad(dim: Column) -> Column:
+        return F.concat(
+            F.col("vd"), F.array_repeat(F.lit(0.0), dim - F.size("vd"))
+        )
 
     # deterministic seeds, numbered 0..k-1 in hash order (k rows on
-    # the driver-side window is trivial)
+    # the driver-side window is trivial); dim rides along
     seeds = (
         vecs.select(F.xxhash64(F.col("_id"), F.lit(seed)).alias("_h"), "vd")
         .orderBy("_h")
         .limit(k)
+        .crossJoin(vecs.agg(F.max(F.size("vd")).alias("dim")))
         .select(
             (F.row_number().over(Window.orderBy("_h")) - F.lit(1)).alias("cid"),
-            F.col("vd").alias("cv"),
+            _pad(F.col("dim")).alias("cv"),
+            "dim",
         )
     )
     if n_iter <= 0:
-        return seeds.localCheckpoint(eager=True)
+        return seeds.drop("dim").localCheckpoint(eager=True)
 
+    # Lloyd generations stay DRIVER-SIDE between iterations: the k-row
+    # codebook is collect-bounded by the same contract the Arrow
+    # assigner already relies on (it ships the table in the task
+    # closure), so each generation costs one collect; only the FINAL
+    # generation checkpoints.
+    rows = seeds.collect()
+    if not rows or not rows[0]["dim"]:
+        return seeds.drop("dim").localCheckpoint(eager=True)
+    dim = rows[0]["dim"]
+    padded = vecs.select("_id", _pad(F.lit(dim)).alias("vd"))
     # Centroid update: ONE groupBy(cid) with a per-position avg each
-    # (map-side partial-combining, k×dim aggregate state) instead of
-    # the posexplode + (cid, pos) aggregate + refold — the explode
-    # fanned every vector into dim rows and shuffled them per
-    # iteration (optimization round 12, guide §2.3 "aggregate before
-    # you shuffle"). try_element_at keeps the ragged-vector
-    # semantics of the per-pos form: a position absent from a short
-    # vector is NULL and avg() skips it.
-    def _update(assigned, dim):
-        avgs = [
-            F.avg(
-                F.try_element_at(F.col("vd"), F.lit(i + 1))
-            ).alias(f"__a{i}")
-            for i in range(dim)
-        ]
-        arr = F.array(*[F.col(f"__a{i}") for i in range(dim)])
-        return assigned.groupBy("cid").agg(*avgs).select(
-            "cid", arr.alias("cv")
-        )
-
-    if engine == "arrow":
-        # Lloyd generations stay DRIVER-SIDE between iterations (the
-        # pq_fit round-12 trim): the k-row codebook is collect-
-        # bounded by the same contract the Arrow assigner already
-        # relies on (it ships the table in the task closure), so the
-        # seed checkpoint, the per-iteration generation checkpoints
-        # AND the assigner's per-iteration re-collect all fold into
-        # one collect per generation; dim rides the seed collect.
-        # Only the FINAL generation checkpoints (the returned
-        # DataFrame keeps its round-11 form).
-        rows = seeds.collect()
-        if not rows:
-            return seeds.localCheckpoint(eager=True)
-        dim = max(len(r["cv"]) for r in rows)
-        cents = None
-        for i in range(n_iter):
-            assigned = _assign(vecs, rows, engine="arrow")
-            upd = _update(assigned, dim)
-            if i < n_iter - 1:
-                rows = upd.collect()
-            else:
-                cents = upd.localCheckpoint(eager=True)
-        return cents
-
-    cents = seeds.localCheckpoint(eager=True)
-    dim = int(cents.agg(F.max(F.size("cv"))).first()[0])
-    for _ in range(n_iter):
-        assigned = _assign(vecs, cents, engine=engine)
-        cents = _update(assigned, dim).localCheckpoint(eager=True)
-    return cents
+    # (map-side partial-combining, k×dim aggregate state) — no
+    # posexplode fanning every vector into dim shuffled rows.
+    avgs = [F.avg(F.col("vd")[i]).alias(f"__a{i}") for i in range(dim)]
+    arr = F.array(*[F.col(f"__a{i}") for i in range(dim)]).alias("cv")
+    for i in range(n_iter):
+        upd = _assign(padded, rows, engine="arrow").groupBy("cid").agg(*avgs)
+        upd = upd.select("cid", arr)
+        if i < n_iter - 1:
+            rows = upd.collect()
+    return upd.localCheckpoint(eager=True)
 
 
 def kmeans_assign(

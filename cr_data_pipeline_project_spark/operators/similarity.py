@@ -75,7 +75,12 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """dot / (norm · norm), NULL when either vector has zero norm
+    (all-zero or empty): a zero-norm vector is similar to nothing, so
+    its score never passes a threshold and ranks last under
+    ``F.desc`` (nulls last)."""
+    den = norm(a) * norm(b)
+    return F.when(den > 0, dot(a, b) / den)
 
 
 def brute_force_topk(
@@ -216,12 +221,7 @@ def cosine_neardup_pairs(
             ny += y[i] * y[i]
         import math
 
-        den = math.sqrt(nx) * math.sqrt(ny)
-        if den == 0.0:
-            # JVM double division yields NaN (0/0) where Python
-            # raises — preserve the expression-engine value
-            return float("nan")
-        return d / den
+        return d / (math.sqrt(nx) * math.sqrt(ny))
 
     def per_combo(left: "pd.DataFrame", right: "pd.DataFrame"):
         out_a, out_b, out_c = [], [], []
@@ -251,16 +251,12 @@ def cosine_neardup_pairs(
                 blk = max(1, _GEMM_BLOCK_ELEMS // max(1, len(rb)))
                 for i0 in range(0, len(la), blk):
                     i1 = min(i0 + blk, len(la))
-                    # Zero-norm (all-zero or empty) vectors score NaN
-                    # in the JVM fold, and Spark's filter NaN-is-
-                    # greatest ordering EMITS those pairs (DuckDB
-                    # agrees) — keep that contract: a NaN cell (0/0
-                    # here too) passes the prefilter and re-scores to
-                    # NaN (ADVICE r11; pinned in tests/
-                    # test_similarity_nan_contract.py).
+                    # a zero-norm (all-zero or empty) vector scores
+                    # 0/0 = NaN here and NULL in cosine(): it is
+                    # similar to nothing, and NaN fails the prefilter
                     with np.errstate(divide="ignore", invalid="ignore"):
                         S = (A[i0:i1] @ B.T) / np.outer(an[i0:i1], bn)
-                    mask = (S >= pre) | np.isnan(S)
+                    mask = S >= pre
                     if same_block:
                         # unordered combo (i,i): keep id_a < id_b once
                         mask &= ia[i0:i1, None] < ib[None, :]
@@ -270,9 +266,7 @@ def cosine_neardup_pairs(
                     for rr, cc in zip(r.tolist(), c.tolist()):
                         xa, xb = ia[i0 + rr], ib[cc]
                         cs = exact_cos(A[i0 + rr], B[cc])
-                        # Spark `cos >= t` is TRUE for NaN (NaN sorts
-                        # greatest); Python's is False — spell it out
-                        if cs >= threshold or cs != cs:
+                        if cs >= threshold:
                             lo, hi = (xa, xb) if xa < xb else (xb, xa)
                             out_a.append(lo)
                             out_b.append(hi)
@@ -297,16 +291,7 @@ def cosine_neardup_pairs(
             per_combo, f"vec_a {id_type}, vec_b {id_type}, cos double"
         )
     )
-    # the Arrow boundary maps the kernel's NaN floats to NULL (pandas
-    # NaN-as-missing); no other None can reach this column, so the
-    # coalesce restores the JVM chain's NaN scores exactly
-    return pairs.select(
-        "vec_a",
-        "vec_b",
-        F.round(
-            F.coalesce(F.col("cos"), F.lit(float("nan"))), 6
-        ).alias("score"),
-    )
+    return pairs.select("vec_a", "vec_b", F.round("cos", 6).alias("score"))
 
 
 def ivf_assign(

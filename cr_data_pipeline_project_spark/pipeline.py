@@ -58,10 +58,7 @@ class Lake:
     rename of the pointer file, so a crash at any instant leaves the
     previous snapshot intact and readable (crash-injection tested).
     Old versions are GC'd after commit. Append-only facts stay flat
-    until first rewritten; appends land inside the current snapshot.
-    (:mod:`..lake_delta` provides the pluggable Delta backend with
-    this same surface — ``lake_delta.make_lake`` picks it when
-    delta-spark is installed and falls back to this class.)"""
+    until first rewritten; appends land inside the current snapshot."""
 
     PARTITIONING: dict[str, list[str]] = {"matches": ["season_id"]}
 

@@ -226,7 +226,12 @@ def q35_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "q36_ann_bruteforce_topk",
     """
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings),
+    WITH v AS (
+        -- a zero-norm vector is similar to nothing: NULL, as in cosine()
+        SELECT vec_id,
+               CASE WHEN list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
+                    THEN embedding::DOUBLE[] END AS ve
+        FROM embeddings),
     q AS (SELECT vec_id AS query_id, ve AS qv FROM v WHERE vec_id < 10),
     scored AS (
         SELECT q.query_id, v.vec_id AS neighbor_id,
@@ -264,7 +269,12 @@ def q37_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "q42_ann_ivf_topk",
     """
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS ve FROM embeddings),
+    WITH v AS (
+        -- a zero-norm vector is similar to nothing: NULL, as in cosine()
+        SELECT vec_id,
+               CASE WHEN list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0
+                    THEN embedding::DOUBLE[] END AS ve
+        FROM embeddings),
     cents AS (SELECT vec_id AS cid, ve AS cv FROM v WHERE vec_id < 16),
     assign AS (
         SELECT vec_id, cid AS cluster_id FROM (

@@ -72,8 +72,7 @@ def stream_battlelog_kafka(
     different reader — the production completion of the documented
     swap-one-reader seam. Requires the ``spark-sql-kafka`` connector
     on the classpath; absent (as in this sandbox), the ``.load()``
-    raises and callers/tests skip, the same import-gated posture as
-    the Delta backend (lake_delta.py).
+    raises and callers/tests skip.
 
     Scale: one Spark input partition per Kafka partition — size the
     topic's partition count to the ingest parallelism wanted;

@@ -163,3 +163,35 @@ def test_arrow_assign_empty_and_string_ids(spark, emb):
     rows = out.collect()
     assert len(rows) == vecs.count()
     assert all(r["id"].startswith("doc-") for r in rows)
+
+
+def test_fit_pads_ragged_corpus_to_longest_vector(spark):
+    """dim comes from the whole corpus, not the seeds: a 3-element
+    vector outside the seed set still widens every centroid, and
+    shorter vectors count as zero-padded."""
+    order = [
+        r["vec_id"]
+        for r in spark.range(12).withColumnRenamed("id", "vec_id")
+        .orderBy(F.xxhash64("vec_id", F.lit(42)))
+        .collect()
+    ]
+    # the two seeds (first in hash order) open two well-separated
+    # groups at x=0 and x=10; the last in hash order is never a seed
+    rows = [(i, [10.0 * (j % 2), 0.1 * j]) for j, i in enumerate(order)]
+    rows[-1] = (order[-1], [10.0, 1.0, 5.0])
+    k = 2
+    corpus = spark.createDataFrame(rows, "vec_id long, emb array<double>")
+    cents = {r["cid"]: r["cv"] for r in clustering.kmeans_fit(corpus, k, n_iter=2).collect()}
+    assert all(len(cv) == 3 for cv in cents.values())
+    assert all(x is not None and x == x for cv in cents.values() for x in cv)
+    # the long vector's third element lands in its cluster's mean
+    # (1 of 6 members); the other cluster holds 0.0 there
+    assert sorted(cv[2] for cv in cents.values()) == [0.0, 5.0 / 6]
+
+
+def test_fit_on_empty_corpus_returns_no_centroids(spark):
+    empty = spark.createDataFrame([], "vec_id long, emb array<double>")
+    for n_iter in (0, 2):
+        cents = clustering.kmeans_fit(empty, k=3, n_iter=n_iter)
+        assert cents.columns == ["cid", "cv"]
+        assert cents.count() == 0

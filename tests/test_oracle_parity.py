@@ -5,25 +5,19 @@ runs that heavier pass on demand)."""
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from tools.check_oracle import TABLES, compare
+from tools.check_oracle import compare, connect
 
 SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
 def duck_con():
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(SF, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
+    return connect(SF)
 
 
 ALL = sorted(entrymod.queries())

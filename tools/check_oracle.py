@@ -120,6 +120,16 @@ def compare(name, spark_pdf, duck_pdf, verbose=False):
     return problems
 
 
+def connect(sf: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table in `sf`."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -132,11 +142,7 @@ def main():
 
     spark = get_session("oracle-check", shuffle_partitions=16)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(args.sf, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = connect(args.sf)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
