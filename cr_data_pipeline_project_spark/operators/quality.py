@@ -5,12 +5,13 @@ that return *violations* (SURVEY.md §1.3).
 
 Each checker returns a DataFrame of offending rows (empty = healthy)
 so callers can count, log, quarantine, or fail. ``assert_empty``
-wraps any of them into a hard gate.
+wraps any of them into a hard gate; ``violation_counts`` counts a
+named set of them in one Spark action (``pipeline.audit``, q225).
 
 Scale notes: every check is a single aggregate or anti-join over the
 checked table — they pipeline with the load job and reuse its scan
 when cached. Run them inside the same action as the write (Observation
-API) or as a post-commit audit query.
+API) or as one post-commit audit action.
 """
 
 from __future__ import annotations
@@ -55,6 +56,23 @@ def deck_size_violations(
         .agg(F.count(F.lit(1)).alias("n_cards"))
         .where(F.col("n_cards") != expected)
     )
+
+
+def violation_counts(checks: dict[str, DataFrame]) -> DataFrame:
+    """One ``(check_name, n_violations bigint)`` row per named check,
+    all computed by a single action: each check becomes a
+    literal-labelled one-row count aggregate, and the rows are
+    unioned in the dict's order."""
+    rows = [
+        df.agg(F.count(F.lit(1)).cast("bigint").alias("n_violations")).select(
+            F.lit(name).alias("check_name"), "n_violations"
+        )
+        for name, df in checks.items()
+    ]
+    out = rows[0]
+    for row in rows[1:]:
+        out = out.unionByName(row)
+    return out
 
 
 def assert_empty(violations: DataFrame, what: str) -> None:

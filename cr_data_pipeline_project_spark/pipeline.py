@@ -9,6 +9,14 @@ injected as plain DataFrames (the REST layer in ``sources.rest``
 produces them), so the pipeline itself is pure Spark and fully
 testable offline.
 
+Each stage's work runs once. ``Lake.read`` applies the declared
+schema, so a read starts no job. The dim and match_cards row counts
+are observed (``DataFrame.observe``) on the frame the lake write
+consumes, instead of recomputing the stage with ``count()``; only the
+two skip-empty appends (seasons, rankings) and the checkpointed new
+matches are counted up front, because the count decides whether and
+how they are written. ``audit`` counts its six checks in one action.
+
 Scale notes (100 TB lake)
 -------------------------
 - Facts (matches, match_cards) are append-only with an anti-join
@@ -25,9 +33,11 @@ Scale notes (100 TB lake)
 
 from __future__ import annotations
 
+import contextlib
 import os
+import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import schemas
 from .functions.calendar import season_calendar
@@ -99,18 +109,26 @@ class Lake:
         """Read the table's current snapshot, or a retained past one
         (``version=``, see ``versions()``). Past snapshots exist when
         ``retain_versions > 1``; reading a GC'd or never-committed
-        version raises."""
+        version raises.
+
+        Every read applies the table's declared schema
+        (``schemas.DOMAIN``), so it starts no schema-inference job,
+        returns only the declared columns, and widens files that hold
+        a narrower integer than declared (``match_view_id`` written as
+        ``int`` before it was cast to ``bigint``). A partition column
+        comes last, as it does with inference."""
         if version is not None:
-            vdir = os.path.join(self.path(name), f"v{version}")
-            if version not in self.versions(name) or not os.path.isdir(vdir):
+            path = os.path.join(self.path(name), f"v{version}")
+            if version not in self.versions(name) or not os.path.isdir(path):
                 raise ValueError(
                     f"{name}: version {version} not retained "
                     f"(available: {self.versions(name)})"
                 )
-            return self.spark.read.parquet(vdir)
-        if self.exists(name):
-            return self.spark.read.parquet(self.data_dir(name))
-        return self.spark.createDataFrame([], schemas.DOMAIN[name])
+        elif self.exists(name):
+            path = self.data_dir(name)
+        else:
+            return self.spark.createDataFrame([], schemas.DOMAIN[name])
+        return self.spark.read.schema(schemas.DOMAIN[name]).parquet(path)
 
     def versions(self, name: str) -> list[int]:
         """Committed snapshot versions still on disk, oldest first.
@@ -253,6 +271,30 @@ class Lake:
                 (shutil.rmtree if os.path.isdir(p) else os.remove)(p)
 
 
+@contextlib.contextmanager
+def _stage(spark: SparkSession, walls: list, name: str, rows_key: str):
+    """Run one ``run_etl`` stage: its jobs carry the description
+    ``run_etl <name>`` (the job group stays the caller's), and
+    ``(name, wall seconds, rows_key)`` is appended to ``walls``;
+    ``rows_key`` names the stats entry holding the stage's row count."""
+    sc = spark.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"run_etl {name}")
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        walls.append((name, time.perf_counter() - t0, rows_key))
+        sc.setLocalProperty("spark.job.description", prior)
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed by the action that consumes
+    it; read ``obs.get["rows"]`` after that action."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
 def run_etl(
     spark: SparkSession,
     lake: Lake,
@@ -270,122 +312,133 @@ def run_etl(
     """One pipeline run. Returns per-stage inserted/updated row counts
     (the reference's log metrics, S13); pass ``log_dir`` to also emit
     the reference's durable per-run logfile artifact
-    (etl_pipeline_script.py:20-29, see :mod:`.runlog`)."""
+    (etl_pipeline_script.py:20-29, see :mod:`.runlog`), which adds one
+    ``run_etl stage=<name> wall_s=<s> rows=<n>`` line per stage."""
     from .session import prepare
 
     prepare(spark)  # UTC rendering of match_key regardless of host tz
     stats: dict[str, int] = {}
+    walls: list[tuple[str, float, str]] = []
     failed_players = failed_players or []
 
     # 1. seasons — generate + dedup + insert-if-absent
-    #    (etl_pipeline_script.py:38-53)
-    cal = season_calendar(spark, calendar_from, calendar_months).dropDuplicates(
-        ["season_id"]
-    )
-    new_seasons = mutations.insert_if_absent(
-        cal, lake.read("seasons").select("season_id"), ["season_id"]
-    )
-    stats["seasons_inserted"] = new_seasons.count()
-    if stats["seasons_inserted"]:
-        lake.append("seasons", new_seasons)
+    #    (etl_pipeline_script.py:38-53). Counted before the write: an
+    #    empty append to this flat table would still add a file.
+    with _stage(spark, walls, "seasons", "seasons_inserted"):
+        cal = season_calendar(
+            spark, calendar_from, calendar_months
+        ).dropDuplicates(["season_id"])
+        new_seasons = mutations.insert_if_absent(
+            cal, lake.read("seasons").select("season_id"), ["season_id"]
+        )
+        stats["seasons_inserted"] = new_seasons.count()
+        if stats["seasons_inserted"]:
+            lake.append("seasons", new_seasons)
 
-    # 2. clans — MERGE upsert (etl_pipeline_script.py:72-86)
-    merged_clans = mutations.upsert(
-        lake.read("clans"), clans.select(*lake.read("clans").columns), ["clan_id"]
-    )
-    stats["clans_total"] = merged_clans.count()
-    lake.overwrite("clans", merged_clans)
-
-    # 3. players — MERGE upsert (etl_pipeline_script.py:89-93)
-    merged_players = mutations.upsert(
-        lake.read("players"),
-        players.select(*lake.read("players").columns),
-        ["player_id"],
-    )
-    stats["players_total"] = merged_players.count()
-    lake.overwrite("players", merged_players)
+    # 2-3. clans, players — MERGE upsert (etl_pipeline_script.py:72-93)
+    for name, batch, key in (
+        ("clans", clans, "clan_id"),
+        ("players", players, "player_id"),
+    ):
+        with _stage(spark, walls, name, f"{name}_total"):
+            target = lake.read(name)
+            merged, obs = _counted(
+                mutations.upsert(target, batch.select(*target.columns), [key])
+            )
+            lake.overwrite(name, merged)
+            stats[f"{name}_total"] = obs.get["rows"]
 
     # 4. season_rankings — insert-if-absent by season
-    #    (etl_pipeline_script.py:96-107)
-    new_rank = mutations.insert_if_absent(
-        rankings,
-        lake.read("season_rankings").select("season_id").distinct(),
-        ["season_id"],
-    )
-    stats["rankings_inserted"] = new_rank.count()
-    if stats["rankings_inserted"]:
-        lake.append("season_rankings", new_rank)
+    #    (etl_pipeline_script.py:96-107); counted before the write, as
+    #    seasons are.
+    with _stage(spark, walls, "season_rankings", "rankings_inserted"):
+        new_rank = mutations.insert_if_absent(
+            rankings,
+            lake.read("season_rankings").select("season_id").distinct(),
+            ["season_id"],
+        )
+        stats["rankings_inserted"] = new_rank.count()
+        if stats["rankings_inserted"]:
+            lake.append("season_rankings", new_rank)
 
     # 4b. purge failed players child-first (db_ops.py:53-59;
     #     etl_pipeline_script.py:109-112)
     if failed_players:
-        purge = spark.createDataFrame(
-            [(p,) for p in failed_players], "player_id string"
-        )
-        current = {
-            n: lake.read(n)
-            for n in ("match_cards", "matches", "season_rankings", "players")
-        }
-        purged = mutations.cascade_delete(current, "player_id", purge)
-        for name in ("match_cards", "matches", "season_rankings", "players"):
-            if lake.exists(name):
-                lake.overwrite(name, purged[name])
-        stats["players_purged"] = len(failed_players)
+        with _stage(spark, walls, "purge", "players_purged"):
+            purge = spark.createDataFrame(
+                [(p,) for p in failed_players], "player_id string"
+            )
+            current = {
+                n: lake.read(n)
+                for n in ("match_cards", "matches", "season_rankings", "players")
+            }
+            purged = mutations.cascade_delete(current, "player_id", purge)
+            for name in ("match_cards", "matches", "season_rankings", "players"):
+                if lake.exists(name):
+                    lake.overwrite(name, purged[name])
+            stats["players_purged"] = len(failed_players)
 
     # 5. cards — MERGE upsert with null→0 coercion (db_ops.py:128-149)
-    cards_clean = cards.withColumn(
-        "elixir_cost", F.coalesce(F.col("elixir_cost"), F.lit(0))
-    )
-    merged_cards = mutations.upsert(
-        lake.read("cards"),
-        cards_clean.select(*lake.read("cards").columns),
-        ["card_id"],
-    )
-    stats["cards_total"] = merged_cards.count()
-    lake.overwrite("cards", merged_cards)
+    with _stage(spark, walls, "cards", "cards_total"):
+        cards_clean = cards.withColumn(
+            "elixir_cost", F.coalesce(F.col("elixir_cost"), F.lit(0))
+        )
+        target = lake.read("cards")
+        merged_cards, obs = _counted(
+            mutations.upsert(
+                target, cards_clean.select(*target.columns), ["card_id"]
+            )
+        )
+        lake.overwrite("cards", merged_cards)
+        stats["cards_total"] = obs.get["rows"]
 
     # 6. matches + match_cards — flatten, incremental-gate, append
     #    (etl_pipeline_script.py:119-153)
-    seasons_dim = lake.read("seasons")
-    matches = flatten_matches(battlelogs, seasons=seasons_dim)
-    existing_keys = lake.read("matches").select("match_key")
-    # localCheckpoint (not cache): appending to the matches path
-    # below triggers refreshByPath, which would invalidate a cache
-    # whose lineage reads that same path — the anti-join would then
-    # recompute against the just-appended file and yield nothing.
-    new_matches = mutations.insert_if_absent(
-        matches, existing_keys, ["match_key"]
-    ).localCheckpoint(eager=True)
-    n_new = new_matches.count()
-    stats["matches_inserted"] = n_new
-    if n_new:
-        # deterministic surrogate ids continuing from the current max
-        # (M6: IDENTITY replacement)
-        start = (
-            lake.read("matches")
-            .agg(F.coalesce(F.max("match_view_id"), F.lit(0)))
-            .collect()[0][0]
-        )
-        keyed = mutations.add_surrogate_keys(
-            new_matches, ["match_key"], "match_view_id", start_at=int(start)
-        )
-        lake.append("matches", keyed.select(*[f.name for f in schemas.MATCHES]))
+    with _stage(spark, walls, "matches", "matches_inserted"):
+        seasons_dim = lake.read("seasons")
+        matches = flatten_matches(battlelogs, seasons=seasons_dim)
+        existing_keys = lake.read("matches").select("match_key")
+        # localCheckpoint (not cache): appending to the matches path
+        # below triggers refreshByPath, which would invalidate a cache
+        # whose lineage reads that same path — the anti-join would then
+        # recompute against the just-appended file and yield nothing.
+        new_matches = mutations.insert_if_absent(
+            matches, existing_keys, ["match_key"]
+        ).localCheckpoint(eager=True)
+        n_new = new_matches.count()
+        stats["matches_inserted"] = n_new
+        if n_new:
+            # deterministic surrogate ids continuing from the current
+            # max (M6: IDENTITY replacement), as the declared bigint
+            start = (
+                lake.read("matches")
+                .agg(F.coalesce(F.max("match_view_id"), F.lit(0)))
+                .collect()[0][0]
+            )
+            keyed = mutations.add_surrogate_keys(
+                new_matches, ["match_key"], "match_view_id", start_at=int(start)
+            ).withColumn("match_view_id", F.col("match_view_id").cast("bigint"))
+            lake.append(
+                "matches", keyed.select(*[f.name for f in schemas.MATCHES])
+            )
 
-        # match_cards only for the new match views (second-pass
-        # extraction, etl_pipeline_script.py:141-147)
-        cards_flat = flatten_match_cards(battlelogs)
-        new_cards = cards_flat.join(
-            new_matches.select("match_key"), "match_key", "left_semi"
-        )
-        mapping = keyed.select("match_key", "match_view_id")
-        with_ids = new_cards.join(F.broadcast(mapping), "match_key")  # J1
-        stats["match_cards_inserted"] = with_ids.count()
-        lake.append(
-            "match_cards",
-            with_ids.select("match_view_id", "match_key", "player_id", "card_id"),
-        )
-    else:
-        stats["match_cards_inserted"] = 0
+    # match_cards only for the new match views (second-pass
+    # extraction, etl_pipeline_script.py:141-147)
+    with _stage(spark, walls, "match_cards", "match_cards_inserted"):
+        if n_new:
+            new_cards = flatten_match_cards(battlelogs).join(
+                new_matches.select("match_key"), "match_key", "left_semi"
+            )
+            mapping = keyed.select("match_key", "match_view_id")
+            with_ids, obs = _counted(
+                new_cards.join(F.broadcast(mapping), "match_key").select(  # J1
+                    "match_view_id", "match_key", "player_id", "card_id"
+                )
+            )
+            lake.append("match_cards", with_ids)
+            stats["match_cards_inserted"] = obs.get["rows"]
+        else:
+            stats["match_cards_inserted"] = 0
 
     if log_dir is not None:
         from . import runlog
@@ -393,30 +446,38 @@ def run_etl(
         logger = runlog.run_logger(log_dir)
         logger.info("run_etl completed lake=%s", lake.root)
         runlog.log_stats(logger, "run_etl", stats)
+        for name, wall, rows_key in walls:
+            logger.info(
+                "run_etl stage=%s wall_s=%.3f rows=%d", name, wall, stats[rows_key]
+            )
         runlog.close(logger)
     return stats
 
 
 def audit(spark: SparkSession, lake: Lake) -> dict[str, int]:
     """Post-load data-quality audit mirroring the DDL constraints
-    (SURVEY.md §1.3). Returns violation counts (all should be 0)."""
+    (SURVEY.md §1.3). Returns violation counts (all should be 0),
+    counted in one Spark action."""
     matches = lake.read("matches")
     match_cards = lake.read("match_cards")
     players = lake.read("players")
     seasons = lake.read("seasons")
-    return {
-        "dup_match_keys": quality.duplicate_keys(matches, ["match_key"]).count(),
-        "dup_season_ids": quality.duplicate_keys(seasons, ["season_id"]).count(),
-        "orphan_match_players": quality.fk_orphans(
-            matches.select(F.col("player_id")), players, ["player_id"]
-        ).count(),
-        "bad_crowns": quality.check_violations(
-            matches, F.col("crowns").between(0, 3)
-        ).count(),
-        "bad_decks": quality.deck_size_violations(
-            match_cards, ["match_key", "player_id"]
-        ).count(),
-        "season_date_violations": quality.check_violations(
-            seasons, F.col("sn_start_date") < F.col("sn_end_date")
-        ).count(),
-    }
+    counts = quality.violation_counts(
+        {
+            "dup_match_keys": quality.duplicate_keys(matches, ["match_key"]),
+            "dup_season_ids": quality.duplicate_keys(seasons, ["season_id"]),
+            "orphan_match_players": quality.fk_orphans(
+                matches.select(F.col("player_id")), players, ["player_id"]
+            ),
+            "bad_crowns": quality.check_violations(
+                matches, F.col("crowns").between(0, 3)
+            ),
+            "bad_decks": quality.deck_size_violations(
+                match_cards, ["match_key", "player_id"]
+            ),
+            "season_date_violations": quality.check_violations(
+                seasons, F.col("sn_start_date") < F.col("sn_end_date")
+            ),
+        }
+    )
+    return {r["check_name"]: r["n_violations"] for r in counts.collect()}

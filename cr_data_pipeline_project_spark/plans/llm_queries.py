@@ -7492,50 +7492,28 @@ def q225_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, "orders", sf_dir)
     cu = table(spark, "customer", sf_dir)
 
-    def count1(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_violations")
-        ).select(F.lit(name).alias("check_name"), "n_violations")
-
-    checks = [
-        count1(
-            "customer_pk_dups", quality.duplicate_keys(cu, ["c_custkey"])
-        ),
-        count1(
-            "lineitem_order_orphans",
-            quality.fk_orphans(
+    return quality.violation_counts(
+        {
+            "customer_pk_dups": quality.duplicate_keys(cu, ["c_custkey"]),
+            "lineitem_order_orphans": quality.fk_orphans(
                 li.select(F.col("l_orderkey").alias("o_orderkey")),
                 o,
                 ["o_orderkey"],
             ),
-        ),
-        count1(
-            "orders_customer_orphans",
-            quality.fk_orphans(
+            "orders_customer_orphans": quality.fk_orphans(
                 o.select(F.col("o_custkey").alias("c_custkey")),
                 cu,
                 ["c_custkey"],
             ),
-        ),
-        count1(
-            "orders_pk_dups", quality.duplicate_keys(o, ["o_orderkey"])
-        ),
-        count1(
-            "quantity_check",
-            quality.check_violations(li, F.col("l_quantity") > 0),
-        ),
-        count1(
-            "discount_range_check",
-            quality.check_violations(
-                li,
-                (F.col("l_discount") >= 0) & (F.col("l_discount") <= 1),
+            "orders_pk_dups": quality.duplicate_keys(o, ["o_orderkey"]),
+            "quantity_check": quality.check_violations(
+                li, F.col("l_quantity") > 0
             ),
-        ),
-    ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionByName(c)
-    return out.orderBy("check_name")
+            "discount_range_check": quality.check_violations(
+                li, (F.col("l_discount") >= 0) & (F.col("l_discount") <= 1)
+            ),
+        }
+    ).orderBy("check_name")
 
 
 @q(

@@ -49,12 +49,14 @@ def write_battlelog_json(path, records):
             f.write(json.dumps({"player_tag": tag, "battles": battles}) + "\n")
 
 
-def player_row(pid, name="p", clan_id=None):
-    return (pid, name, 10, 1500, 1600, 100, 80, 200, 5, clan_id, pid.replace("#", "%23"))
+def player_row(pid, name="p", clan_id=None, road_trophies=1500):
+    return (pid, name, 10, road_trophies, 1600, 100, 80, 200, 5, clan_id,
+            pid.replace("#", "%23"))
 
 
-def clan_row(cid, name="c"):
-    return (cid, name, "open", "123", 50000, 2000, "Earth", 1000, 30, cid.replace("#", "%23"))
+def clan_row(cid, name="c", members=30):
+    return (cid, name, "open", "123", 50000, 2000, "Earth", 1000, members,
+            cid.replace("#", "%23"))
 
 
 def card_row(cid, name="card", elixir=3):

@@ -7,7 +7,9 @@ import os
 
 import pytest
 
-from cr_data_pipeline_project_spark import pipeline
+from cr_data_pipeline_project_spark import pipeline, schemas
+
+from helpers import clan_row
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -29,14 +31,17 @@ def test_jdbc_mirror_roundtrip(spark, tmp_path):
     )
     lake = pipeline.Lake(spark, os.path.join(str(tmp_path), "lake"))
     df = spark.createDataFrame(
-        [("#A", "alice", 10), ("#B", "bob", 20)], "id string, name string, n int"
+        [clan_row("#A", "alice", members=10), clan_row("#B", "bob", members=20)],
+        schemas.CLANS,
     )
-    lake.overwrite("clans", df)  # any known table dir works for the test
+    lake.overwrite("clans", df)
 
     url = f"jdbc:derby:{tmp_path}/derbydb;create=true"
     lake.to_jdbc("clans", url, table="clans_mirror", driver=DERBY_DRIVER)
     back = lake.from_jdbc(url, "clans_mirror", driver=DERBY_DRIVER)
-    assert sorted((r["id"], r["name"], r["n"]) for r in back.collect()) == [
+    assert sorted(
+        (r["clan_id"], r["clan_name"], r["members"]) for r in back.collect()
+    ) == [
         ("#A", "alice", 10),
         ("#B", "bob", 20),
     ]

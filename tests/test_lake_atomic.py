@@ -7,7 +7,9 @@ import os
 
 import pytest
 
-from cr_data_pipeline_project_spark import pipeline
+from cr_data_pipeline_project_spark import pipeline, schemas
+
+from helpers import player_row
 
 
 @pytest.fixture()
@@ -16,13 +18,16 @@ def lake(spark, tmp_path):
 
 
 def _dim(spark, rows):
-    return spark.createDataFrame(rows, "player_id string, trophies int")
+    """``players`` rows from (player_id, road_trophies) pairs."""
+    return spark.createDataFrame(
+        [player_row(pid, road_trophies=t) for pid, t in rows], schemas.PLAYERS
+    )
 
 
 def test_overwrite_roundtrip_and_gc(spark, lake):
     lake.overwrite("players", _dim(spark, [("#A", 1)]))
     lake.overwrite("players", _dim(spark, [("#A", 2), ("#B", 3)]))
-    got = {r["player_id"]: r["trophies"] for r in lake.read("players").collect()}
+    got = {r["player_id"]: r["road_trophies"] for r in lake.read("players").collect()}
     assert got == {"#A": 2, "#B": 3}
     # superseded snapshot GC'd, only v2 + pointer remain
     entries = sorted(os.listdir(lake.path("players")))
@@ -41,12 +46,12 @@ def test_crash_before_commit_leaves_old_snapshot(spark, lake, monkeypatch):
     monkeypatch.undo()
 
     # old snapshot fully readable; orphaned stage is invisible
-    got = {r["player_id"]: r["trophies"] for r in lake.read("players").collect()}
+    got = {r["player_id"]: r["road_trophies"] for r in lake.read("players").collect()}
     assert got == {"#A": 1}
 
     # a re-run restages over the orphan and commits cleanly
     lake.overwrite("players", _dim(spark, [("#A", 7)]))
-    got = {r["player_id"]: r["trophies"] for r in lake.read("players").collect()}
+    got = {r["player_id"]: r["road_trophies"] for r in lake.read("players").collect()}
     assert got == {"#A": 7}
 
 
@@ -74,7 +79,7 @@ def test_crash_during_stage_write_leaves_old_snapshot(spark, lake):
 
     with pytest.raises(OSError, match="mid-write"):
         lake.overwrite("players", Exploding(None))
-    got = {r["player_id"]: r["trophies"] for r in lake.read("players").collect()}
+    got = {r["player_id"]: r["road_trophies"] for r in lake.read("players").collect()}
     assert got == {"#A": 1}
 
 
@@ -107,7 +112,10 @@ def test_time_travel_read_with_retention(spark, tmp_path):
     lk.overwrite("players", _dim(spark, [("#A", 4)]))
     assert lk.versions("players") == [2, 3]
     assert lk.read("players").count() == 1
-    old = {r["player_id"]: r["trophies"] for r in lk.read("players", version=2).collect()}
+    old = {
+        r["player_id"]: r["road_trophies"]
+        for r in lk.read("players", version=2).collect()
+    }
     assert old == {"#A": 2, "#B": 3}
     with pytest.raises(ValueError):
         lk.read("players", version=1)  # GC'd past the retention window

@@ -6,15 +6,25 @@ enforces via DB constraints + log invariants (SURVEY.md §5).
 The five-run lifecycle (first load → incremental re-run → dim rename
 → new player → purge) executes ONCE in a module-scoped fixture; tests
 assert on the recorded stats and final lake state.  One standalone
-run covers the cards null-coercion path.
+run covers the cards null-coercion path and the run log.  Further
+tests pin the mechanics: declared-schema reads start no job and widen
+``int`` ids, skip-empty appends add no file, the files hold
+``match_view_id`` as INT64, and the one-action audit labels each
+violation kind.
 """
 
+import datetime as dt
+import glob
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from cr_data_pipeline_project_spark import pipeline, schemas
+from cr_data_pipeline_project_spark import analytics, pipeline, schemas
+from cr_data_pipeline_project_spark.operators import quality
 from cr_data_pipeline_project_spark.sources.battlelog import read_battlelog_json
 
 from helpers import battle, card_row, clan_row, player_row, write_battlelog_json
@@ -44,6 +54,12 @@ def _inputs(spark, base, *, tag="#ME", with_second_battle=False, player_name="al
 CAL = dict(calendar_from="2025-01-01", calendar_months=3)
 
 
+def _parquet_files(lake, name):
+    return sorted(
+        glob.glob(os.path.join(lake.path(name), "**", "*.parquet"), recursive=True)
+    )
+
+
 @pytest.fixture(scope="module")
 def lifecycle(spark, tmp_path_factory):
     """Five chained run_etl calls on one lake; returns (lake, stats list,
@@ -57,6 +73,7 @@ def lifecycle(spark, tmp_path_factory):
     stats.append(pipeline.run_etl(spark, lake, **_inputs(spark, base), **CAL))
     snapshots["after_first"] = {
         "matches": lake.read("matches").collect(),
+        "files": {n: _parquet_files(lake, n) for n in ("seasons", "season_rankings")},
     }
     # run 2: same battle again + one new battle → incremental
     stats.append(
@@ -67,6 +84,7 @@ def lifecycle(spark, tmp_path_factory):
     snapshots["audit_after_two"] = pipeline.audit(spark, lake)
     snapshots["after_second"] = {
         "matches": lake.read("matches").collect(),
+        "files": {n: _parquet_files(lake, n) for n in ("seasons", "season_rankings")},
     }
     # run 3: dim rename → MERGE update, no new facts
     stats.append(
@@ -133,12 +151,172 @@ def test_audit_clean_after_runs(lifecycle):
     assert counts == {k: 0 for k in counts}
 
 
+# run_etl's return value for the five lifecycle runs, key for key
+STATS = [
+    {"seasons_inserted": 3, "clans_total": 1, "players_total": 1,
+     "rankings_inserted": 1, "cards_total": 8, "matches_inserted": 1,
+     "match_cards_inserted": 8},
+    {"seasons_inserted": 0, "clans_total": 1, "players_total": 1,
+     "rankings_inserted": 0, "cards_total": 8, "matches_inserted": 1,
+     "match_cards_inserted": 8},
+    {"seasons_inserted": 0, "clans_total": 1, "players_total": 1,
+     "rankings_inserted": 0, "cards_total": 8, "matches_inserted": 0,
+     "match_cards_inserted": 0},
+    {"seasons_inserted": 0, "clans_total": 1, "players_total": 2,
+     "rankings_inserted": 0, "cards_total": 8, "matches_inserted": 1,
+     "match_cards_inserted": 8},
+    {"seasons_inserted": 0, "clans_total": 1, "players_total": 2,
+     "rankings_inserted": 0, "players_purged": 1, "cards_total": 8,
+     "matches_inserted": 0, "match_cards_inserted": 0},
+]
+
+
+def test_stats_dicts_are_exact(lifecycle):
+    _, stats, _ = lifecycle
+    assert stats == STATS
+
+
+def test_present_seasons_and_rankings_add_no_file(lifecycle):
+    """Run 2's seasons and rankings are already in the lake: the
+    skip-empty rule writes nothing (an empty flat append would still
+    add a schema-only file)."""
+    _, stats, snapshots = lifecycle
+    assert stats[1]["seasons_inserted"] == stats[1]["rankings_inserted"] == 0
+    assert snapshots["after_second"]["files"] == snapshots["after_first"]["files"]
+
+
+def test_written_match_view_id_is_int64(lifecycle):
+    lake, _, _ = lifecycle
+    for name in ("matches", "match_cards"):
+        files = _parquet_files(lake, name)
+        assert files
+        for f in files:
+            assert pq.read_schema(f).field("match_view_id").type == pa.int64(), f
+
+
+def test_read_starts_no_job(spark, lifecycle):
+    lake, _, _ = lifecycle
+    sc = spark.sparkContext
+    sc.setJobGroup("lake-read-probe", "Lake.read")
+    try:
+        frames = [lake.read(n) for n in pipeline.FACTS + pipeline.DIMS]
+        frames.append(lake.read("players", version=lake.current_version("players")))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("lake-read-probe")) == []
+    # declared columns, partition column last
+    want = [f.name for f in schemas.MATCHES if f.name != "season_id"]
+    assert frames[0].columns == want + ["season_id"]
+
+
 def test_cards_null_elixir_coerced(spark, tmp_path):
     lake = pipeline.Lake(spark, os.path.join(str(tmp_path), "lake"))
     ins = _inputs(spark, tmp_path)
     ins["cards"] = spark.createDataFrame(
         [("99", "mystery", "epic", None, True)], schemas.CARDS
     )
-    pipeline.run_etl(spark, lake, **ins, **CAL)
+    log_dir = os.path.join(str(tmp_path), "logs")
+    pipeline.run_etl(spark, lake, **ins, **CAL, log_dir=log_dir)
     row = lake.read("cards").where(F.col("card_id") == "99").collect()[0]
     assert row["elixir_cost"] == 0  # db_ops.py:129 null→0
+    (log,) = glob.glob(os.path.join(log_dir, "etl_log_*.log"))
+    stages = [ln.split("run_etl stage=")[1] for ln in open(log) if "stage=" in ln]
+    assert [s.split()[0] for s in stages] == [
+        "seasons", "clans", "players", "season_rankings", "cards", "matches",
+        "match_cards",
+    ]
+    assert "rows=1" in stages[4] and "wall_s=" in stages[4]  # the one card
+
+
+# ---- a lake whose history holds match_view_id as int ------------------
+
+
+def _match(key, player, season, *, view_id, crowns=2):
+    """A ``schemas.MATCHES`` row."""
+    t = dt.datetime(2025, 1, 13, 10, 15)
+    return (view_id, key, t, crowns > 1, 7, player, "#OPP", season,
+            50, 1800, 25, crowns, 1, 5000, 1000, 2000, None)
+
+
+def _as_int(schema):
+    return T.StructType([
+        T.StructField(f.name, T.IntegerType(), f.nullable)
+        if f.name == "match_view_id" else f
+        for f in schema.fields
+    ])
+
+
+def test_int_history_plus_bigint_appends_read_back(spark, tmp_path):
+    """History written with an ``int`` match_view_id (as run_etl wrote
+    it before the cast) next to ``bigint`` appends: the declared-schema
+    read widens the old files instead of failing on the mix."""
+    lake = pipeline.Lake(spark, os.path.join(str(tmp_path), "lake"))
+    lake.append("cards", spark.createDataFrame(
+        [card_row(1, name="hog")], schemas.CARDS))
+    history = [(1, "K1", "#A", "2024-12"), (2, "K2", "#A", "2024-12")]
+    new = [(2**31 + 5, "K3", "#A", "2025-01")]
+    for rows, schema in ((history, _as_int(schemas.MATCHES)), (new, schemas.MATCHES)):
+        lake.append("matches", spark.createDataFrame(
+            [_match(k, p, s, view_id=v) for v, k, p, s in rows], schema))
+    for rows, schema in (
+        (history, _as_int(schemas.MATCH_CARDS)), (new, schemas.MATCH_CARDS)
+    ):
+        lake.append("match_cards", spark.createDataFrame(
+            [(v, k, p, "1") for v, k, p, _ in rows], schema))
+
+    got = sorted(r["match_view_id"] for r in lake.read("matches").collect())
+    assert got == [1, 2, 2**31 + 5]
+    assert lake.read("match_cards").schema["match_view_id"].dataType == T.LongType()
+    usage = {
+        season: [(r["card_name"], float(r["usage_rate"]))
+                 for r in analytics.usp_card_usage_wins(lake, "hog", season).collect()]
+        for season in ("2024-12", "2025-01")
+    }
+    assert usage == {"2024-12": [("hog", 100.0)], "2025-01": [("hog", 100.0)]}
+
+
+# ---- the audit counts each violation kind under its own label --------
+
+
+def test_audit_counts_one_violation_of_each_kind(spark, tmp_path):
+    lake = pipeline.Lake(spark, os.path.join(str(tmp_path), "lake"))
+    jan, feb = dt.datetime(2025, 1, 1), dt.datetime(2025, 2, 1)
+    lake.append("seasons", spark.createDataFrame(
+        [("2025-01", jan, feb), ("2025-01", jan, feb),  # duplicate id
+         ("2025-02", feb, jan)],  # start after end
+        schemas.SEASONS))
+    lake.append("players", spark.createDataFrame(
+        [player_row("#A")], schemas.PLAYERS))
+    lake.append("matches", spark.createDataFrame(
+        [_match("K1", "#A", "2025-01", view_id=1),
+         _match("K1", "#A", "2025-01", view_id=2),  # duplicate key
+         _match("K2", "#NOBODY", "2025-01", view_id=3),  # orphan player
+         _match("K3", "#A", "2025-01", view_id=4, crowns=5)],  # crowns > 3
+        schemas.MATCHES))
+    lake.append("match_cards", spark.createDataFrame(
+        [(1, "K1", "#A", str(c)) for c in range(8)]
+        + [(4, "K3", "#A", str(c)) for c in range(7)],  # 7-card deck
+        schemas.MATCH_CARDS))
+    assert pipeline.audit(spark, lake) == {
+        "dup_match_keys": 1,
+        "dup_season_ids": 1,
+        "orphan_match_players": 1,
+        "bad_crowns": 1,
+        "bad_decks": 1,
+        "season_date_violations": 1,
+    }
+
+
+def test_violation_counts_keeps_each_label_with_its_count(spark):
+    """Distinct counts per check, so a label swapped inside the one
+    action shows up (the audit lake above has 1 everywhere)."""
+    frames = {
+        name: spark.range(n).withColumnRenamed("id", "k")
+        for name, n in (("none", 0), ("one", 1), ("two", 2), ("three", 3))
+    }
+    rows = quality.violation_counts(frames).collect()
+    assert [(r["check_name"], r["n_violations"]) for r in rows] == [
+        ("none", 0), ("one", 1), ("two", 2), ("three", 3)
+    ]
+
