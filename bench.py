@@ -42,6 +42,25 @@ def run_query(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _compile_count(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _timed_run(spark, build) -> tuple[float, int]:
+    """(wall seconds, classes compiled) of one builder call + sink.
+    Builder invocation is INSIDE the timed window: iterative operators
+    (q66 connected components) run actions while building, and that
+    compute is part of the query. The compile counter is read outside
+    it."""
+    c0 = _compile_count(spark)
+    t0 = time.time()
+    run_query(build(spark, SF_DIR))
+    wall = time.time() - t0
+    return wall, _compile_count(spark) - c0
+
+
 def _calibration_time(spark) -> float:
     """Fixed host-speed probe (round-9 verdict: totals swung
     209.8→251.4 s with zero code change, making every per-query WARN
@@ -98,17 +117,12 @@ def main() -> None:
     # codegen/file-listing noise nor driver-host contention spikes
     # (round-3 verdict: 2 runs let one noisy host window manufacture
     # 3× outliers on trivial plans).
+    # codegen_compiles: classes compiled during the kept run — 0 once
+    # the query's classes sit in the codegen cache (session.py).
     times: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in sorted(qs):
-        best = float("inf")
-        for _ in range(3):
-            # Builder invocation is INSIDE the timed window: iterative
-            # operators (q66 connected components) run actions while
-            # building, and that compute is part of the query.
-            t0 = time.time()
-            df = qs[name](spark, SF_DIR)
-            run_query(df)
-            best = min(best, time.time() - t0)
+        best, compiles[name] = min(_timed_run(spark, qs[name]) for _ in range(3))
         times[name] = round(best, 3)
 
     # Re-measure suspected regressions before warning: min-of-3 still
@@ -121,17 +135,16 @@ def main() -> None:
     prev, prev_calib, src = _load_prev()
     drift = _drift_factor(calib, prev_calib)
     for name in _regressed(times, prev, drift):
-        best = times[name]
-        for _ in range(3):
-            t0 = time.time()
-            run_query(qs[name](spark, SF_DIR))
-            best = min(best, time.time() - t0)
+        best, compiles[name] = min(
+            [(times[name], compiles[name])]
+            + [_timed_run(spark, qs[name]) for _ in range(3)]
+        )
         times[name] = round(best, 3)
 
     total = round(sum(times.values()), 3)
     _warn_regressions(times, prev, src, calib, prev_calib)
-    _append_history(times, total, calib)
-    _write_detail(times, total, calib)
+    _append_history(times, total, calib, compiles)
+    _write_detail(times, total, calib, compiles)
     print(json.dumps(_compact_report(times, total, calib)))
     spark.stop()
 
@@ -176,16 +189,20 @@ def _compact_report(times: dict[str, float], total: float, calib: float) -> dict
     return report
 
 
-def _write_detail(times: dict[str, float], total: float, calib: float) -> None:
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "docs",
-        "metrics",
-        "bench_full_latest.json",
-    )
+_DETAIL = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)),
+    "docs",
+    "metrics",
+    "bench_full_latest.json",
+)
+
+
+def _write_detail(
+    times: dict[str, float], total: float, calib: float, compiles: dict[str, int]
+) -> None:
     try:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
+        os.makedirs(os.path.dirname(_DETAIL), exist_ok=True)
+        with open(_DETAIL, "w") as f:
             json.dump(
                 {
                     "metric": "total_query_wall_seconds",
@@ -193,6 +210,7 @@ def _write_detail(times: dict[str, float], total: float, calib: float) -> None:
                     "unit": "sec",
                     "calib_sec": calib,
                     "queries": times,
+                    "codegen_compiles": compiles,
                     "sf": _sf_from_dir(SF_DIR),
                     # which core count produced this detail file —
                     # round-11 verdict: the 8-core scaling run
@@ -212,7 +230,9 @@ _HISTORY = os.path.join(
 )
 
 
-def _append_history(times: dict[str, float], total: float, calib: float) -> None:
+def _append_history(
+    times: dict[str, float], total: float, calib: float, compiles: dict[str, int]
+) -> None:
     """Append this run to the local history file (the driver's
     BENCH_r*.json wrapper truncates per-query numbers, so the warner
     keeps its own full record)."""
@@ -234,6 +254,7 @@ def _append_history(times: dict[str, float], total: float, calib: float) -> None
                         "calib": calib,
                         "calib_v": 2,
                         "queries": times,
+                        "codegen_compiles": compiles,
                     }
                 )
                 + "\n"
@@ -279,9 +300,9 @@ def _load_prev() -> tuple[dict[str, float], float | None, str | None]:
                 if (
                     rec.get("sf") == _sf_from_dir(SF_DIR)
                     and rec.get("queries")
-                    # a record from a different core count is not a
-                    # regression baseline (pre-cpus records pass)
-                    and rec.get("cpus", cpus) == cpus
+                    # a record from a different core count — or one
+                    # that never said — is not a regression baseline
+                    and rec.get("cpus") == cpus
                 ):
                     prev, src = rec["queries"], os.path.basename(_HISTORY)
                     prev_calib = (

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 
 def cooccurrence_edges(
     df: DataFrame, group_col: str, item_col: str
@@ -141,8 +143,8 @@ def connected_components(
         members = {row[0] for row in pairs} | {row[1] for row in pairs}
         out = [(m, find(m)) for m in members]
         spark = nodes.sparkSession
-        labels = spark.createDataFrame(
-            out, f"node {dict(nodes.dtypes)[node_col]}, lbl {dict(nodes.dtypes)[node_col]}"
+        labels = local_frame(
+            spark, out, f"node {dict(nodes.dtypes)[node_col]}, lbl {dict(nodes.dtypes)[node_col]}"
         )
         return (
             nodes.select(F.col(node_col).alias("node"))
@@ -339,7 +341,8 @@ def textrank_scores(
             np.add.at(acc, dst_i, (r[src_i] * p) // TEXTRANK_PROB_SCALE)
             r = TEXTRANK_BASE + (TEXTRANK_DAMP_NUM * acc) // 100
         spark = weighted_edges.sparkSession
-        ranks = spark.createDataFrame(
+        ranks = local_frame(
+            spark,
             [(t, int(r[i])) for i, t in enumerate(toks)],
             "token string, r bigint",
         )
@@ -456,9 +459,7 @@ def triangle_count(
     # action (no cross-action exchange reuse).
     und = _canonical_edges(edges, src, dst, assume_canonical)
     n = _triangle_sum(und)
-    return edges.sparkSession.createDataFrame(
-        [(int(n),)], "n_triangles bigint"
-    )
+    return local_frame(edges.sparkSession, [(int(n),)], "n_triangles bigint")
 
 
 def _canonical_edges(
@@ -617,7 +618,8 @@ def clustering_stats(
         deg.unpersist()
         und.unpersist()
     cc = (3.0 * n_tri / n_wedges) if n_wedges else None
-    return edges.sparkSession.createDataFrame(
+    return local_frame(
+        edges.sparkSession,
         [(int(n_edges), int(n_wedges), int(n_tri), cc)],
         "n_edges bigint, n_wedges bigint, n_triangles bigint, "
         "global_cc double",

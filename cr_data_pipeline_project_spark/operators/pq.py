@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
 from .similarity import as_double_vec
 
 
@@ -352,7 +353,8 @@ def pq_topk(
     if not qrows:
         # same schema as the non-empty path — a hardcoded long would
         # diverge for non-long ids and break unions/appends
-        return codes.sparkSession.createDataFrame(
+        return local_frame(
+            codes.sparkSession,
             [],
             f"query_id {qid_type}, neighbor_id {id_type}, "
             "rank int, adist double",
@@ -465,7 +467,8 @@ def ivfpq_topk(
     ).collect()  # bounded query set by contract
     if not qrows:
         # same schema as the non-empty path (see pq_topk)
-        return codes_with_cell.sparkSession.createDataFrame(
+        return local_frame(
+            codes_with_cell.sparkSession,
             [],
             f"query_id {qid_type}, neighbor_id {id_type}, "
             "rank int, adist double",

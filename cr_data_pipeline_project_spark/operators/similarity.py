@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 # Per-block float64 budget for the blocked per-cluster GEMM verify
 # (_verify_clusters_gemm): 8M doubles = 64 MB per worker, independent
 # of cluster size.
@@ -948,7 +950,7 @@ def nearest_centroids(
     if not rows:
         # empty centroid table (empty-corpus fit): no assignments —
         # the shape the expr fold's broadcast join also produced
-        return vecs.sparkSession.createDataFrame([], out_schema)
+        return local_frame(vecs.sparkSession, [], out_schema)
 
     C = np.array([list(r["cv"]) for r in rows], dtype=np.float64)  # (k, dim)
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from . import schemas
 from .functions.calendar import season_calendar
 from .operators import mutations, quality
+from .session import local_frame
 from .sources.battlelog import flatten_match_cards, flatten_matches
 
 FACTS = ("matches", "match_cards")
@@ -127,7 +128,7 @@ class Lake:
         elif self.exists(name):
             path = self.data_dir(name)
         else:
-            return self.spark.createDataFrame([], schemas.DOMAIN[name])
+            return local_frame(self.spark, [], schemas.DOMAIN[name])
         return self.spark.read.schema(schemas.DOMAIN[name]).parquet(path)
 
     def versions(self, name: str) -> list[int]:
@@ -365,8 +366,8 @@ def run_etl(
     #     etl_pipeline_script.py:109-112)
     if failed_players:
         with _stage(spark, walls, "purge", "players_purged"):
-            purge = spark.createDataFrame(
-                [(p,) for p in failed_players], "player_id string"
+            purge = local_frame(
+                spark, [(p,) for p in failed_players], "player_id string"
             )
             current = {
                 n: lake.read(n)

@@ -32,6 +32,7 @@ from ..operators import (
     similarity,
     textstats,
 )
+from ..session import local_frame
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
@@ -3663,7 +3664,7 @@ def q140_bpe_vocab_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 @q("q141_opq_pq_reconstruction")
@@ -4476,7 +4477,7 @@ def q179_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_pairs").alias("w"),
     )
     rows = [(r["token"], int(r["r"])) for r in textrank_topk(ap, k=50)]
-    return spark.createDataFrame(rows, "token string, rank_score bigint")
+    return local_frame(spark, rows, "token string, rank_score bigint")
 
 
 ORACLES["q179_textrank_keywords"] = _textrank_oracle_sql()
@@ -11302,8 +11303,8 @@ def q268_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("di")
     ).agg(fastdec.dec_sum(F.col("value")).alias("y"))
     mx = daily.agg(F.max("di").alias("mdi"))
-    models = spark.createDataFrame(
-        [("naive_1d", 1), ("seasonal_7d", 7)], "model string, h int"
+    models = local_frame(
+        spark, [("naive_1d", 1), ("seasonal_7d", 7)], "model string, h int"
     )
     a = daily.alias("a")
     f = daily.alias("f")

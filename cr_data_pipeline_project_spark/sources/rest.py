@@ -5,8 +5,8 @@ The reference loops ``requests.get`` per entity with a 0.1 s sleep
 paths:
 
 - :func:`fetch_small` — driver-side fetch for small id sets (the
-  reference's regime: 10²-10³ entities) → ``createDataFrame`` with an
-  explicit schema. Simple, debuggable, rate-limit friendly.
+  reference's regime: 10²-10³ entities) → ``session.local_frame``
+  with an explicit schema. Simple, debuggable, rate-limit friendly.
 - :func:`fetch_distributed` — ``mapInPandas`` over an id DataFrame
   for large id sets: each partition fetches its slice with its own
   rate limiter, so aggregate throughput = partitions × per-partition
@@ -26,6 +26,8 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..session import local_frame
 
 Fetcher = Callable[[str], dict | None]
 
@@ -66,7 +68,7 @@ def fetch_small(
             failed.append(i)
         else:
             rows.append(doc)
-    return spark.createDataFrame(rows, schema), failed
+    return local_frame(spark, rows, schema), failed
 
 
 def fetch_distributed(

@@ -79,3 +79,9 @@ def few_partitions(spark, n=2):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def compile_count(spark):
+    """Classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -1,5 +1,6 @@
 """Unit tests for bench.py's drift-normalized regression warner
-(pure functions — no Spark session).
+(pure functions — no Spark session), its record fields and its
+baseline choice; one test times a trivial query on the session.
 
 Round-9 verdict: bench totals swung 209.8→251.4 s with zero code
 change, so raw per-query ratios manufacture WARNs. The calibration
@@ -147,3 +148,61 @@ def test_contamination_note_fires_on_window_pattern():
     # broad real regression: unflagged rest is ALSO 1.3x → no note
     times_broad = {f"q{i}": (3.0 if i < 10 else 1.3) for i in range(40)}
     assert bench._contamination_note(times_broad, prev, flagged) is None
+
+
+def test_records_carry_codegen_compiles_and_the_line_is_unchanged(
+    tmp_path, monkeypatch
+):
+    """``codegen_compiles`` (classes compiled during each query's kept
+    run) goes to the history record and the detail file; the printed
+    line keeps its exact bytes."""
+    import json
+
+    monkeypatch.setattr(bench, "_HISTORY", str(tmp_path / "history.jsonl"))
+    monkeypatch.setattr(bench, "_DETAIL", str(tmp_path / "metrics" / "detail.json"))
+    monkeypatch.setattr(bench, "SF_DIR", "/data/sf0.1")
+    times, compiles = {"qA": 1.5, "qB": 0.25}, {"qA": 0, "qB": 3}
+    bench._append_history(times, 1.75, 0.25, compiles)
+    bench._write_detail(times, 1.75, 0.25, compiles)
+    with open(bench._HISTORY) as f:
+        (hist,) = [json.loads(line) for line in f]
+    with open(bench._DETAIL) as f:
+        detail = json.load(f)
+    assert hist["codegen_compiles"] == compiles
+    assert detail["codegen_compiles"] == compiles
+    assert hist["queries"] == detail["queries"] == times
+    assert json.dumps(bench._compact_report(times, 1.75, 0.25)) == (
+        '{"metric": "total_query_wall_seconds", "value": 1.75, "unit": "sec", '
+        '"calib_sec": 0.25, "calib_v": 2, "queries": {"qA": 1.5, "qB": 0.25}, '
+        '"omitted": {"n": 0, "total_sec": 0}, '
+        '"detail": "docs/metrics/bench_full_latest.json", "sf": 0.1}'
+    )
+
+
+def test_timed_run_counts_compiles(spark):
+    """A repeated run reuses its generated classes: 0 compiles."""
+    def build(s, _):
+        return s.range(7).selectExpr("id * 7 + 3 AS x")
+
+    wall, _ = bench._timed_run(spark, build)
+    assert wall > 0
+    assert bench._timed_run(spark, build)[1] == 0
+
+
+def test_baseline_requires_matching_cpus(tmp_path, monkeypatch):
+    """A history record without a core count is no baseline for any
+    core count; a record of another core count is none either."""
+    import json
+
+    hist = tmp_path / "history.jsonl"
+    monkeypatch.setattr(bench, "_HISTORY", str(hist))
+    monkeypatch.setattr(bench, "SF_DIR", "/data/sf0.5")  # no BENCH_r*.json
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    legacy = {"sf": 0.5, "calib": 0.2, "calib_v": 2, "queries": {"q": 1.0}}
+    hist.write_text(json.dumps(legacy) + "\n")
+    assert bench._load_prev() == ({}, None, None)
+
+    full = dict(legacy, cpus="32", queries={"q": 2.0})
+    eight = dict(legacy, cpus="8", queries={"q": 3.0})
+    hist.write_text("".join(json.dumps(r) + "\n" for r in (full, legacy, eight)))
+    assert bench._load_prev() == ({"q": 2.0}, 0.2, "history.jsonl")

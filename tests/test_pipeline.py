@@ -6,7 +6,8 @@ enforces via DB constraints + log invariants (SURVEY.md §5).
 The five-run lifecycle (first load → incremental re-run → dim rename
 → new player → purge) executes ONCE in a module-scoped fixture; tests
 assert on the recorded stats and final lake state.  One standalone
-run covers the cards null-coercion path and the run log.  Further
+run covers the cards null-coercion path and the run log, and a
+repeated run on a restored lake compiles no generated class.  Further
 tests pin the mechanics: declared-schema reads start no job and widen
 ``int`` ids, skip-empty appends add no file, the files hold
 ``match_view_id`` as INT64, and the one-action audit labels each
@@ -16,6 +17,7 @@ violation kind.
 import datetime as dt
 import glob
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -27,7 +29,14 @@ from cr_data_pipeline_project_spark import analytics, pipeline, schemas
 from cr_data_pipeline_project_spark.operators import quality
 from cr_data_pipeline_project_spark.sources.battlelog import read_battlelog_json
 
-from helpers import battle, card_row, clan_row, player_row, write_battlelog_json
+from helpers import (
+    battle,
+    card_row,
+    clan_row,
+    compile_count,
+    player_row,
+    write_battlelog_json,
+)
 
 
 def _inputs(spark, base, *, tag="#ME", with_second_battle=False, player_name="alice"):
@@ -208,6 +217,30 @@ def test_read_starts_no_job(spark, lifecycle):
     # declared columns, partition column last
     want = [f.name for f in schemas.MATCHES if f.name != "season_id"]
     assert frames[0].columns == want + ["season_id"]
+
+
+def test_warm_run_etl_compiles_nothing(spark, tmp_path):
+    """A repeated ``run_etl`` (purge included) + ``audit`` on a
+    restored lake reuses every generated class: the codegen cache
+    holds the cycle's classes and their names carry no stage id
+    (``session.py``), so the second cycle compiles none."""
+    seed = os.path.join(str(tmp_path), "seed")
+    root = os.path.join(str(tmp_path), "lake")
+    pipeline.run_etl(spark, pipeline.Lake(spark, seed), **_inputs(spark, tmp_path), **CAL)
+    lake = pipeline.Lake(spark, root)
+    ins = _inputs(spark, tmp_path, with_second_battle=True)
+
+    def cycle():
+        shutil.rmtree(root, ignore_errors=True)
+        shutil.copytree(seed, root)
+        before = compile_count(spark)
+        stats = pipeline.run_etl(spark, lake, failed_players=["#GONE"], **ins, **CAL)
+        counts = pipeline.audit(spark, lake)
+        return compile_count(spark) - before, stats, counts
+
+    _, stats, counts = cycle()
+    assert stats["players_purged"] == 1 and not any(counts.values())
+    assert cycle() == (0, stats, counts)
 
 
 def test_cards_null_elixir_coerced(spark, tmp_path):
