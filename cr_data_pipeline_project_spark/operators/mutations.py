@@ -21,7 +21,9 @@ Scale notes (100 TB)
   column-pruned scan.
 - ``cascade_delete``: child→parent write ordering preserved from the
   reference (FK safety is a consumer contract even without enforced
-  FKs).
+  FKs). ``pipeline.run_etl`` stages the four purged snapshots at once
+  and keeps the order at the commits (pointer swaps), so a reader
+  never sees a child row whose parent is already gone.
 - ``add_surrogate_keys``: a single global ``row_number`` window
   serializes one stage; acceptable for per-batch deltas (10³-10⁶
   rows). For backfilling billions of rows use

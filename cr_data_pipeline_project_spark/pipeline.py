@@ -2,12 +2,21 @@
 reference's ``run_etl_script()`` (/root/reference/
 etl_pipeline_script.py:34-155, lifecycle E1 in SURVEY.md §3).
 
-Each stage is a lazy DataFrame DAG ending in a lake write; the
-reference's FK-driven stage ordering survives as *write ordering*
-(comments at etl_pipeline_script.py:37,55,88,137). Extraction is
-injected as plain DataFrames (the REST layer in ``sources.rest``
+Each stage is a lazy DataFrame DAG ending in a lake write. Extraction
+is injected as plain DataFrames (the REST layer in ``sources.rest``
 produces them), so the pipeline itself is pure Spark and fully
 testable offline.
+
+The reference runs its stages one after another because SQL Server
+enforces the foreign keys (comments at etl_pipeline_script.py:37,55,
+88,137). Here that order survives as *commit* order only: the stages
+form a fixed DAG and run on Python threads, each starting once the
+tables it reads are final. Each insert commit waits for its FK
+parents' writes (``schemas.FOREIGN_KEYS``), the purge commits child
+first, and an overwrite stages its snapshot before it waits, so
+independent stages overlap. A failed stage cancels every commit not
+yet allowed; ``run_etl``'s docstring says which may already have
+landed.
 
 Each stage's work runs once. ``Lake.read`` applies the declared
 schema, so a read starts no job. The dim and match_cards row counts
@@ -33,10 +42,14 @@ Scale notes (100 TB lake)
 
 from __future__ import annotations
 
-import contextlib
+import functools
 import os
+import shutil
+import threading
 import time
+from collections.abc import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from . import schemas
@@ -173,7 +186,12 @@ class Lake:
         self.overwrite(name, df)
         return before
 
-    def overwrite(self, name: str, df: DataFrame) -> None:
+    def overwrite(
+        self,
+        name: str,
+        df: DataFrame,
+        before_commit: Callable[[], None] | None = None,
+    ) -> None:
         """Atomic full-table rewrite (upsert sink for dims).
 
         The plan may read the table's CURRENT files — safe, because
@@ -181,7 +199,11 @@ class Lake:
         clobbering its own input, so no localCheckpoint needed and
         existing caches stay valid). Commit = one ``os.replace`` of
         the pointer; a crash before it leaves ``v<N>`` untouched, a
-        re-run after it simply restages ``v<N+1>`` over the orphan."""
+        re-run after it simply restages ``v<N+1>`` over the orphan.
+
+        ``before_commit`` runs between staging and the commit and may
+        block (``run_etl`` waits there for the table's FK parents); if
+        it raises, the staged snapshot is removed and nothing commits."""
         root = self.path(name)
         os.makedirs(root, exist_ok=True)
         cur = self.current_version(name)
@@ -192,6 +214,12 @@ class Lake:
         if parts:
             w = w.partitionBy(*parts)
         w.parquet(staged)
+        if before_commit is not None:
+            try:
+                before_commit()
+            except BaseException:
+                shutil.rmtree(staged, ignore_errors=True)
+                raise
         tmp = os.path.join(root, "_VERSION.tmp")
         with open(tmp, "w") as f:
             f.write(str(new_v))
@@ -258,7 +286,6 @@ class Lake:
         commits). The newest ``retain_versions`` committed snapshots
         survive for ``read(version=...)``."""
         import re
-        import shutil
 
         oldest_kept = keep - self.retain_versions + 1
         root = self.path(name)
@@ -272,21 +299,77 @@ class Lake:
                 (shutil.rmtree if os.path.isdir(p) else os.remove)(p)
 
 
-@contextlib.contextmanager
-def _stage(spark: SparkSession, walls: list, name: str, rows_key: str):
-    """Run one ``run_etl`` stage: its jobs carry the description
-    ``run_etl <name>`` (the job group stays the caller's), and
-    ``(name, wall seconds, rows_key)`` is appended to ``walls``;
-    ``rows_key`` names the stats entry holding the stage's row count."""
-    sc = spark.sparkContext
-    prior = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"run_etl {name}")
-    t0 = time.perf_counter()
-    try:
-        yield
-    finally:
-        walls.append((name, time.perf_counter() - t0, rows_key))
-        sc.setLocalProperty("spark.job.description", prior)
+# Each insert commit waits for the writes of its FK parents.
+FK_PARENTS: dict[str, tuple[str, ...]] = {
+    child: tuple(p for c, _, p in schemas.FOREIGN_KEYS if c == child)
+    for child, _, _ in schemas.FOREIGN_KEYS
+}
+# The purge rewrites these child first, in the reference's DELETE order
+# (db_ops.py:53-59); each commit waits for the one before it.
+PURGE_ORDER = ("match_cards", "matches", "season_rankings", "players")
+
+
+class _Cancelled(Exception):
+    """Raised by a wait once another stage of the run has failed."""
+
+
+class _Commits:
+    """The writes one ``run_etl`` has made visible, by key: a stage's
+    name once its write committed (or it chose to write nothing), and
+    ``purge <table>`` once the purge's rewrite of that table committed.
+    Stages wait here for their inputs and, before each commit, for
+    their FK parents. Once a stage fails every wait raises
+    ``_Cancelled``, so no further commit starts."""
+
+    def __init__(self) -> None:
+        self._cv = threading.Condition()
+        self._done: set[str] = set()
+        self.error: BaseException | None = None
+
+    def mark(self, key: str) -> None:
+        with self._cv:
+            self._done.add(key)
+            self._cv.notify_all()
+
+    def fail(self, exc: BaseException) -> None:
+        with self._cv:
+            if self.error is None:
+                self.error = exc
+            self._cv.notify_all()
+
+    def wait(self, *keys: str) -> None:
+        with self._cv:
+            self._cv.wait_for(
+                lambda: self.error is not None or self._done.issuperset(keys)
+            )
+            if self.error is not None:
+                raise _Cancelled
+
+
+def _run_all(
+    spark: SparkSession, commits: _Commits, targets: list[Callable[[], None]]
+) -> None:
+    """Run each target on its own Python thread, return once all have
+    ended, then re-raise the run's first error. Each thread gets its
+    own copy of the caller's local properties (job group, description)
+    through ``inheritable_thread_target``."""
+
+    def thread(target: Callable[[], None]) -> threading.Thread:
+        def run() -> None:
+            try:
+                target()
+            except BaseException as exc:  # re-raised by the caller below
+                commits.fail(exc)
+
+        return threading.Thread(target=inheritable_thread_target(spark)(run))
+
+    threads = [thread(t) for t in targets]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if commits.error is not None:
+        raise commits.error
 
 
 def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
@@ -314,100 +397,113 @@ def run_etl(
     (the reference's log metrics, S13); pass ``log_dir`` to also emit
     the reference's durable per-run logfile artifact
     (etl_pipeline_script.py:20-29, see :mod:`.runlog`), which adds one
-    ``run_etl stage=<name> wall_s=<s> rows=<n>`` line per stage."""
+    ``run_etl stage=<name> start_s=<s> wall_s=<s> rows=<n>`` line per
+    stage, ``start_s`` counted from the start of the run.
+
+    The stages form a fixed DAG, each on its own Python thread, its
+    jobs in the caller's job group with the description
+    ``run_etl <stage>``. A stage starts once the tables it reads are
+    final: the purge after players and season_rankings; matches after
+    seasons and the purge's matches commit; match_cards after matches
+    and the purge's match_cards commit. Each insert commit waits for
+    its FK parents (``FK_PARENTS``); an overwrite stages its snapshot
+    first and waits only before the pointer swap. The purge stages its
+    four snapshots at once and commits them child first
+    (``PURGE_ORDER``).
+
+    If a stage raises, every wait in the run raises from then on, so
+    no further commit starts; ``run_etl`` re-raises the first error
+    once every stage thread has ended. Commits that were already
+    allowed may have landed: seasons, clans and cards wait for no
+    other stage, and a stage whose inputs and FK parents had committed
+    before the failure may have committed too. A stage still waiting
+    for a failed stage never commits, and its staged snapshot is
+    removed: after a clans failure, players, season_rankings, matches
+    and match_cards keep their prior versions and files."""
     from .session import prepare
 
     prepare(spark)  # UTC rendering of match_key regardless of host tz
-    stats: dict[str, int] = {}
-    walls: list[tuple[str, float, str]] = []
     failed_players = failed_players or []
+    commits = _Commits()
+    rows: dict[str, int] = {}
+    runs: dict[str, tuple[float, float]] = {}  # stage -> (start_s, wall_s)
+    handoff: dict[str, DataFrame] = {}  # the new matches, for match_cards
 
-    # 1. seasons — generate + dedup + insert-if-absent
-    #    (etl_pipeline_script.py:38-53). Counted before the write: an
-    #    empty append to this flat table would still add a file.
-    with _stage(spark, walls, "seasons", "seasons_inserted"):
+    def append(name: str, df: DataFrame) -> None:
+        commits.wait(*FK_PARENTS.get(name, ()))
+        lake.append(name, df)
+
+    def upsert(name: str, batch: DataFrame, key: str) -> int:
+        # MERGE upsert (etl_pipeline_script.py:72-93, db_ops.py:128-149)
+        target = lake.read(name)
+        merged, obs = _counted(
+            mutations.upsert(target, batch.select(*target.columns), [key])
+        )
+        lake.overwrite(
+            name, merged, lambda: commits.wait(*FK_PARENTS.get(name, ()))
+        )
+        return obs.get["rows"]
+
+    def insert_new(name: str, new: DataFrame) -> int:
+        # Counted before the write: an empty append to a flat table
+        # would still add a file.
+        n = new.count()
+        if n:
+            append(name, new)
+        return n
+
+    def seasons() -> int:
+        # generate + dedup + insert-if-absent (etl_pipeline_script.py:38-53)
         cal = season_calendar(
             spark, calendar_from, calendar_months
         ).dropDuplicates(["season_id"])
-        new_seasons = mutations.insert_if_absent(
+        return insert_new("seasons", mutations.insert_if_absent(
             cal, lake.read("seasons").select("season_id"), ["season_id"]
-        )
-        stats["seasons_inserted"] = new_seasons.count()
-        if stats["seasons_inserted"]:
-            lake.append("seasons", new_seasons)
+        ))
 
-    # 2-3. clans, players — MERGE upsert (etl_pipeline_script.py:72-93)
-    for name, batch, key in (
-        ("clans", clans, "clan_id"),
-        ("players", players, "player_id"),
-    ):
-        with _stage(spark, walls, name, f"{name}_total"):
-            target = lake.read(name)
-            merged, obs = _counted(
-                mutations.upsert(target, batch.select(*target.columns), [key])
-            )
-            lake.overwrite(name, merged)
-            stats[f"{name}_total"] = obs.get["rows"]
-
-    # 4. season_rankings — insert-if-absent by season
-    #    (etl_pipeline_script.py:96-107); counted before the write, as
-    #    seasons are.
-    with _stage(spark, walls, "season_rankings", "rankings_inserted"):
-        new_rank = mutations.insert_if_absent(
+    def season_rankings() -> int:
+        # insert-if-absent by season (etl_pipeline_script.py:96-107)
+        return insert_new("season_rankings", mutations.insert_if_absent(
             rankings,
             lake.read("season_rankings").select("season_id").distinct(),
             ["season_id"],
-        )
-        stats["rankings_inserted"] = new_rank.count()
-        if stats["rankings_inserted"]:
-            lake.append("season_rankings", new_rank)
+        ))
 
-    # 4b. purge failed players child-first (db_ops.py:53-59;
-    #     etl_pipeline_script.py:109-112)
-    if failed_players:
-        with _stage(spark, walls, "purge", "players_purged"):
-            purge = local_frame(
-                spark, [(p,) for p in failed_players], "player_id string"
-            )
-            current = {
-                n: lake.read(n)
-                for n in ("match_cards", "matches", "season_rankings", "players")
-            }
-            purged = mutations.cascade_delete(current, "player_id", purge)
-            for name in ("match_cards", "matches", "season_rankings", "players"):
-                if lake.exists(name):
-                    lake.overwrite(name, purged[name])
-            stats["players_purged"] = len(failed_players)
-
-    # 5. cards — MERGE upsert with null→0 coercion (db_ops.py:128-149)
-    with _stage(spark, walls, "cards", "cards_total"):
-        cards_clean = cards.withColumn(
-            "elixir_cost", F.coalesce(F.col("elixir_cost"), F.lit(0))
+    def purge() -> int:
+        # failed players, child first (db_ops.py:53-59;
+        # etl_pipeline_script.py:109-112)
+        keys = local_frame(
+            spark, [(p,) for p in failed_players], "player_id string"
         )
-        target = lake.read("cards")
-        merged_cards, obs = _counted(
-            mutations.upsert(
-                target, cards_clean.select(*target.columns), ["card_id"]
-            )
+        purged = mutations.cascade_delete(
+            {n: lake.read(n) for n in PURGE_ORDER}, "player_id", keys
         )
-        lake.overwrite("cards", merged_cards)
-        stats["cards_total"] = obs.get["rows"]
 
-    # 6. matches + match_cards — flatten, incremental-gate, append
-    #    (etl_pipeline_script.py:119-153)
-    with _stage(spark, walls, "matches", "matches_inserted"):
-        seasons_dim = lake.read("seasons")
-        matches = flatten_matches(battlelogs, seasons=seasons_dim)
+        def rewrite(name: str, after: tuple[str, ...]) -> None:
+            if lake.exists(name):
+                lake.overwrite(name, purged[name], lambda: commits.wait(*after))
+            commits.mark(f"purge {name}")
+
+        after = [()] + [(f"purge {n}",) for n in PURGE_ORDER[:-1]]
+        _run_all(
+            spark,
+            commits,
+            [functools.partial(rewrite, n, a) for n, a in zip(PURGE_ORDER, after)],
+        )
+        return len(failed_players)
+
+    def new_matches() -> int:
+        # flatten, incremental-gate, append (etl_pipeline_script.py:119-137)
+        matches = flatten_matches(battlelogs, seasons=lake.read("seasons"))
         existing_keys = lake.read("matches").select("match_key")
         # localCheckpoint (not cache): appending to the matches path
         # below triggers refreshByPath, which would invalidate a cache
         # whose lineage reads that same path — the anti-join would then
         # recompute against the just-appended file and yield nothing.
-        new_matches = mutations.insert_if_absent(
+        fresh = mutations.insert_if_absent(
             matches, existing_keys, ["match_key"]
         ).localCheckpoint(eager=True)
-        n_new = new_matches.count()
-        stats["matches_inserted"] = n_new
+        n_new = fresh.count()
         if n_new:
             # deterministic surrogate ids continuing from the current
             # max (M6: IDENTITY replacement), as the declared bigint
@@ -417,29 +513,62 @@ def run_etl(
                 .collect()[0][0]
             )
             keyed = mutations.add_surrogate_keys(
-                new_matches, ["match_key"], "match_view_id", start_at=int(start)
+                fresh, ["match_key"], "match_view_id", start_at=int(start)
             ).withColumn("match_view_id", F.col("match_view_id").cast("bigint"))
-            lake.append(
-                "matches", keyed.select(*[f.name for f in schemas.MATCHES])
-            )
+            append("matches", keyed.select(*[f.name for f in schemas.MATCHES]))
+            handoff.update(fresh=fresh, keyed=keyed)
+        return n_new
 
-    # match_cards only for the new match views (second-pass
-    # extraction, etl_pipeline_script.py:141-147)
-    with _stage(spark, walls, "match_cards", "match_cards_inserted"):
-        if n_new:
-            new_cards = flatten_match_cards(battlelogs).join(
-                new_matches.select("match_key"), "match_key", "left_semi"
+    def new_match_cards() -> int:
+        # only for the new match views (second-pass extraction,
+        # etl_pipeline_script.py:141-147)
+        if not handoff:
+            return 0
+        new_cards = flatten_match_cards(battlelogs).join(
+            handoff["fresh"].select("match_key"), "match_key", "left_semi"
+        )
+        mapping = handoff["keyed"].select("match_key", "match_view_id")
+        with_ids, obs = _counted(
+            new_cards.join(F.broadcast(mapping), "match_key").select(  # J1
+                "match_view_id", "match_key", "player_id", "card_id"
             )
-            mapping = keyed.select("match_key", "match_view_id")
-            with_ids, obs = _counted(
-                new_cards.join(F.broadcast(mapping), "match_key").select(  # J1
-                    "match_view_id", "match_key", "player_id", "card_id"
-                )
-            )
-            lake.append("match_cards", with_ids)
-            stats["match_cards_inserted"] = obs.get["rows"]
-        else:
-            stats["match_cards_inserted"] = 0
+        )
+        append("match_cards", with_ids)
+        return obs.get["rows"]
+
+    def after_purge(name: str) -> tuple[str, ...]:
+        return (f"purge {name}",) if failed_players else ()
+
+    cards_clean = cards.withColumn(  # null→0 coercion (db_ops.py:128-149)
+        "elixir_cost", F.coalesce(F.col("elixir_cost"), F.lit(0))
+    )
+    # (name, stats key, inputs it waits for, body), in run-log order
+    stages: list[tuple[str, str, tuple[str, ...], Callable[[], int]]] = [
+        ("seasons", "seasons_inserted", (), seasons),
+        ("clans", "clans_total", (), lambda: upsert("clans", clans, "clan_id")),
+        ("players", "players_total", (),
+         lambda: upsert("players", players, "player_id")),
+        ("season_rankings", "rankings_inserted", (), season_rankings),
+        *([("purge", "players_purged", ("players", "season_rankings"), purge)]
+          if failed_players else []),
+        ("cards", "cards_total", (), lambda: upsert("cards", cards_clean, "card_id")),
+        ("matches", "matches_inserted", ("seasons", *after_purge("matches")),
+         new_matches),
+        ("match_cards", "match_cards_inserted",
+         ("matches", *after_purge("match_cards")), new_match_cards),
+    ]
+    t_run = time.perf_counter()
+
+    def run(name: str, key: str, inputs: tuple[str, ...], body) -> None:
+        commits.wait(*inputs)
+        spark.sparkContext.setJobDescription(f"run_etl {name}")
+        t0 = time.perf_counter()
+        rows[key] = body()
+        runs[name] = (t0 - t_run, time.perf_counter() - t0)
+        commits.mark(name)
+
+    _run_all(spark, commits, [functools.partial(run, *s) for s in stages])
+    stats = {key: rows[key] for _, key, _, _ in stages}
 
     if log_dir is not None:
         from . import runlog
@@ -447,9 +576,10 @@ def run_etl(
         logger = runlog.run_logger(log_dir)
         logger.info("run_etl completed lake=%s", lake.root)
         runlog.log_stats(logger, "run_etl", stats)
-        for name, wall, rows_key in walls:
+        for name, key, _, _ in stages:
             logger.info(
-                "run_etl stage=%s wall_s=%.3f rows=%d", name, wall, stats[rows_key]
+                "run_etl stage=%s start_s=%.3f wall_s=%.3f rows=%d",
+                name, *runs[name], stats[key],
             )
         runlog.close(logger)
     return stats

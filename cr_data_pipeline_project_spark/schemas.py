@@ -161,6 +161,20 @@ DOMAIN: dict[str, T.StructType] = {
     "match_cards": MATCH_CARDS,
 }
 
+# The DDL's 8 foreign keys (db_creation_script.sql:122-159) as
+# (child table, column, parent table). Unenforced: ``pipeline.run_etl``
+# commits a child's inserts only after its parents' writes.
+FOREIGN_KEYS: tuple[tuple[str, str, str], ...] = (
+    ("players", "clan_id", "clans"),
+    ("season_rankings", "season_id", "seasons"),
+    ("season_rankings", "player_id", "players"),
+    ("matches", "season_id", "seasons"),
+    ("matches", "player_id", "players"),
+    ("match_cards", "match_view_id", "matches"),
+    ("match_cards", "player_id", "players"),
+    ("match_cards", "card_id", "cards"),
+)
+
 # --------------------------------------------------------------------
 # Driver fixture tables (/root/testdata/sf*/ — see FIXTURES.md §B)
 # --------------------------------------------------------------------

@@ -5,9 +5,15 @@ enforces via DB constraints + log invariants (SURVEY.md §5).
 
 The five-run lifecycle (first load → incremental re-run → dim rename
 → new player → purge) executes ONCE in a module-scoped fixture; tests
-assert on the recorded stats and final lake state.  One standalone
-run covers the cards null-coercion path and the run log, and a
-repeated run on a restored lake compiles no generated class.  Further
+assert on the recorded stats and final lake state.  Two standalone
+runs cover the cards null-coercion path and the run log (stage order
+and start offsets, with and without a purge), and a repeated run on a
+restored lake compiles no generated class.  The stage DAG is pinned
+on a restored lake where every stage writes: writes become visible in
+FK order (the purge child first), every job stays in the caller's job
+group under its stage's description, and a failed stage commits none
+of its dependents; a thread-contention test drives the commit gate
+alone.  Further
 tests pin the mechanics: declared-schema reads start no job and widen
 ``int`` ids, skip-empty appends add no file, the files hold
 ``match_view_id`` as INT64, and the one-action audit labels each
@@ -15,13 +21,19 @@ violation kind.
 """
 
 import datetime as dt
+import functools
 import glob
 import os
+import re
 import shutil
+import sys
+import threading
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -243,6 +255,18 @@ def test_warm_run_etl_compiles_nothing(spark, tmp_path):
     assert cycle() == (0, stats, counts)
 
 
+def _stage_lines(log):
+    """``{stage: (start_s, wall_s, rows)}`` from a run log, in log order."""
+    out = {}
+    for ln in open(log):
+        m = re.search(
+            r"run_etl stage=(\S+) start_s=(\S+) wall_s=(\S+) rows=(\d+)", ln
+        )
+        if m:
+            out[m[1]] = (float(m[2]), float(m[3]), int(m[4]))
+    return out
+
+
 def test_cards_null_elixir_coerced(spark, tmp_path):
     lake = pipeline.Lake(spark, os.path.join(str(tmp_path), "lake"))
     ins = _inputs(spark, tmp_path)
@@ -254,12 +278,265 @@ def test_cards_null_elixir_coerced(spark, tmp_path):
     row = lake.read("cards").where(F.col("card_id") == "99").collect()[0]
     assert row["elixir_cost"] == 0  # db_ops.py:129 null→0
     (log,) = glob.glob(os.path.join(log_dir, "etl_log_*.log"))
-    stages = [ln.split("run_etl stage=")[1] for ln in open(log) if "stage=" in ln]
-    assert [s.split()[0] for s in stages] == [
+    stages = _stage_lines(log)
+    assert list(stages) == [
         "seasons", "clans", "players", "season_rankings", "cards", "matches",
         "match_cards",
     ]
-    assert "rows=1" in stages[4] and "wall_s=" in stages[4]  # the one card
+    assert stages["cards"][2] == 1  # the one card
+    assert all(start >= 0 and wall > 0 for start, wall, _ in stages.values())
+    # match_cards starts once the matches stage has ended (ms rounding)
+    start, wall, _ = stages["matches"]
+    assert stages["match_cards"][0] >= start + wall - 0.002
+
+    # a purge run logs a purge line, after the stages it reads
+    pipeline.run_etl(
+        spark, lake, **ins, failed_players=["#GONE"], **CAL, log_dir=log_dir
+    )
+    log = sorted(glob.glob(os.path.join(log_dir, "etl_log_*.log")))[-1]
+    stages = _stage_lines(log)
+    assert list(stages) == [
+        "seasons", "clans", "players", "season_rankings", "purge", "cards",
+        "matches", "match_cards",
+    ]
+    assert stages["purge"][2] == 1
+    for read in ("players", "season_rankings"):
+        start, wall, _ = stages[read]
+        assert stages["purge"][0] >= start + wall - 0.002
+
+
+# ---- the stage DAG: FK commit order, job group, failure -------------
+
+
+def _batch(spark, base, name, records, rank_season):
+    """``run_etl`` inputs for players #ME and #GONE of clan #CLAN;
+    ``records`` are the (player tag, battles) pairs of the battlelog."""
+    path = os.path.join(str(base), f"{name}.json")
+    write_battlelog_json(path, records)
+    tags = ("#ME", "#GONE")
+    return dict(
+        rankings=spark.createDataFrame(
+            [(t, rank_season, i + 1, 2000 - i) for i, t in enumerate(tags)],
+            schemas.SEASON_RANKINGS,
+        ),
+        players=spark.createDataFrame(
+            [player_row(t, t.strip("#").lower(), "#CLAN") for t in tags],
+            schemas.PLAYERS,
+        ),
+        clans=spark.createDataFrame([clan_row("#CLAN")], schemas.CLANS),
+        cards=spark.createDataFrame(
+            [card_row(i) for i in range(1, 9)], schemas.CARDS
+        ),
+        battlelogs=read_battlelog_json(spark, path),
+    )
+
+
+@pytest.fixture(scope="module")
+def dag_seed(spark, tmp_path_factory):
+    """A lake after one load of #ME and #GONE, and the inputs of a run
+    in which every stage writes: a new season, a new rankings season,
+    a new battle, and #GONE purged."""
+    base = tmp_path_factory.mktemp("dag_seed")
+    root = os.path.join(str(base), "lake")
+    first = _batch(
+        spark, base, "first", [("#ME", [battle()]), ("#GONE", [battle()])],
+        "2025-01",
+    )
+    pipeline.run_etl(spark, pipeline.Lake(spark, root), **first, **CAL)
+    second = _batch(
+        spark, base, "second",
+        [("#ME", [battle(), battle(battle_time="20250214T093000.000Z")])],
+        "2025-02",
+    )
+    return root, dict(
+        second, failed_players=["#GONE"], calendar_from="2025-01-01",
+        calendar_months=4,
+    )
+
+
+def _restored(spark, dag_seed, tmp_path):
+    root, inputs = dag_seed
+    dst = os.path.join(str(tmp_path), "lake")
+    shutil.copytree(root, dst)
+    return pipeline.Lake(spark, dst), dict(inputs)
+
+
+DAG_STATS = {
+    "seasons_inserted": 1, "clans_total": 1, "players_total": 2,
+    "rankings_inserted": 2, "players_purged": 1, "cards_total": 8,
+    "matches_inserted": 1, "match_cards_inserted": 8,
+}
+# (parent, child) for the 8 FKs of the reference DDL
+FK_EDGES = [
+    ("clans", "players"),
+    ("seasons", "season_rankings"), ("players", "season_rankings"),
+    ("seasons", "matches"), ("players", "matches"),
+    ("matches", "match_cards"), ("players", "match_cards"),
+    ("cards", "match_cards"),
+]
+
+
+def test_commits_follow_fk_order(spark, dag_seed, tmp_path, monkeypatch):
+    """Each write is recorded when it becomes visible: the pointer swap
+    of an overwrite, the return of an append. Inserts land parent
+    first; the purge lands child first, after the writes it reads and
+    before the appends that follow it."""
+    lake, inputs = _restored(spark, dag_seed, tmp_path)
+    seen = []
+    replace, append = os.replace, pipeline.Lake.append
+
+    def hold(label):
+        # Hold back every write some later write must follow, so a
+        # missing wait shows up as a reordering.
+        last = ("append season_rankings", "append match_cards")
+        if label not in last and not (
+            label == "swap players" and "swap season_rankings" in seen
+        ):
+            time.sleep(0.25)
+
+    def swap(src, dst):
+        label = "swap " + os.path.basename(os.path.dirname(dst))
+        hold(label)
+        replace(src, dst)
+        seen.append(label)
+
+    def appended(self, name, df):
+        hold(f"append {name}")
+        append(self, name, df)
+        seen.append(f"append {name}")
+
+    monkeypatch.setattr(os, "replace", swap)
+    monkeypatch.setattr(pipeline.Lake, "append", appended)
+    stats = pipeline.run_etl(spark, lake, **inputs)
+    monkeypatch.undo()
+
+    assert stats == DAG_STATS
+    at = {}
+    for i, label in enumerate(seen):
+        at.setdefault(label, []).append(i)
+    assert {k: len(v) for k, v in at.items()} == {
+        "append seasons": 1, "swap clans": 1, "swap players": 2,
+        "append season_rankings": 1, "swap match_cards": 1,
+        "swap matches": 1, "swap season_rankings": 1, "swap cards": 1,
+        "append matches": 1, "append match_cards": 1,
+    }
+    insert = {
+        "seasons": at["append seasons"][0],
+        "clans": at["swap clans"][0],
+        "players": at["swap players"][0],
+        "season_rankings": at["append season_rankings"][0],
+        "cards": at["swap cards"][0],
+        "matches": at["append matches"][0],
+        "match_cards": at["append match_cards"][0],
+    }
+    for parent, child in FK_EDGES:
+        assert insert[parent] < insert[child], (parent, child, seen)
+    purge = [at["swap match_cards"][0], at["swap matches"][0],
+             at["swap season_rankings"][0], at["swap players"][1]]
+    assert purge == sorted(purge), seen
+    assert insert["players"] < purge[0] and insert["season_rankings"] < purge[0]
+    assert purge[1] < insert["matches"] and purge[0] < insert["match_cards"]
+
+
+def test_jobs_run_in_callers_group(spark, dag_seed, tmp_path):
+    """Every job a run starts carries the caller's job group, so
+    ``cancelJobGroup`` stops the whole run, and the description of the
+    stage that started it."""
+    lake, inputs = _restored(spark, dag_seed, tmp_path)
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def jobs():
+        got = store.jobsList(None)
+        return [got.apply(i) for i in range(got.size())]
+
+    def opt(o):
+        return o.get() if o.isDefined() else None
+
+    seen_before = {j.jobId() for j in jobs()}
+    sc.setJobGroup("etl-probe", "run_etl under a caller's group")
+    try:
+        pipeline.run_etl(spark, lake, **inputs)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    run = [
+        (opt(j.jobGroup()), opt(j.description()))
+        for j in jobs() if j.jobId() not in seen_before
+    ]
+    assert run and {group for group, _ in run} == {"etl-probe"}
+    assert {desc for _, desc in run} == {
+        f"run_etl {s}" for s in (
+            "seasons", "clans", "players", "season_rankings", "purge",
+            "cards", "matches", "match_cards",
+        )
+    }
+
+
+def test_failed_stage_commits_no_dependent(spark, dag_seed, tmp_path):
+    """A clans batch without a declared column fails the clans stage.
+    ``run_etl`` re-raises that error once every stage thread has
+    ended; the stages that wait on clans, directly or not, commit
+    nothing and leave no staged snapshot."""
+    lake, inputs = _restored(spark, dag_seed, tmp_path)
+    inputs["clans"] = inputs["clans"].drop("members")
+    held = ("players", "season_rankings", "matches", "match_cards")
+
+    def state():
+        return {n: (lake.current_version(n), _parquet_files(lake, n)) for n in held}
+
+    before = state()
+    threads = set(threading.enumerate())
+    with pytest.raises(AnalysisException, match="members"):
+        pipeline.run_etl(spark, lake, **inputs)
+    assert set(threading.enumerate()) <= threads
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert state() == before
+
+
+def test_commit_chain_holds_under_thread_contention(spark):
+    """More threads than cores, started last-first, each waiting for the
+    one before it, with a short switch interval: the chain completes in
+    order; a failure half-way cancels the rest, and the first error is
+    re-raised once every thread has ended."""
+    n = 24
+
+    def chain(fail_at=None):
+        commits, done = pipeline._Commits(), []
+
+        def link(i):
+            if i:
+                commits.wait(f"k{i - 1}")
+            if i == fail_at:
+                raise ValueError(f"link {i}")
+            done.append(i)
+            commits.mark(f"k{i}")
+
+        targets = [functools.partial(link, i) for i in reversed(range(n))]
+        errors = []
+
+        def run():
+            try:
+                pipeline._run_all(spark, commits, targets)
+            except ValueError as exc:
+                errors.append(exc)
+
+        t = threading.Thread(target=run)
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive()
+        return done, errors
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        assert chain() == (list(range(n)), [])
+        done, errors = chain(fail_at=n // 2)
+    finally:
+        sys.setswitchinterval(interval)
+    assert done == list(range(n // 2))
+    assert [str(e) for e in errors] == [f"link {n // 2}"]
 
 
 # ---- a lake whose history holds match_view_id as int ------------------
