@@ -891,7 +891,6 @@ def build_neardup_index(
     num_hashes: int = 64,
     bands: int = 32,
     seed: int = 42,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """Materializable near-dup index for incremental ingestion: one
     row per document with its LSH band hashes AND its shingle set.
@@ -909,16 +908,9 @@ def build_neardup_index(
     ``array_intersect`` compares longs instead of variable-length
     strings. At 100 TB write it bucketed by a band hash prefix so
     batch probes prune partitions instead of scanning the full
-    index.
-
-    ``hash_shingles=False`` keeps the legacy ``array<string>``
-    encoding — used ONLY when appending to an index written before
-    the hashed encoding existed, so one parquet dir never mixes
-    element types (the probe normalizes either encoding via
-    :func:`normalize_index_shingles`; migrate by rewriting the index
-    offline)."""
+    index."""
     return build_neardup_index_frame(
-        df, text_col, id_col, n, num_hashes, bands, seed, hash_shingles
+        df, text_col, id_col, n, num_hashes, bands, seed
     ).localCheckpoint()
 
 
@@ -930,7 +922,6 @@ def build_neardup_index_frame(
     num_hashes: int = 64,
     bands: int = 32,
     seed: int = 42,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """Lazy plan behind :func:`build_neardup_index`: ONE fused
     groupBy-id aggregate computes the 64 minhash minima AND the
@@ -948,9 +939,7 @@ def build_neardup_index_frame(
     # project the 64-bit hash once; the 32-bit base for the universal
     # hashes derives from it exactly as minhash_signatures does
     proj = sh.select(
-        F.col(id_col),
-        F.xxhash64("shingle").alias("__h"),
-        *([] if hash_shingles else [F.col("shingle")]),
+        F.col(id_col), F.xxhash64("shingle").alias("__h")
     ).withColumn("__h32", F.pmod(F.col("__h"), F.lit(1 << 32)))
     coeffs = _perm_coeffs(num_hashes, seed)
     mins = [
@@ -961,10 +950,9 @@ def build_neardup_index_frame(
         ).alias(f"__m{i}")
         for i, (a, b) in enumerate(coeffs)
     ]
-    set_agg = F.collect_set(
-        F.col("__h") if hash_shingles else F.col("shingle")
-    ).alias("shingles")
-    agg = proj.groupBy(id_col).agg(*mins, set_agg)
+    agg = proj.groupBy(id_col).agg(
+        *mins, F.collect_set("__h").alias("shingles")
+    )
     band_arr = F.array(
         *[
             F.xxhash64(
@@ -977,19 +965,6 @@ def build_neardup_index_frame(
         ]
     )
     return agg.select(F.col(id_col), band_arr.alias("bands"), "shingles")
-
-
-def normalize_index_shingles(index: DataFrame) -> DataFrame:
-    """Schema-compat shim for persisted indexes written before the
-    hashed-shingle change: a legacy ``shingles array<string>`` column
-    is mapped element-wise through the same ``xxhash64`` encoding the
-    current :func:`build_neardup_index` writes, so old and new index
-    rows intersect correctly. No-op for current indexes."""
-    if dict(index.dtypes).get("shingles") == "array<string>":
-        return index.withColumn(
-            "shingles", F.transform("shingles", lambda x: F.xxhash64(x))
-        )
-    return index
 
 
 def explode_index_bands(
@@ -1074,7 +1049,6 @@ def incremental_neardup_pairs(
     quarantine log). Single-pass callers (one collect / one sink
     write) should pass ``materialize=False`` and skip the checkpoint
     replay."""
-    index = normalize_index_shingles(index)
     if index_bands is None:
         # degenerate-bucket guard on the index side (the corpus is
         # the unbounded party): drop buckets beyond max_bucket members

@@ -9,23 +9,41 @@ Structured Streaming gives the same thing with exactly-once state:
 
     file/Kafka source → withWatermark(battle_time)
         → dropDuplicates([match_key])          # stateful dedup gate
-        → foreachBatch(append / MERGE)         # idempotent sink
+        → foreachBatch(insert-if-absent)       # replay-safe sink
+
+Micro-batch layout
+------------------
+Every stream here starts through ONE runner (:func:`_run_batches`)
+and lands through one of two replay-safe sinks, which carry the
+replay-safety argument once each:
+
+- :func:`_overwrite_batch_dir` — additive partials and unkeyed rows
+  (count/sketch/feature partials, corpus routing);
+- :func:`_append_absent` — keyed outputs (matches, PQ codes, DSIR
+  scores, the near-dup corpus and index), gated by an anti-join
+  against the sink's own landed keys.
+
+The SCD-2 history and the change-capture state keep their own
+hash-bucketed rewrite (:func:`_rewrite_affected_buckets`).
 
 Scale notes
 -----------
 - ``dropDuplicates`` state is bounded by the watermark horizon —
   without a watermark the key state grows forever; the horizon should
   exceed the source's max replay window (30 matches ≈ hours-days).
-- ``foreachBatch`` re-uses the batch mutation operators, so the
-  streaming and batch paths share one code path (and one set of
-  tests); the anti-join inside makes the sink idempotent under
-  micro-batch retries even on plain parquet.
+- The streaming match load is NOT the batch load's code path:
+  :func:`streaming_match_load` lands the flattened matches as they
+  come out of ``flatten_matches`` — no ``match_view_id`` surrogate
+  key, plain parquet outside ``pipeline.Lake`` — gated only by
+  ``insert_if_absent`` on ``match_key``. ``pipeline.run_etl`` is the
+  path that assigns ids and commits lake versions.
 - Event-time windowed aggregates (:func:`windowed_event_counts`)
   emit append-mode finalized windows once the watermark passes.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -33,6 +51,87 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.mutations import insert_if_absent
 from ..sources.battlelog import PLAYER_BATTLELOG, flatten_matches
+
+
+def _run_batches(stream: DataFrame, checkpoint: str, handle) -> StreamingQuery:
+    """The module's one micro-batch runner: append output mode,
+    ``handle(batch_df, batch_id)`` per micro-batch, progress in
+    ``checkpoint``, ``availableNow`` (drain what has landed, then
+    stop). A batch whose commit was not recorded (it failed, or the
+    application stopped) re-runs with the SAME ``batch_id`` on restart, so
+    every ``handle`` must land through a replay-safe sink."""
+    return (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(handle)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _overwrite_batch_dir(df: DataFrame, path: str, batch_id: int) -> None:
+    """Replay-safe sink for additive partials and unkeyed rows: the
+    batch OVERWRITES its own ``path/batch=<id>/`` directory. An
+    insert-if-absent gate cannot serve these — a partial's key
+    legitimately recurs across batches (counts add up) and a
+    quarantined line has no key (two identical broken lines are two
+    real rejects) — so a replay instead replaces its own rows rather
+    than double-counting them, and a crash between two such writes of
+    one batch heals on replay. Readers scan ``path`` and sum across
+    batch dirs; the dir is hive-discovered as a ``batch`` column."""
+    df.write.mode("overwrite").parquet(os.path.join(path, f"batch={batch_id}"))
+
+
+def _stream_partials(
+    stream: DataFrame, partials_path: str, checkpoint: str, partials
+) -> StreamingQuery:
+    """Run ``partials(batch_df)`` per micro-batch into
+    :func:`_overwrite_batch_dir`."""
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        _overwrite_batch_dir(partials(batch_df), partials_path, batch_id)
+
+    return _run_batches(stream, checkpoint, handle)
+
+
+def _append_absent(df: DataFrame, path: str, keys: list[str]) -> None:
+    """Replay-safe sink for keyed outputs: append the rows of ``df``
+    whose key has not landed at ``path`` yet (``insert_if_absent``
+    against the sink's OWN landed keys). A replayed batch appends
+    only what did not land; a batch making two such writes (the
+    near-dup corpus and index) that crashed between them completes
+    only the missing one. The target is read through
+    :func:`_read_parquet_if_present`: only a path holding no data
+    files skips the gate."""
+    existing = _read_parquet_if_present(df.sparkSession, path)
+    if existing is not None:
+        df = insert_if_absent(df, existing, keys)
+    df.write.mode("append").parquet(path)
+
+
+def _read_parquet_if_present(spark: SparkSession, path: str) -> DataFrame | None:
+    """The module's one missing-path rule: None ONLY when ``path``
+    holds no data files — it does not exist, is empty, or holds only
+    ``_``/``.``-prefixed entries (a crashed write's ``_temporary/``,
+    ``_SUCCESS``). Every other failure — a corrupt footer, an IO or
+    permission error — propagates and fails the batch: a swallowed
+    error here would silently disable a correctness gate (duplicates
+    land, or a replay double-ingests), not an optimization. The
+    listing goes through the path's Hadoop FileSystem, so the rule is
+    the same on local disk and object stores."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        if fs.exists(jpath) and any(
+            not st.getPath().getName().startswith(("_", "."))
+            for st in fs.listStatus(jpath)
+        ):
+            raise
+        return None
 
 
 def stream_battlelog_json(spark: SparkSession, path: str) -> DataFrame:
@@ -97,36 +196,19 @@ def streaming_match_load(
     seasons: DataFrame | None = None,
     watermark: str = "2 hours",
 ) -> StreamingQuery:
-    """Watermarked, stateful-deduped, idempotent match ingestion."""
+    """Watermarked, stateful-deduped match ingestion, landed through
+    the keyed sink (:func:`_append_absent` on ``match_key``). A lake
+    whose files carry no ``match_key`` fails the batch; it is never
+    read as a missing lake."""
     matches = (
         flatten_matches(raw_stream, seasons=seasons)
         .withWatermark("battle_time", watermark)
         .dropDuplicates(["match_key"])
     )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch_df.sparkSession
-        try:
-            existing = spark.read.parquet(lake_matches_path).select("match_key")
-        except AnalysisException:
-            # ONLY a missing lake skips the gate (first batch). Any
-            # other read failure (IO error, corrupt footer,
-            # permissions) must abort the batch — swallowing it would
-            # silently disable the anti-join idempotency gate and
-            # double-ingest on retry.
-            fresh = batch_df
-        else:
-            fresh = insert_if_absent(batch_df, existing, ["match_key"])
-        fresh.write.mode("append").parquet(lake_matches_path)
-
-    return (
-        matches.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        matches,
+        checkpoint,
+        lambda df, batch_id: _append_absent(df, lake_matches_path, ["match_key"]),
     )
 
 
@@ -266,7 +348,8 @@ def streaming_neardup_ingest(
 ):
     """Continuously-ingesting corpus curation: per micro-batch,
     near-dup-probe the persisted index, quarantine duplicates, land
-    accepted documents AND their index rows, log the dup pairs.
+    accepted documents AND their index rows, log the dup pairs
+    (:func:`neardup_ingest_batch`).
 
     The streaming fusion of the reference's incremental anti-join
     gate (etl_pipeline_script.py:128-133) with the LLM-pipeline
@@ -274,46 +357,18 @@ def streaming_neardup_ingest(
     probes is exactly what previous batches appended, so the corpus
     stays near-dup-free as it grows.
 
-    Per batch (all bounded by batch size, never corpus size):
-    1. within-batch LSH pairs → keep the min-id side of each pair;
-    2. survivors probe the index (`incremental_neardup_pairs`); dup
-       pairs land in a per-batch partition of the quarantine log
-       (dynamic partition overwrite → a foreachBatch REPLAY rewrites
-       its own partition instead of double-appending);
-    3. accepted docs append to the corpus and their index rows append
-       to the index — two non-atomic writes, so each is guarded by an
-       anti-join against its OWN sink's landed ids: a batch that
-       crashed between the writes completes only the missing one on
-       replay (safe because the index probe excludes self-pairs, so a
-       doc whose index rows landed first is not re-quarantined).
-
-    Failure posture: ONLY a missing path skips a read (first batch).
-    Any other read failure — IO error, corrupt footer, permissions —
-    aborts the batch; swallowing it would silently disable the
-    near-dup gate (duplicates land) or the replay-idempotency gate
-    (double-ingest on retry). Same rationale as
-    :func:`streaming_match_load`'s anti-join gate above.
-
     Returns the started StreamingQuery (availableNow-compatible)."""
 
-    def handle(batch_df, batch_id: int) -> None:
-        neardup_ingest_batch(
-            batch_df,
-            batch_id,
-            index_path=index_path,
-            accepted_path=accepted_path,
-            dup_log_path=dup_log_path,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=threshold,
-        )
-
-    return (
-        stream_docs.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    handle = functools.partial(
+        neardup_ingest_batch,
+        index_path=index_path,
+        accepted_path=accepted_path,
+        dup_log_path=dup_log_path,
+        text_col=text_col,
+        id_col=id_col,
+        threshold=threshold,
     )
+    return _run_batches(stream_docs, checkpoint, handle)
 
 
 def neardup_ingest_batch(
@@ -328,34 +383,35 @@ def neardup_ingest_batch(
     threshold: float = 0.7,
 ) -> None:
     """One micro-batch of :func:`streaming_neardup_ingest`, exposed
-    at module level so replay/crash scenarios are directly testable
-    (foreachBatch may re-invoke this with the same ``batch_id`` after
-    a crash — every write below is idempotent under that replay)."""
+    at module level so replay/crash scenarios are directly testable.
+
+    Per batch (all bounded by batch size, never corpus size):
+    1. within-batch LSH pairs → keep the min-id side of each pair;
+    2. survivors probe the index (`incremental_neardup_pairs`); dup
+       pairs land in a ``batch_id`` partition of the quarantine log
+       by dynamic partition overwrite, so a replay rewrites its own
+       partition instead of double-appending;
+    3. accepted docs land in the corpus, then their index rows in
+       the index, each through the keyed sink
+       (:func:`_append_absent`). A doc whose index rows landed before
+       a crash is not re-quarantined on replay: the index probe
+       excludes self-pairs."""
     from ..operators.dedup import (
-        build_neardup_index,
+        build_neardup_index_frame,
         incremental_neardup_pairs,
         minhash_lsh_pairs,
     )
 
-    spark = batch_df.sparkSession
-
-    def read_if_present(path: str) -> DataFrame | None:
-        return _read_parquet_if_present(spark, path)
-
     batch = batch_df.localCheckpoint()
     if batch.isEmpty():
         return
-    # 1. within-batch near-dups: drop the larger id of each pair
     intra = minhash_lsh_pairs(batch, text_col, id_col, threshold=threshold)
     batch = batch.join(
         intra.select(F.col("doc_b").alias(id_col)).distinct(),
         id_col,
         "left_anti",
     )
-    # 2. probe the persisted index; quarantine matched dup pairs in a
-    # per-batch partition (dynamic overwrite → replay rewrites its own
-    # partition instead of double-appending quarantine entries)
-    idx = read_if_present(index_path)
+    idx = _read_parquet_if_present(batch.sparkSession, index_path)
     if idx is not None:
         dups = incremental_neardup_pairs(
             batch, idx, text_col, id_col, threshold=threshold
@@ -375,55 +431,15 @@ def neardup_ingest_batch(
     batch = batch.localCheckpoint()
     if batch.isEmpty():
         return
-    # 3. land docs + index rows: two non-atomic writes, each guarded
-    # by an anti-join against its OWN sink's landed ids, so a batch
-    # that crashed between them completes only the missing write on
-    # replay (a doc whose rows already landed in one sink is skipped
-    # there and written to the other; the index probe's self-pair
-    # exclusion keeps such a doc from being re-quarantined).
-    landed = read_if_present(accepted_path)
-    to_corpus = (
-        batch
-        if landed is None
-        else batch.join(landed.select(id_col), id_col, "left_anti")
+    _append_absent(batch, accepted_path, [id_col])
+    _append_absent(
+        build_neardup_index_frame(batch, text_col, id_col), index_path, [id_col]
     )
-    if not to_corpus.isEmpty():
-        to_corpus.write.mode("append").parquet(accepted_path)
-    to_index = (
-        batch
-        if idx is None
-        else batch.join(idx.select(id_col), id_col, "left_anti")
-    )
-    if not to_index.isEmpty():
-        # append in the on-disk encoding: a legacy (pre-hashed-
-        # shingle) index keeps array<string> so one parquet dir never
-        # mixes element types; the probe normalizes either encoding
-        legacy = idx is not None and dict(idx.dtypes).get("shingles") == (
-            "array<string>"
-        )
-        build_neardup_index(
-            to_index, text_col, id_col, hash_shingles=not legacy
-        ).write.mode("append").parquet(index_path)
 
 
 # ------------------------------------------------------------------ #
 # streaming SCD-2 dimension maintenance                               #
 # ------------------------------------------------------------------ #
-
-
-def _read_parquet_if_present(spark: SparkSession, path: str) -> DataFrame | None:
-    """None ONLY for a not-yet-existing path; IO errors / corrupt
-    footers propagate and fail the batch (same contract as the
-    near-dup ingest readers — a swallowed error here disables a
-    correctness gate, not an optimization)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return None
-        raise
 
 
 def _rewrite_affected_buckets(
@@ -753,13 +769,7 @@ def streaming_scd2_ingest(
             delete_col=delete_col,
         )
 
-    return (
-        deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(deduped, checkpoint, write_batch)
 
 
 def change_capture_batch(
@@ -808,9 +818,8 @@ def change_capture_batch(
       rewrite (dynamic mode leaves the landed partition intact) and
       the state rewrite recomputes identical buckets.
 
-    Failure posture: only a missing state path reads as empty (first
-    batch); IO errors / corrupt footers abort the batch
-    (:func:`_read_parquet_if_present`'s contract)."""
+    The state is read through :func:`_read_parquet_if_present`'s
+    missing-path rule."""
     spark = batch_df.sparkSession
 
     # one row per id per batch (an upsert stream's contract; ties
@@ -941,13 +950,7 @@ def streaming_change_capture(
             tombstones=tomb,
         )
 
-    return (
-        stream_docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream_docs, checkpoint, handle)
 
 
 def streaming_pq_index_append(
@@ -960,42 +963,26 @@ def streaming_pq_index_append(
 ) -> StreamingQuery:
     """Index maintenance for the PQ/IVF-PQ serving stack
     (operators/pq.py): continuously encode arriving vectors against
-    the PERSISTED codebooks and append their codes to the codes lake.
+    the PERSISTED codebooks and append their codes to the codes lake
+    through the keyed sink (:func:`_append_absent` on the id).
     Codebooks retrain offline and rarely (a quantizer is stable under
     corpus growth); codes stay fresh per micro-batch — the same
     build-rarely/serve-continuously split as the near-dup index
     ingest (:func:`streaming_neardup_ingest`).
 
-    Idempotent under foreachBatch replay via the insert-if-absent
-    anti-join on the id — a replayed batch can't double-append codes.
     The codebooks re-read per batch, so an offline retrain is picked
-    up at the next micro-batch without restarting the stream.
-
-    Failure posture: a missing codes lake means first batch (append
-    all); a missing CODEBOOKS path aborts the batch — encoding
-    against nothing is not a recoverable state."""
+    up at the next micro-batch without restarting the stream; a
+    missing CODEBOOKS path aborts the batch — encoding against
+    nothing is not a recoverable state."""
     from ..operators.pq import pq_encode
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        books = spark.read.parquet(codebooks_path)  # absent → abort
-        codes = pq_encode(batch_df, books, id_col, vec_col)
-        existing = _read_parquet_if_present(spark, codes_path)
-        if existing is not None:
-            fresh = insert_if_absent(
-                codes, existing.select(id_col), [id_col]
-            )
-        else:
-            fresh = codes
-        fresh.write.mode("append").parquet(codes_path)
+        books = batch_df.sparkSession.read.parquet(codebooks_path)
+        _append_absent(
+            pq_encode(batch_df, books, id_col, vec_col), codes_path, [id_col]
+        )
 
-    return (
-        stream_vecs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream_vecs, checkpoint, handle)
 
 
 def streaming_daily_count_partials(
@@ -1006,33 +993,18 @@ def streaming_daily_count_partials(
     type_col: str = "event_type",
 ) -> StreamingQuery:
     """Continuous maintenance of the q137 anomaly tripwire's input:
-    per-micro-batch (event_type, day) count PARTIALS, written to
-    ``partials_path/batch=<id>/``. Counts are additive, so replay
-    idempotency cannot come from an insert-if-absent id check (the
-    same (type, day) legitimately recurs across batches) — instead
-    each batch OVERWRITES its own batch directory, so a replayed
-    batch replaces its partials instead of double-counting them; the
-    serving aggregate (:func:`daily_anomaly_snapshot`) sums partials
-    across batch dirs. This is the map-side-combine shape pushed
-    into the stream: the state per batch is |types|·|days touched|
-    rows, never raw events."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        daily = batch_df.groupBy(
-            F.col(type_col).alias("event_type"),
-            F.to_date(ts_col).alias("d"),
+    per-micro-batch (event_type, day) count PARTIALS, landed through
+    :func:`_overwrite_batch_dir`; the serving aggregate
+    (:func:`daily_anomaly_snapshot`) sums partials across batch dirs.
+    This is the map-side-combine shape pushed into the stream: the
+    state per batch is |types|·|days touched| rows, never raw
+    events."""
+    def partials(df: DataFrame) -> DataFrame:
+        return df.groupBy(
+            F.col(type_col).alias("event_type"), F.to_date(ts_col).alias("d")
         ).agg(F.count(F.lit(1)).alias("c"))
-        daily.write.mode("overwrite").parquet(
-            os.path.join(partials_path, f"batch={batch_id}")
-        )
 
-    return (
-        event_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _stream_partials(event_stream, partials_path, checkpoint, partials)
 
 
 def daily_anomaly_snapshot(
@@ -1053,6 +1025,51 @@ def daily_anomaly_snapshot(
     return daily_count_anomaly(daily, z_threshold=z_threshold)
 
 
+def _corpus_ingest(
+    spark: SparkSession,
+    path: str,
+    schema,
+    required: tuple[str, ...],
+    max_files_per_trigger: int | None,
+    parse,
+    split,
+    clean_path: str,
+    quarantine_path: str,
+    checkpoint: str,
+) -> StreamingQuery:
+    """The body shared by the JSONL and CSV corpus ingests: text
+    lines → ``parse`` → per micro-batch ``split`` into (clean,
+    quarantine), each landed through :func:`_overwrite_batch_dir`.
+    Both sinks fork from one materialization — unpersisted, each
+    write would re-read and re-parse the batch's files."""
+    from ..sources.jsonl import check_required
+
+    # fail BEFORE .start(): a bad required name inside the first
+    # micro-batch would surface as a StreamingQueryException with
+    # the checkpoint already created
+    check_required(schema, required)
+    if "batch" in schema.fieldNames():
+        raise ValueError(
+            "schema field 'batch' collides with the sink's batch=<id> "
+            "partition directories (hive discovery would see a "
+            "duplicate column) — rename it"
+        )
+    reader = spark.readStream
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            clean, quar = split(batch_df)
+            _overwrite_batch_dir(clean, clean_path, batch_id)
+            _overwrite_batch_dir(quar, quarantine_path, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return _run_batches(parse(reader.text(path)), checkpoint, handle)
+
+
 def streaming_jsonl_corpus_ingest(
     spark: SparkSession,
     path: str,
@@ -1069,55 +1086,16 @@ def streaming_jsonl_corpus_ingest(
     or the quarantine feed with a machine-readable reason. The
     routing IS the batch loader's (:func:`sources.jsonl.split_jsonl`
     applied per micro-batch), so batch backfills and the live stream
-    accept/reject identical lines by construction.
+    accept/reject identical lines by construction. Both outputs land
+    through :func:`_overwrite_batch_dir`, so a schema field named
+    ``batch`` is rejected before the stream starts."""
+    from ..sources.jsonl import parse_lines, split_jsonl
 
-    Replay idempotency: quarantine rows carry no key (two identical
-    broken lines are two real rejects), so the insert-if-absent gate
-    can't apply — both outputs instead OVERWRITE their own
-    ``batch=<id>`` directory (the :func:`streaming_daily_count_partials`
-    posture): a replayed batch replaces its rows, a crash between the
-    two writes heals on replay, and nothing double-lands. Readers
-    scan the parent path; the batch dir is hive-partition-discovered.
-    """
-    from ..sources.jsonl import check_required, parse_lines, split_jsonl
-
-    # fail BEFORE .start(): a bad required name inside the first
-    # micro-batch would surface as a StreamingQueryException with
-    # the checkpoint already created
-    check_required(schema, required)
-    if "batch" in schema.fieldNames():
-        raise ValueError(
-            "schema field 'batch' collides with the sink's batch=<id> "
-            "partition directories (hive discovery would see a "
-            "duplicate column) — rename it"
-        )
-
-    reader = spark.readStream
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    parsed = parse_lines(reader.text(path), schema)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # both sinks fork from one materialization — unpersisted,
-        # each write would re-read and re-parse the batch's files
-        batch_df.persist()
-        try:
-            clean, quar = split_jsonl(batch_df, schema, required)
-            clean.write.mode("overwrite").parquet(
-                os.path.join(clean_path, f"batch={batch_id}")
-            )
-            quar.write.mode("overwrite").parquet(
-                os.path.join(quarantine_path, f"batch={batch_id}")
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
+    return _corpus_ingest(
+        spark, path, schema, required, max_files_per_trigger,
+        lambda text: parse_lines(text, schema),
+        lambda batch_df: split_jsonl(batch_df, schema, required),
+        clean_path, quarantine_path, checkpoint,
     )
 
 
@@ -1133,35 +1111,15 @@ def streaming_dsir_feature_partials(
     """Continuous maintenance of the DSIR importance model's input
     (operators/importance.py — the q172 kernels): per micro-batch,
     the (f, rc, tc) hashed-bigram feature-count PARTIALS of the
-    arriving documents, written to ``partials_path/batch=<id>/``.
-    Counts are additive, so replay idempotency follows the q137
-    partials posture: each batch OVERWRITES its own batch directory
-    — a replayed batch replaces its partials instead of
-    double-counting. Per-batch state is ``buckets`` rows, never
-    documents."""
-    from ..operators.importance import (
-        bigram_feature_counts,
-        per_feature_counts,
-    )
+    arriving documents, landed through :func:`_overwrite_batch_dir`.
+    Per-batch state is ``buckets`` rows, never documents."""
+    from ..operators.importance import bigram_feature_counts, per_feature_counts
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        per_f = per_feature_counts(
-            bigram_feature_counts(
-                batch_df, text_col, id_col, lang_col, buckets
-            ),
-            lang_col,
-        )
-        per_f.write.mode("overwrite").parquet(
-            os.path.join(partials_path, f"batch={batch_id}")
-        )
+    def partials(df: DataFrame) -> DataFrame:
+        counts = bigram_feature_counts(df, text_col, id_col, lang_col, buckets)
+        return per_feature_counts(counts, lang_col)
 
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _stream_partials(doc_stream, partials_path, checkpoint, partials)
 
 
 def dsir_lambda_snapshot(
@@ -1179,9 +1137,7 @@ def dsir_lambda_snapshot(
     from ..operators.importance import lambda_table
 
     part = spark.read.parquet(partials_path)
-    per_f = part.groupBy("f").agg(
-        F.sum("rc").alias("rc"), F.sum("tc").alias("tc")
-    )
+    per_f = part.groupBy("f").agg(F.sum("rc").alias("rc"), F.sum("tc").alias("tc"))
     return lambda_table(per_f, buckets)
 
 
@@ -1197,37 +1153,22 @@ def streaming_dsir_score_append(
 ) -> StreamingQuery:
     """Serve side of the DSIR split: score arriving documents
     against the PERSISTED lambda model and append (doc_id, n_grams,
-    dsir_score) to the scores lake — the importance weights a
+    dsir_score) to the scores lake through the keyed sink
+    (:func:`_append_absent` on the doc id) — the importance weights a
     downstream resampler consumes. The model re-reads per batch, so
     a lambda refresh (dsir_lambda_snapshot written to
     ``lambda_path``) is picked up at the next micro-batch without a
     stream restart — exactly the PQ-codebook posture
-    (:func:`streaming_pq_index_append`). Idempotent under replay
-    via insert-if-absent on the doc id; a missing MODEL aborts the
+    (:func:`streaming_pq_index_append`); a missing MODEL aborts the
     batch — scoring against nothing is not a recoverable state."""
     from ..operators.importance import bigram_feature_counts, dsir_scores
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        lam = spark.read.parquet(lambda_path)  # absent → abort
-        docf = bigram_feature_counts(
-            batch_df, text_col, id_col, lang_col, buckets
-        )
-        scores = dsir_scores(docf, lam, id_col)
-        existing = _read_parquet_if_present(spark, scores_path)
-        if existing is not None:
-            scores = insert_if_absent(
-                scores, existing.select(id_col), [id_col]
-            )
-        scores.write.mode("append").parquet(scores_path)
+        lam = batch_df.sparkSession.read.parquet(lambda_path)
+        docf = bigram_feature_counts(batch_df, text_col, id_col, lang_col, buckets)
+        _append_absent(dsir_scores(docf, lam, id_col), scores_path, [id_col])
 
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(doc_stream, checkpoint, handle)
 
 
 def streaming_value_count_partials(
@@ -1238,48 +1179,40 @@ def streaming_value_count_partials(
 ) -> StreamingQuery:
     """Continuous maintenance of a drift monitor's live side
     (operators/drift.py): per micro-batch, the (v, c) value-count
-    PARTIALS of the arriving rows, written to
-    ``partials_path/batch=<id>/``. Additive stats — replay
-    idempotency by overwriting the batch's own directory (the
-    q137/DSIR partials posture). Per-batch state is bounded by the
+    PARTIALS of the arriving rows, landed through
+    :func:`_overwrite_batch_dir`. Per-batch state is bounded by the
     batch's value cardinality, never its row count."""
     from ..operators.drift import value_counts
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        value_counts(batch_df, val_col).write.mode("overwrite").parquet(
-            os.path.join(partials_path, f"batch={batch_id}")
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_partials(
+        stream, partials_path, checkpoint, lambda df: value_counts(df, val_col)
     )
+
+
+def _live_counts(spark: SparkSession, partials_path: str) -> DataFrame:
+    """The live (v, c) count table every drift/DP snapshot reads:
+    the streamed value-count partials summed per value — additive,
+    so the same under any micro-batch slicing."""
+    return spark.read.parquet(partials_path).groupBy("v").agg(F.sum("c").alias("c"))
 
 
 def ks_drift_snapshot(
     spark: SparkSession, reference_path: str, partials_path: str
 ) -> DataFrame:
-    """The drift verdict served from streamed partials: sum the live
-    (v, c) partials — additive by construction — and run the SAME
-    exact-BIGINT KS kernel as the batch q177 against the frozen
-    reference count table at ``reference_path`` (written once when
-    the reference snapshot was blessed). One row (n1, n2, ks_num,
-    ks_stat); bit-identical to a batch recompute over the same rows
-    regardless of micro-batch slicing (asserted in tests). Alert on
-    ks_stat crossing the critical value for (n1, n2) — that policy
-    stays with the caller."""
+    """The drift verdict served from streamed partials: run the SAME
+    exact-BIGINT KS kernel as the batch q177 on the live counts
+    (:func:`_live_counts`) against the frozen reference count table
+    at ``reference_path`` (written once when the reference snapshot
+    was blessed). One row (n1, n2, ks_num, ks_stat); bit-identical to
+    a batch recompute over the same rows regardless of micro-batch
+    slicing (asserted in tests). Alert on ks_stat crossing the
+    critical value for (n1, n2) — that policy stays with the
+    caller."""
     from ..operators.drift import ks_from_counts
 
-    ref = spark.read.parquet(reference_path)
-    live = (
-        spark.read.parquet(partials_path)
-        .groupBy("v")
-        .agg(F.sum("c").alias("c"))
+    return ks_from_counts(
+        spark.read.parquet(reference_path), _live_counts(spark, partials_path)
     )
-    return ks_from_counts(ref, live)
 
 
 def psi_drift_snapshot(
@@ -1288,46 +1221,37 @@ def psi_drift_snapshot(
     partials_path: str,
     bins: int = 10,
 ) -> DataFrame:
-    """PSI verdict from the SAME streamed value-count partials the
-    KS snapshot reads (one partials lake serves every drift
-    statistic): sum the live (v, c) partials and run the shared
+    """PSI verdict from the SAME live counts the KS snapshot reads
+    (one partials lake serves every drift statistic): the shared
     quantile-binned PSI kernel against the frozen reference counts.
     Per-bin rows localize WHICH reference deciles gained or lost
     mass; the last bin's psi_cum is the PSI (q182's batch
     contract, bit-identical under any micro-batch slicing)."""
     from ..operators.drift import psi_from_counts
 
-    ref = spark.read.parquet(reference_path)
-    live = (
-        spark.read.parquet(partials_path)
-        .groupBy("v")
-        .agg(F.sum("c").alias("c"))
+    return psi_from_counts(
+        spark.read.parquet(reference_path),
+        _live_counts(spark, partials_path),
+        bins,
     )
-    return psi_from_counts(ref, live, bins)
 
 
 def kl_drift_snapshot(
     spark: SparkSession, reference_path: str, partials_path: str
 ) -> DataFrame:
-    """KL(live ‖ ref) served from the SAME streamed (v, c) partials
-    lake the KS/PSI snapshots read (one partials lake, every drift
-    statistic): sum the live partials and run the shared pinned-
-    integer KL kernel against the frozen reference counts — the
-    categorical/token-distribution verdict (q192's batch contract;
-    for a token monitor the producer simply streams
-    explode(split(text)) through streaming_value_count_partials).
-    Bit-identical to the batch recompute under any micro-batch
-    slicing — additive counts into a kernel whose only float op is
-    one final division."""
+    """KL(live ‖ ref) served from the SAME live counts the KS/PSI
+    snapshots read: the shared pinned-integer KL kernel against the
+    frozen reference counts — the categorical/token-distribution
+    verdict (q192's batch contract; for a token monitor the producer
+    simply streams explode(split(text)) through
+    streaming_value_count_partials). Bit-identical to the batch
+    recompute under any micro-batch slicing — additive counts into a
+    kernel whose only float op is one final division."""
     from ..operators.drift import kl_from_counts
 
-    ref = spark.read.parquet(reference_path)
-    live = (
-        spark.read.parquet(partials_path)
-        .groupBy("v")
-        .agg(F.sum("c").alias("c"))
+    return kl_from_counts(
+        spark.read.parquet(reference_path), _live_counts(spark, partials_path)
     )
-    return kl_from_counts(ref, live)
 
 
 def streaming_cms_partials(
@@ -1341,28 +1265,16 @@ def streaming_cms_partials(
 ) -> StreamingQuery:
     """Continuous count-min sketch maintenance: per micro-batch, the
     batch's (d, b, c) cell-table partial (operators/sketches.py:
-    cms_partials) written to ``partials_path/batch=<id>/`` — the
-    value-count-partials posture applied to the sketch (cell counts
-    are additive, so partials from any micro-batch slicing sum to
-    the batch-built sketch; replay idempotency by overwriting the
-    batch's own directory). Per-batch state is bounded by
+    cms_partials) landed through :func:`_overwrite_batch_dir` (cell
+    counts are additive, so partials from any micro-batch slicing
+    sum to the batch-built sketch). Per-batch state is bounded by
     min(depth·width, batch rows), never the key cardinality —
     which is the whole point of the sketch at 10⁹⁺ keys."""
     from ..operators.sketches import cms_partials
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        cms_partials(
-            batch_df, key_col, depth, width, weight_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(partials_path, f"batch={batch_id}")
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_partials(
+        stream, partials_path, checkpoint,
+        lambda df: cms_partials(df, key_col, depth, width, weight_col),
     )
 
 
@@ -1372,11 +1284,8 @@ def cms_snapshot(spark: SparkSession, partials_path: str) -> DataFrame:
     yielding a table identical to a batch cms_partials over the
     same rows (asserted in tests). Feed it to cms_estimate /
     the cms_topk candidate probe unchanged."""
-    return (
-        spark.read.parquet(partials_path)
-        .groupBy("d", "b")
-        .agg(F.sum("c").alias("c"))
-    )
+    part = spark.read.parquet(partials_path)
+    return part.groupBy("d", "b").agg(F.sum("c").alias("c"))
 
 
 def streaming_csv_corpus_ingest(
@@ -1392,46 +1301,17 @@ def streaming_csv_corpus_ingest(
 ) -> StreamingQuery:
     """Continuous CSV corpus landing — the streaming twin of
     :func:`sources.csvfile.read_csv_corpus`, with the exact
-    contract of :func:`streaming_jsonl_corpus_ingest` (same batch
-    routing function per micro-batch, same overwrite-own-batch-dir
-    replay idempotency, same one-materialization fork into the two
-    sinks); only the parser and reason taxonomy differ, and both of
-    those live in the shared batch module so the stream cannot
-    drift from backfills."""
+    contract of :func:`streaming_jsonl_corpus_ingest` (one shared
+    body, :func:`_corpus_ingest`); only the parser and reason
+    taxonomy differ, and both of those live in the shared batch
+    module so the stream cannot drift from backfills."""
     from ..sources.csvfile import parse_csv_lines, split_csv
-    from ..sources.jsonl import check_required
 
-    check_required(schema, required)
-    if "batch" in schema.fieldNames():
-        raise ValueError(
-            "schema field 'batch' collides with the sink's batch=<id> "
-            "partition directories — rename it"
-        )
-
-    reader = spark.readStream
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    parsed = parse_csv_lines(reader.text(path), schema, sep)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            clean, quar = split_csv(batch_df, schema, required, sep)
-            clean.write.mode("overwrite").parquet(
-                os.path.join(clean_path, f"batch={batch_id}")
-            )
-            quar.write.mode("overwrite").parquet(
-                os.path.join(quarantine_path, f"batch={batch_id}")
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        parsed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
+    return _corpus_ingest(
+        spark, path, schema, required, max_files_per_trigger,
+        lambda text: parse_csv_lines(text, schema, sep),
+        lambda batch_df: split_csv(batch_df, schema, required, sep),
+        clean_path, quarantine_path, checkpoint,
     )
 
 
@@ -1443,25 +1323,21 @@ def dp_release_snapshot(
 ) -> DataFrame:
     """The ε-DP noisy count release served from STREAMED value-count
     partials (the q212-q214 partials-lake posture applied to the
-    privacy plane): sum the live (v, c) partials — additive under
-    any micro-batch slicing — into exact per-group counts, then
-    apply the SAME seeded Laplace mechanism as the batch release
-    (operators/sampling.laplace_ln5: md5-lottery deviate keyed on
-    seed+group, 1e-5-pinned inverse-CDF ln). Because the noise is a
-    pure function of (seed, group), the streaming release is
-    BIT-IDENTICAL to a batch recompute over the same rows — the
-    exact property a privacy audit needs (re-slicing the stream must
-    not re-roll the noise, or repeated snapshots would average it
-    away). Output matches q230: (source, n_true, noisy_n)."""
-    from pyspark.sql import functions as F
-
+    privacy plane): the live counts (:func:`_live_counts`) are the
+    exact per-group counts; apply the SAME seeded Laplace mechanism
+    as the batch release (operators/sampling.laplace_ln5: md5-lottery
+    deviate keyed on seed+group, 1e-5-pinned inverse-CDF ln). Because
+    the noise is a pure function of (seed, group), the streaming
+    release is BIT-IDENTICAL to a batch recompute over the same rows
+    — the exact property a privacy audit needs (re-slicing the
+    stream must not re-roll the noise, or repeated snapshots would
+    average it away). Output matches q230: (source, n_true,
+    noisy_n)."""
     from ..operators.sampling import laplace_ln5
 
     b = 1.0 / float(epsilon)
-    agg = (
-        spark.read.parquet(partials_path)
-        .groupBy(F.col("v").alias("source"))
-        .agg(F.sum("c").cast("bigint").alias("n_true"))
+    agg = _live_counts(spark, partials_path).select(
+        F.col("v").alias("source"), F.col("c").cast("bigint").alias("n_true")
     )
     cdev, ln5 = laplace_ln5(F.col("source"), seed)
     noise = F.round(
@@ -1483,28 +1359,16 @@ def streaming_url_domain_partials(
     per-micro-batch (doc, registrable domain) URL-count partials
     (``textstats.url_doc_domains`` applied per batch — the SAME
     extraction chain as the batch census, so stream and backfill
-    agree by construction), written to ``partials_path/batch=<id>/``.
-    ``n_urls`` is additive and each document arrives once in an
-    append stream, so the per-doc grain unions into the exact
-    census; replay idempotency is the
-    :func:`streaming_daily_count_partials` posture — each batch
-    OVERWRITES its own batch directory, so a replayed batch replaces
-    its partials instead of double-counting. Per-batch state is
-    |docs in batch|·|domains per doc| rows, never raw text."""
+    agree by construction), landed through
+    :func:`_overwrite_batch_dir`. ``n_urls`` is additive and each
+    document arrives once in an append stream, so the per-doc grain
+    unions into the exact census. Per-batch state is |docs in
+    batch|·|domains per doc| rows, never raw text."""
     from ..operators.textstats import url_doc_domains
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        part = url_doc_domains(batch_df, text_col, id_col)
-        part.write.mode("overwrite").parquet(
-            os.path.join(partials_path, f"batch={batch_id}")
-        )
-
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(handle)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_partials(
+        doc_stream, partials_path, checkpoint,
+        lambda df: url_doc_domains(df, text_col, id_col),
     )
 
 

@@ -49,6 +49,27 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
     assert got.select("match_key").distinct().count() == 2
 
 
+def test_match_load_into_lake_without_match_key_fails(spark, tmp_path):
+    """A lake whose parquet has no ``match_key`` is not a missing
+    lake: the batch fails and nothing is appended past the gate."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src = os.path.join(str(tmp_path), "in")
+    lake = os.path.join(str(tmp_path), "matches")
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    os.makedirs(src)
+    spark.range(3).write.parquet(lake)
+    before = sorted(os.listdir(lake))
+
+    write_battlelog_json(os.path.join(src, "b1.json"), [("#ME", [battle()])])
+    with pytest.raises(StreamingQueryException, match="match_key"):
+        _run_stream(spark, src, lake, ckpt)
+    assert sorted(os.listdir(lake)) == before
+    assert spark.read.parquet(lake).columns == ["id"]
+    assert spark.read.parquet(lake).count() == 3
+
+
 def test_windowed_event_counts_stream(spark, tmp_path):
     src = os.path.join(str(tmp_path), "events")
     os.makedirs(src)
@@ -400,6 +421,107 @@ def test_neardup_ingest_duplog_replay_idempotent(spark, tmp_path):
         assert {r["doc_id"] for r in spark.read.parquet(idx).collect()} == {1, 11}
 
 
+def test_neardup_ingest_over_crashed_write_lands_rows(spark, tmp_path):
+    """Keyed sinks whose directories hold only a crashed write's
+    ``_temporary/0/`` hold no data: the batch completes and lands
+    its rows instead of failing every retry on schema inference."""
+    from cr_data_pipeline_project_spark.streaming.incremental import (
+        neardup_ingest_batch,
+    )
+
+    idx = os.path.join(str(tmp_path), "nd_index")
+    acc = os.path.join(str(tmp_path), "accepted")
+    dup = os.path.join(str(tmp_path), "dup_log")
+    for path in (idx, acc):
+        os.makedirs(os.path.join(path, "_temporary", "0"))
+
+    base = " ".join(f"tok{i}" for i in range(40))
+    other = " ".join(f"oth{i}" for i in range(40))
+    with few_partitions(spark):
+        neardup_ingest_batch(
+            _docs_df(spark, [(1, base), (2, other)]),
+            0,
+            index_path=idx,
+            accepted_path=acc,
+            dup_log_path=dup,
+        )
+        assert sorted(r["doc_id"] for r in spark.read.parquet(acc).collect()) == [1, 2]
+        assert sorted(r["doc_id"] for r in spark.read.parquet(idx).collect()) == [1, 2]
+
+
+def test_read_parquet_if_present_missing_path_rule(spark, tmp_path):
+    """None only for a path holding no data files (missing, empty,
+    or only ``_``/``.``-prefixed entries); any other unreadable
+    directory raises."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from cr_data_pipeline_project_spark.streaming import incremental as inc
+
+    def at(name):
+        return os.path.join(str(tmp_path), name)
+
+    os.makedirs(at("empty"))
+    os.makedirs(os.path.join(at("crashed"), "_temporary", "0"))
+    os.makedirs(at("markers"))
+    for marker in ("_SUCCESS", ".part-0.crc"):
+        open(os.path.join(at("markers"), marker), "w").close()
+    for name in ("missing", "empty", "crashed", "markers"):
+        assert inc._read_parquet_if_present(spark, at(name)) is None, name
+
+    spark.range(2).write.parquet(at("data"))
+    assert inc._read_parquet_if_present(spark, at("data")).count() == 2
+
+    os.makedirs(os.path.join(at("unreadable"), "batch=0"))
+    with pytest.raises(AnalysisException):
+        inc._read_parquet_if_present(spark, at("unreadable"))
+
+
+def test_incremental_has_one_runner_two_sinks_one_missing_path_rule():
+    """``streaming/incremental.py`` starts every stream through one
+    runner, writes every ``batch=<id>`` directory through one sink,
+    and only the missing-path rule catches ``AnalysisException``."""
+    import ast
+
+    from cr_data_pipeline_project_spark.streaming import incremental as inc
+
+    with open(inc.__file__) as f:
+        src = f.read()
+    tree = ast.parse(src)
+    attrs = [n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)]
+    assert attrs.count("writeStream") == 1
+    assert src.count(".foreachBatch(") == 1
+    assert src.count('f"batch={batch_id}"') == 1
+
+    broad = {"AnalysisException", "Exception", "BaseException", "PySparkException"}
+
+    def catches(handler):
+        if handler.type is None:
+            return True
+        names = {
+            n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(handler.type)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        }
+        return bool(names & broad)
+
+    sites = [
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.ExceptHandler) and catches(node)
+    ]
+    module_level = [
+        node
+        for stmt in tree.body
+        if not isinstance(stmt, ast.FunctionDef)
+        for node in ast.walk(stmt)
+        if isinstance(node, ast.ExceptHandler) and catches(node)
+    ]
+    assert sites == ["_read_parquet_if_present"] and not module_level
+
+
 # ------------------------------------------------------------------ #
 # streaming SCD-2 dimension maintenance                               #
 # ------------------------------------------------------------------ #
@@ -533,46 +655,6 @@ def test_scd2_inside_run_late_event_is_dropped(spark, tmp_path):
         (1, "free", "2024-01-01 00:00:00", "2024-01-05 00:00:00"),
         (1, "pro", "2024-01-05 00:00:00", None),
     ]
-
-
-def test_neardup_index_legacy_string_schema_compat(spark, tmp_path):
-    """A pre-hashed-encoding index (shingles array<string>) must stay
-    probe-able AND append-compatible: new batches append in the
-    legacy encoding so the parquet dir never mixes element types."""
-    from cr_data_pipeline_project_spark.operators.dedup import (
-        build_neardup_index,
-        incremental_neardup_pairs,
-    )
-
-    idx_path = os.path.join(str(tmp_path), "index")
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 3
-    corpus = spark.createDataFrame(
-        [(1, base), (2, "totally different words " * 8)],
-        "doc_id long, text string",
-    )
-    legacy = build_neardup_index(corpus, "text", "doc_id", hash_shingles=False)
-    assert dict(legacy.dtypes)["shingles"] == "array<string>"
-    legacy.write.parquet(idx_path)
-
-    probe = spark.createDataFrame(
-        [(10, base + "omega")], "doc_id long, text string"
-    )  # near-identical: jaccard well above the 0.5 threshold
-    got = incremental_neardup_pairs(
-        probe, spark.read.parquet(idx_path), "text", "doc_id", threshold=0.5
-    )
-    assert [(r.new_id, r.index_id) for r in got.collect()] == [(10, 1)]
-
-    # append in matching encoding, dir stays readable end-to-end
-    more = spark.createDataFrame(
-        [(3, "yet another corpus entry " * 8)], "doc_id long, text string"
-    )
-    build_neardup_index(more, "text", "doc_id", hash_shingles=False).write.mode(
-        "append"
-    ).parquet(idx_path)
-    again = incremental_neardup_pairs(
-        probe, spark.read.parquet(idx_path), "text", "doc_id", threshold=0.5
-    )
-    assert [(r.new_id, r.index_id) for r in again.collect()] == [(10, 1)]
 
 
 def _cdc_state(spark, path):
