@@ -102,14 +102,39 @@ def _append_absent(df: DataFrame, path: str, keys: list[str]) -> None:
     near-dup corpus and index) that crashed between them completes
     only the missing one. The target is read through
     :func:`_read_parquet_if_present`: only a path holding no data
-    files skips the gate."""
-    existing = _read_parquet_if_present(df.sparkSession, path)
+    files skips the gate.
+
+    An append that crashed after some of its tasks committed leaves
+    their files under ``path/_temporary/``, and the next append's job
+    commit would merge every committed task there into the sink, past
+    the gate — the crashed rows would land next to the replay's. So
+    the sink first deletes a stale ``_temporary/`` (the clean-up the
+    crashed job's abort would have done). That is safe only with one
+    writer per sink, which one checkpointed stream per sink gives.
+
+    A frame whose rows have all landed (a replay, or a source that
+    re-sends landed keys) still appends one schema-only part file:
+    an emptiness check would cost a driver-side job on every batch."""
+    spark = df.sparkSession
+    fs, jpath = _hadoop_path(spark, path)
+    fs.delete(spark._jvm.org.apache.hadoop.fs.Path(jpath, "_temporary"), True)
+    existing = _read_parquet_if_present(spark, path)
     if existing is not None:
         df = insert_if_absent(df, existing, keys)
     df.write.mode("append").parquet(path)
 
 
-def _read_parquet_if_present(spark: SparkSession, path: str) -> DataFrame | None:
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` — the same calls on local
+    disk and object stores."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return jpath.getFileSystem(conf), jpath
+
+
+def _read_parquet_if_present(
+    spark: SparkSession, path: str
+) -> DataFrame | None:
     """The module's one missing-path rule: None ONLY when ``path``
     holds no data files — it does not exist, is empty, or holds only
     ``_``/``.``-prefixed entries (a crashed write's ``_temporary/``,
@@ -117,15 +142,13 @@ def _read_parquet_if_present(spark: SparkSession, path: str) -> DataFrame | None
     permission error — propagates and fails the batch: a swallowed
     error here would silently disable a correctness gate (duplicates
     land, or a replay double-ingests), not an optimization. The
-    listing goes through the path's Hadoop FileSystem, so the rule is
-    the same on local disk and object stores."""
+    listing goes through :func:`_hadoop_path`."""
     from pyspark.errors import AnalysisException
 
     try:
         return spark.read.parquet(path)
     except AnalysisException:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        fs, jpath = _hadoop_path(spark, path)
         if fs.exists(jpath) and any(
             not st.getPath().getName().startswith(("_", "."))
             for st in fs.listStatus(jpath)
@@ -205,11 +228,11 @@ def streaming_match_load(
         .withWatermark("battle_time", watermark)
         .dropDuplicates(["match_key"])
     )
-    return _run_batches(
-        matches,
-        checkpoint,
-        lambda df, batch_id: _append_absent(df, lake_matches_path, ["match_key"]),
-    )
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        _append_absent(batch_df, lake_matches_path, ["match_key"])
+
+    return _run_batches(matches, checkpoint, write_batch)
 
 
 def windowed_event_counts(
@@ -433,7 +456,9 @@ def neardup_ingest_batch(
         return
     _append_absent(batch, accepted_path, [id_col])
     _append_absent(
-        build_neardup_index_frame(batch, text_col, id_col), index_path, [id_col]
+        build_neardup_index_frame(batch, text_col, id_col),
+        index_path,
+        [id_col],
     )
 
 
@@ -999,6 +1024,7 @@ def streaming_daily_count_partials(
     This is the map-side-combine shape pushed into the stream: the
     state per batch is |types|·|days touched| rows, never raw
     events."""
+
     def partials(df: DataFrame) -> DataFrame:
         return df.groupBy(
             F.col(type_col).alias("event_type"), F.to_date(ts_col).alias("d")
@@ -1092,10 +1118,16 @@ def streaming_jsonl_corpus_ingest(
     from ..sources.jsonl import parse_lines, split_jsonl
 
     return _corpus_ingest(
-        spark, path, schema, required, max_files_per_trigger,
+        spark,
+        path,
+        schema,
+        required,
+        max_files_per_trigger,
         lambda text: parse_lines(text, schema),
         lambda batch_df: split_jsonl(batch_df, schema, required),
-        clean_path, quarantine_path, checkpoint,
+        clean_path,
+        quarantine_path,
+        checkpoint,
     )
 
 
@@ -1113,10 +1145,15 @@ def streaming_dsir_feature_partials(
     the (f, rc, tc) hashed-bigram feature-count PARTIALS of the
     arriving documents, landed through :func:`_overwrite_batch_dir`.
     Per-batch state is ``buckets`` rows, never documents."""
-    from ..operators.importance import bigram_feature_counts, per_feature_counts
+    from ..operators.importance import (
+        bigram_feature_counts,
+        per_feature_counts,
+    )
 
     def partials(df: DataFrame) -> DataFrame:
-        counts = bigram_feature_counts(df, text_col, id_col, lang_col, buckets)
+        counts = bigram_feature_counts(
+            df, text_col, id_col, lang_col, buckets
+        )
         return per_feature_counts(counts, lang_col)
 
     return _stream_partials(doc_stream, partials_path, checkpoint, partials)
@@ -1137,7 +1174,9 @@ def dsir_lambda_snapshot(
     from ..operators.importance import lambda_table
 
     part = spark.read.parquet(partials_path)
-    per_f = part.groupBy("f").agg(F.sum("rc").alias("rc"), F.sum("tc").alias("tc"))
+    per_f = part.groupBy("f").agg(
+        F.sum("rc").alias("rc"), F.sum("tc").alias("tc")
+    )
     return lambda_table(per_f, buckets)
 
 
@@ -1165,7 +1204,9 @@ def streaming_dsir_score_append(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         lam = batch_df.sparkSession.read.parquet(lambda_path)
-        docf = bigram_feature_counts(batch_df, text_col, id_col, lang_col, buckets)
+        docf = bigram_feature_counts(
+            batch_df, text_col, id_col, lang_col, buckets
+        )
         _append_absent(dsir_scores(docf, lam, id_col), scores_path, [id_col])
 
     return _run_batches(doc_stream, checkpoint, handle)
@@ -1193,7 +1234,11 @@ def _live_counts(spark: SparkSession, partials_path: str) -> DataFrame:
     """The live (v, c) count table every drift/DP snapshot reads:
     the streamed value-count partials summed per value — additive,
     so the same under any micro-batch slicing."""
-    return spark.read.parquet(partials_path).groupBy("v").agg(F.sum("c").alias("c"))
+    return (
+        spark.read.parquet(partials_path)
+        .groupBy("v")
+        .agg(F.sum("c").alias("c"))
+    )
 
 
 def ks_drift_snapshot(
@@ -1273,7 +1318,9 @@ def streaming_cms_partials(
     from ..operators.sketches import cms_partials
 
     return _stream_partials(
-        stream, partials_path, checkpoint,
+        stream,
+        partials_path,
+        checkpoint,
         lambda df: cms_partials(df, key_col, depth, width, weight_col),
     )
 
@@ -1284,8 +1331,11 @@ def cms_snapshot(spark: SparkSession, partials_path: str) -> DataFrame:
     yielding a table identical to a batch cms_partials over the
     same rows (asserted in tests). Feed it to cms_estimate /
     the cms_topk candidate probe unchanged."""
-    part = spark.read.parquet(partials_path)
-    return part.groupBy("d", "b").agg(F.sum("c").alias("c"))
+    return (
+        spark.read.parquet(partials_path)
+        .groupBy("d", "b")
+        .agg(F.sum("c").alias("c"))
+    )
 
 
 def streaming_csv_corpus_ingest(
@@ -1308,10 +1358,16 @@ def streaming_csv_corpus_ingest(
     from ..sources.csvfile import parse_csv_lines, split_csv
 
     return _corpus_ingest(
-        spark, path, schema, required, max_files_per_trigger,
+        spark,
+        path,
+        schema,
+        required,
+        max_files_per_trigger,
         lambda text: parse_csv_lines(text, schema, sep),
         lambda batch_df: split_csv(batch_df, schema, required, sep),
-        clean_path, quarantine_path, checkpoint,
+        clean_path,
+        quarantine_path,
+        checkpoint,
     )
 
 
@@ -1367,7 +1423,9 @@ def streaming_url_domain_partials(
     from ..operators.textstats import url_doc_domains
 
     return _stream_partials(
-        doc_stream, partials_path, checkpoint,
+        doc_stream,
+        partials_path,
+        checkpoint,
         lambda df: url_doc_domains(df, text_col, id_col),
     )
 

@@ -424,7 +424,16 @@ def test_neardup_ingest_duplog_replay_idempotent(spark, tmp_path):
 def test_neardup_ingest_over_crashed_write_lands_rows(spark, tmp_path):
     """Keyed sinks whose directories hold only a crashed write's
     ``_temporary/0/`` hold no data: the batch completes and lands
-    its rows instead of failing every retry on schema inference."""
+    its rows instead of failing every retry on schema inference. The
+    crashed write's committed task output (rows for the same ids)
+    must not be merged into the sink by the replay's job commit: each
+    id lands exactly once."""
+    import glob
+    import shutil
+
+    from cr_data_pipeline_project_spark.operators.dedup import (
+        build_neardup_index_frame,
+    )
     from cr_data_pipeline_project_spark.streaming.incremental import (
         neardup_ingest_batch,
     )
@@ -432,21 +441,34 @@ def test_neardup_ingest_over_crashed_write_lands_rows(spark, tmp_path):
     idx = os.path.join(str(tmp_path), "nd_index")
     acc = os.path.join(str(tmp_path), "accepted")
     dup = os.path.join(str(tmp_path), "dup_log")
-    for path in (idx, acc):
-        os.makedirs(os.path.join(path, "_temporary", "0"))
+
+    def crashed_append(df, path):
+        # what an append that died after its task commit leaves behind
+        staged = path + "_staged"
+        df.coalesce(1).write.parquet(staged)
+        task = os.path.join(
+            path, "_temporary", "0", "task_202601010000_0000_m_000000"
+        )
+        os.makedirs(task)
+        for part in glob.glob(os.path.join(staged, "part-*.parquet")):
+            shutil.move(part, task)
 
     base = " ".join(f"tok{i}" for i in range(40))
     other = " ".join(f"oth{i}" for i in range(40))
     with few_partitions(spark):
+        docs = _docs_df(spark, [(1, base), (2, other)])
+        index_rows = build_neardup_index_frame(docs, "text", "doc_id")
+        crashed_append(docs, acc)
+        crashed_append(index_rows, idx)
         neardup_ingest_batch(
-            _docs_df(spark, [(1, base), (2, other)]),
-            0,
-            index_path=idx,
-            accepted_path=acc,
-            dup_log_path=dup,
+            docs, 0, index_path=idx, accepted_path=acc, dup_log_path=dup
         )
-        assert sorted(r["doc_id"] for r in spark.read.parquet(acc).collect()) == [1, 2]
-        assert sorted(r["doc_id"] for r in spark.read.parquet(idx).collect()) == [1, 2]
+        landed = spark.read.parquet(acc).collect()
+        assert sorted(r["doc_id"] for r in landed) == [1, 2]
+        indexed = spark.read.parquet(idx).collect()
+        assert sorted(r["doc_id"] for r in indexed) == sorted(
+            r["doc_id"] for r in index_rows.collect()
+        )
 
 
 def test_read_parquet_if_present_missing_path_rule(spark, tmp_path):
