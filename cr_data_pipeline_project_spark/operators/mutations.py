@@ -1,5 +1,6 @@
 """Mutation operators (SURVEY.md §2.6): MERGE upsert, insert-if-absent,
-cascade delete, deterministic surrogate keys.
+cascade delete, deterministic surrogate keys (optionally with
+natural-key dedup).
 
 The reference runs these as SQL Server MERGE / NOT-IN gates / ordered
 DELETEs (/root/reference/src/db_ops.py:32-149,
@@ -23,9 +24,12 @@ Scale notes (100 TB)
   reference (FK safety is a consumer contract even without enforced
   FKs). ``pipeline.run_etl`` stages the four purged snapshots at once
   and keeps the order at the commits (pointer swaps), so a reader
-  never sees a child row whose parent is already gone.
-- ``add_surrogate_keys``: a single global ``row_number`` window
-  serializes one stage; acceptable for per-batch deltas (10³-10⁶
+  never sees a child row whose parent is already gone. The purge keys
+  are a driver-held list filtered as literals (Spark's optimizer turns
+  a long list into one hash-set lookup), so a purge is a scan per
+  table with no broadcast job.
+- ``add_surrogate_keys`` / ``first_per_key_with_ids``: a single global
+  window serializes one stage; acceptable for per-batch deltas (10³-10⁶
   rows). For backfilling billions of rows use
   ``zipWithIndex``-style: per-partition counts → offset cumsum →
   partition-local id + offset, implemented in
@@ -56,14 +60,22 @@ def insert_if_absent(
 
 
 def cascade_delete(
-    tables: dict[str, DataFrame], key: str, purge_keys: DataFrame
+    tables: dict[str, DataFrame], key: str, purge_keys: list
 ) -> dict[str, DataFrame]:
-    """Purge ``purge_keys`` from every table that carries ``key``
-    (db_ops.py:53-59). Caller writes results child-first."""
+    """Purge the ``purge_keys`` values from every table that carries
+    ``key`` (db_ops.py:53-59). Caller writes results child-first.
+
+    The keys are driver-held literals, so each table is one filter (a
+    null-safe NOT IN) and starts no broadcast job. A row whose key is
+    NULL is kept, as the left-anti join against a key table keeps it;
+    a NULL in ``purge_keys`` removes nothing."""
     out = {}
-    pk = F.broadcast(purge_keys.select(key))
     for name, df in tables.items():
-        out[name] = df.join(pk, key, "left_anti") if key in df.columns else df
+        if key in df.columns:
+            # NULL (unknown) counts as no match, as in the anti-join
+            hit = F.coalesce(F.col(key).isin(list(purge_keys)), F.lit(False))
+            df = df.where(~hit)
+        out[name] = df
     return out
 
 
@@ -77,6 +89,30 @@ def add_surrogate_keys(
     one window — use for per-batch deltas, see module scale notes."""
     w = Window.orderBy(*natural_key)
     return df.withColumn(id_col, F.row_number().over(w) + F.lit(start_at))
+
+
+def first_per_key_with_ids(
+    df: DataFrame, key: str, id_col: str, start_at: int = 0
+) -> DataFrame:
+    """Natural-key dedup before write (SURVEY.md §1.3) and surrogate
+    ids in one windowed pass: of the rows sharing ``key``, the one that
+    sorts first by all its columns (in ``df.columns`` order) is kept, so
+    only identical rows tie; the kept rows get dense ids in key order
+    from ``start_at + 1``, as :func:`add_surrogate_keys` gives unique
+    keys. Both windows order the one global partition, so the pass adds
+    no exchange beyond :func:`add_surrogate_keys`' own."""
+    by_key = Window.orderBy(key)
+    by_row = Window.orderBy(key, *df.columns)
+    return (
+        df.select(
+            "*",
+            F.rank().over(by_key).alias("__first"),
+            F.row_number().over(by_row).alias("__row"),
+            (F.dense_rank().over(by_key) + F.lit(start_at)).alias(id_col),
+        )
+        .where(F.col("__row") == F.col("__first"))
+        .drop("__first", "__row")
+    )
 
 
 def assign_dense_ids(df: DataFrame, id_col: str, start_at: int = 0) -> DataFrame:

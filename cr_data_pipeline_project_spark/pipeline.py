@@ -18,13 +18,17 @@ independent stages overlap. A failed stage cancels every commit not
 yet allowed; ``run_etl``'s docstring says which may already have
 landed.
 
-Each stage's work runs once. ``Lake.read`` applies the declared
-schema, so a read starts no job. The dim and match_cards row counts
-are observed (``DataFrame.observe``) on the frame the lake write
-consumes, instead of recomputing the stage with ``count()``; only the
-two skip-empty appends (seasons, rankings) and the checkpointed new
-matches are counted up front, because the count decides whether and
-how they are written. ``audit`` counts its six checks in one action.
+Each stage computes its delta once, then writes and counts from that
+one result. ``Lake.read`` applies the declared schema, so a read
+starts no job. Every row count is observed (``DataFrame.observe``) on
+the frame an action already consumes, never recomputed with
+``count()``: the dim upserts and match_cards on their lake write; the
+two skip-empty appends (seasons, rankings) and the new matches on the
+``localCheckpoint`` their append then reads, since the count decides
+whether they are written at all. The battlelog is walked once: the new
+matches carry their deck into the checkpoint, and match_cards is that
+checkpoint's deck exploded. The purge filters by the failed players'
+ids as literals. ``audit`` counts its six checks in one action.
 
 Scale notes (100 TB lake)
 -------------------------
@@ -47,6 +51,7 @@ import os
 import shutil
 import threading
 import time
+import uuid
 from collections.abc import Callable
 
 from pyspark import inheritable_thread_target
@@ -56,7 +61,7 @@ from . import schemas
 from .functions.calendar import season_calendar
 from .operators import mutations, quality
 from .session import local_frame
-from .sources.battlelog import flatten_match_cards, flatten_matches
+from .sources.battlelog import _match_views
 
 FACTS = ("matches", "match_cards")
 DIMS = ("seasons", "players", "clans", "cards", "season_rankings")
@@ -397,8 +402,11 @@ def run_etl(
     (the reference's log metrics, S13); pass ``log_dir`` to also emit
     the reference's durable per-run logfile artifact
     (etl_pipeline_script.py:20-29, see :mod:`.runlog`), which adds one
-    ``run_etl stage=<name> start_s=<s> wall_s=<s> rows=<n>`` line per
-    stage, ``start_s`` counted from the start of the run.
+    ``run_etl stage=<name> start_s=<s> wall_s=<s> rows=<n> jobs=<n>``
+    line per stage, ``start_s`` counted from the start of the run and
+    ``jobs`` the Spark jobs the stage started in this run (each stage
+    then tags its jobs with a tag unique to the run, read back from
+    the status store once the run has ended).
 
     The stages form a fixed DAG, each on its own Python thread, its
     jobs in the caller's job group with the description
@@ -445,11 +453,15 @@ def run_etl(
         return obs.get["rows"]
 
     def insert_new(name: str, new: DataFrame) -> int:
-        # Counted before the write: an empty append to a flat table
-        # would still add a file.
-        n = new.count()
+        # The delta is computed once, into a checkpoint whose count is
+        # observed; the append reads the checkpoint. An empty delta
+        # writes nothing: an empty append to a flat table would still
+        # add a file.
+        counted, obs = _counted(new)
+        delta = counted.localCheckpoint(eager=True)
+        n = obs.get["rows"]
         if n:
-            append(name, new)
+            append(name, delta)
         return n
 
     def seasons() -> int:
@@ -472,11 +484,8 @@ def run_etl(
     def purge() -> int:
         # failed players, child first (db_ops.py:53-59;
         # etl_pipeline_script.py:109-112)
-        keys = local_frame(
-            spark, [(p,) for p in failed_players], "player_id string"
-        )
         purged = mutations.cascade_delete(
-            {n: lake.read(n) for n in PURGE_ORDER}, "player_id", keys
+            {n: lake.read(n) for n in PURGE_ORDER}, "player_id", failed_players
         )
 
         def rewrite(name: str, after: tuple[str, ...]) -> None:
@@ -493,47 +502,49 @@ def run_etl(
         return len(failed_players)
 
     def new_matches() -> int:
-        # flatten, incremental-gate, append (etl_pipeline_script.py:119-137)
-        matches = flatten_matches(battlelogs, seasons=lake.read("seasons"))
-        existing_keys = lake.read("matches").select("match_key")
+        # flatten, incremental-gate, key, append
+        # (etl_pipeline_script.py:119-137); each view keeps its deck
+        # for match_cards
+        views = _match_views(battlelogs, seasons=lake.read("seasons"))
+        fresh = mutations.insert_if_absent(
+            views, lake.read("matches").select("match_key"), ["match_key"]
+        )
+        # deterministic surrogate ids continuing from the current max
+        # (M6: IDENTITY replacement), as the declared bigint; a battle
+        # listed twice in the batch lands once (uq_match_key)
+        start = (
+            lake.read("matches")
+            .agg(F.coalesce(F.max("match_view_id"), F.lit(0)))
+            .collect()[0][0]
+        )
+        keyed, obs = _counted(
+            mutations.first_per_key_with_ids(
+                fresh, "match_key", "match_view_id", start_at=int(start)
+            ).withColumn("match_view_id", F.col("match_view_id").cast("bigint"))
+        )
         # localCheckpoint (not cache): appending to the matches path
         # below triggers refreshByPath, which would invalidate a cache
         # whose lineage reads that same path — the anti-join would then
         # recompute against the just-appended file and yield nothing.
-        fresh = mutations.insert_if_absent(
-            matches, existing_keys, ["match_key"]
-        ).localCheckpoint(eager=True)
-        n_new = fresh.count()
+        delta = keyed.localCheckpoint(eager=True)
+        n_new = obs.get["rows"]
         if n_new:
-            # deterministic surrogate ids continuing from the current
-            # max (M6: IDENTITY replacement), as the declared bigint
-            start = (
-                lake.read("matches")
-                .agg(F.coalesce(F.max("match_view_id"), F.lit(0)))
-                .collect()[0][0]
-            )
-            keyed = mutations.add_surrogate_keys(
-                fresh, ["match_key"], "match_view_id", start_at=int(start)
-            ).withColumn("match_view_id", F.col("match_view_id").cast("bigint"))
-            append("matches", keyed.select(*[f.name for f in schemas.MATCHES]))
-            handoff.update(fresh=fresh, keyed=keyed)
+            append("matches", delta.select(*[f.name for f in schemas.MATCHES]))
+            handoff["new"] = delta
         return n_new
 
     def new_match_cards() -> int:
-        # only for the new match views (second-pass extraction,
-        # etl_pipeline_script.py:141-147)
+        # the new match views' decks (second-pass extraction,
+        # etl_pipeline_script.py:141-147), ids already attached
         if not handoff:
             return 0
-        new_cards = flatten_match_cards(battlelogs).join(
-            handoff["fresh"].select("match_key"), "match_key", "left_semi"
-        )
-        mapping = handoff["keyed"].select("match_key", "match_view_id")
-        with_ids, obs = _counted(
-            new_cards.join(F.broadcast(mapping), "match_key").select(  # J1
-                "match_view_id", "match_key", "player_id", "card_id"
+        cards, obs = _counted(
+            handoff["new"].select(
+                "match_view_id", "match_key", "player_id",
+                F.explode("deck").alias("card_id"),
             )
         )
-        append("match_cards", with_ids)
+        append("match_cards", cards)
         return obs.get["rows"]
 
     def after_purge(name: str) -> tuple[str, ...]:
@@ -557,11 +568,15 @@ def run_etl(
         ("match_cards", "match_cards_inserted",
          ("matches", *after_purge("match_cards")), new_match_cards),
     ]
+    sc = spark.sparkContext
+    run_tag = f"run_etl-{uuid.uuid4().hex}"
     t_run = time.perf_counter()
 
     def run(name: str, key: str, inputs: tuple[str, ...], body) -> None:
         commits.wait(*inputs)
-        spark.sparkContext.setJobDescription(f"run_etl {name}")
+        sc.setJobDescription(f"run_etl {name}")
+        if log_dir is not None:
+            sc.addJobTag(f"{run_tag}-{name}")  # inherited by purge threads
         t0 = time.perf_counter()
         rows[key] = body()
         runs[name] = (t0 - t_run, time.perf_counter() - t0)
@@ -573,13 +588,19 @@ def run_etl(
     if log_dir is not None:
         from . import runlog
 
+        # Every job of the run has ended; once the listener bus has
+        # drained, the status store holds each one with its stage's tag.
+        jvm_sc = sc._jsc.sc()
+        jvm_sc.listenerBus().waitUntilEmpty()
+        tracker = jvm_sc.statusTracker()
         logger = runlog.run_logger(log_dir)
         logger.info("run_etl completed lake=%s", lake.root)
         runlog.log_stats(logger, "run_etl", stats)
         for name, key, _, _ in stages:
             logger.info(
-                "run_etl stage=%s start_s=%.3f wall_s=%.3f rows=%d",
+                "run_etl stage=%s start_s=%.3f wall_s=%.3f rows=%d jobs=%d",
                 name, *runs[name], stats[key],
+                len(tracker.getJobIdsForTag(f"{run_tag}-{name}")),
             )
         runlog.close(logger)
     return stats

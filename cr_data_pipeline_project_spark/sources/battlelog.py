@@ -49,11 +49,15 @@ def read_battlelog_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(PLAYER_BATTLELOG).json(path)
 
 
-def flatten_matches(raw: DataFrame, seasons: DataFrame | None = None) -> DataFrame:
-    """Raw battlelog → ``matches`` rows (api_extract.py:176-227).
+def _match_views(raw: DataFrame, seasons: DataFrame | None = None) -> DataFrame:
+    """Raw battlelog → one row per match view: the ``matches`` columns
+    plus ``deck``, the tracked player's card ids as ``array<string>``
+    (P14, api_extract.py:249). Both public flattens derive from this
+    one walk, so the pathOfLegend filter and the key synthesis have a
+    single copy.
 
     Applies, in reference order: explode (nested array iteration),
-    pathOfLegend filter (P4, :217), strict timestamp parse with
+    pathOfLegend filter (P4, :217, :250), strict timestamp parse with
     null-coercion (P12, :213-214), is_win derivation (P9, :212),
     match_key synthesis (P10, :216), tower-HP array defaults (P13,
     :218-219), and — when a ``seasons`` calendar is given — the
@@ -92,6 +96,7 @@ def flatten_matches(raw: DataFrame, seasons: DataFrame | None = None) -> DataFra
         tower_hp(F.col("t0.princessTowersHitPoints"), 0).alias("princess_tower1_hp"),
         tower_hp(F.col("t0.princessTowersHitPoints"), 1).alias("princess_tower2_hp"),
         F.col("t0.elixirLeaked").cast("decimal(5,2)").alias("elixir_leaked"),
+        F.col("t0.cards.id").cast("array<string>").alias("deck"),
     )
     if seasons is not None:
         out = interval_join(out, seasons, "battle_time", how="left").drop(
@@ -100,30 +105,17 @@ def flatten_matches(raw: DataFrame, seasons: DataFrame | None = None) -> DataFra
     return out
 
 
+def flatten_matches(raw: DataFrame, seasons: DataFrame | None = None) -> DataFrame:
+    """Raw battlelog → ``matches`` rows (api_extract.py:176-227): the
+    match views without their deck."""
+    return _match_views(raw, seasons).drop("deck")
+
+
 def flatten_match_cards(raw: DataFrame) -> DataFrame:
     """Raw battlelog → ``match_cards`` rows: exactly the 8 deck cards
     of the tracked player's perspective (api_extract.py:230-252),
     keyed by the natural ``match_key`` (no IDENTITY round-trip —
     SURVEY.md M6 option (a))."""
-    m = raw.select(
-        F.col("player_tag").alias("player_id"), F.explode("battles").alias("b")
-    )
-    team0 = F.try_element_at(F.col("b.team"), F.lit(1))
-    flat = (
-        m.where(F.col("b.type") == "pathOfLegend")  # P4 second site, :250
-        .select(
-            "player_id",
-            parse_battle_time(F.col("b.battleTime")).alias("battle_time"),
-            team0.getField("cards").alias("cards"),
-        )
-        .where(F.col("battle_time").isNotNull())
-    )
-    return flat.select(
-        synth_match_key(F.col("battle_time"), F.col("player_id")).alias("match_key"),
-        "player_id",
-        F.explode("cards").alias("card"),
-    ).select(
-        "match_key",
-        "player_id",
-        F.col("card.id").cast("string").alias("card_id"),  # P14, :249
+    return _match_views(raw).select(
+        "match_key", "player_id", F.explode("deck").alias("card_id")
     )

@@ -39,16 +39,28 @@ def test_insert_if_absent(spark):
 
 
 def test_cascade_delete_child_parent(spark):
-    players = _players(spark, [("#A", "a", 1), ("#B", "b", 2)])
+    """Every listed key goes from every table that carries the key
+    column; a row whose key is NULL stays (as under a left-anti join),
+    a NULL in the list removes nothing, and a table without the column
+    passes through."""
+    players = _players(
+        spark, [("#A", "a", 1), ("#B", "b", 2), ("#C", "c", 3), (None, "x", 0)]
+    )
     matches = spark.createDataFrame(
-        [("m1", "#A"), ("m2", "#B"), ("m3", "#B")], "match_key string, player_id string"
+        [("m1", "#A"), ("m2", "#B"), ("m3", "#B"), ("m4", "#C"), ("m5", None)],
+        "match_key string, player_id string",
     )
-    purge = spark.createDataFrame([("#B",)], "player_id string")
+    cards = spark.createDataFrame([("1",), ("2",)], "card_id string")
     out = mutations.cascade_delete(
-        {"matches": matches, "players": players}, "player_id", purge
+        {"matches": matches, "players": players, "cards": cards},
+        "player_id",
+        ["#B", "#C", None],
     )
-    assert [r["player_id"] for r in out["players"].collect()] == ["#A"]
-    assert [r["match_key"] for r in out["matches"].collect()] == ["m1"]
+    assert sorted(
+        (r["player_id"] or "") for r in out["players"].collect()
+    ) == ["", "#A"]
+    assert sorted(r["match_key"] for r in out["matches"].collect()) == ["m1", "m5"]
+    assert out["cards"] is cards
 
 
 def test_surrogate_keys_deterministic(spark):
@@ -60,6 +72,15 @@ def test_surrogate_keys_deterministic(spark):
     got1 = {r["match_key"]: r["id"] for r in out1.collect()}
     got2 = {r["match_key"]: r["id"] for r in out2.collect()}
     assert got1 == got2 == {"k1": 11, "k2": 12, "k3": 13}
+    # with natural-key dedup: the same ids; of two rows sharing a key
+    # the one whose columns sort first is kept
+    dup = spark.createDataFrame(
+        [("k2", "b"), ("k1", "x"), ("k3", "c"), ("k1", "a")], "match_key string, v string"
+    )
+    out3 = mutations.first_per_key_with_ids(dup, "match_key", "id", start_at=10)
+    assert sorted((r["match_key"], r["v"], r["id"]) for r in out3.collect()) == [
+        ("k1", "a", 11), ("k2", "b", 12), ("k3", "c", 13)
+    ]
 
 
 def test_assign_dense_ids_unique_and_dense(spark):

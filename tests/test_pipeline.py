@@ -7,13 +7,16 @@ The five-run lifecycle (first load → incremental re-run → dim rename
 → new player → purge) executes ONCE in a module-scoped fixture; tests
 assert on the recorded stats and final lake state.  Two standalone
 runs cover the cards null-coercion path and the run log (stage order
-and start offsets, with and without a purge), and a repeated run on a
-restored lake compiles no generated class.  The stage DAG is pinned
+and start offsets, with and without a purge, and per-stage job counts
+that add up to the run's jobs), and a repeated run on a restored lake
+compiles no generated class.  The stage DAG is pinned
 on a restored lake where every stage writes: writes become visible in
 FK order (the purge child first), every job stays in the caller's job
-group under its stage's description, and a failed stage commits none
-of its dependents; a thread-contention test drives the commit gate
-alone.  Further
+group under its stage's description and each stage starts a pinned
+number of jobs, and a failed stage commits none of its dependents; a
+thread-contention test drives the commit gate alone. The new-matches
+delta is pinned too: a battle listed twice lands once, and the new
+match_cards equal the reference flatten of the new keys.  Further
 tests pin the mechanics: declared-schema reads start no job and widen
 ``int`` ids, skip-empty appends add no file, the files hold
 ``match_view_id`` as INT64, and the one-action audit labels each
@@ -39,7 +42,10 @@ from pyspark.sql import types as T
 
 from cr_data_pipeline_project_spark import analytics, pipeline, schemas
 from cr_data_pipeline_project_spark.operators import quality
-from cr_data_pipeline_project_spark.sources.battlelog import read_battlelog_json
+from cr_data_pipeline_project_spark.sources.battlelog import (
+    flatten_match_cards,
+    read_battlelog_json,
+)
 
 from helpers import (
     battle,
@@ -256,15 +262,33 @@ def test_warm_run_etl_compiles_nothing(spark, tmp_path):
 
 
 def _stage_lines(log):
-    """``{stage: (start_s, wall_s, rows)}`` from a run log, in log order."""
+    """``{stage: (start_s, wall_s, rows, jobs)}`` from a run log, in log
+    order."""
     out = {}
     for ln in open(log):
         m = re.search(
-            r"run_etl stage=(\S+) start_s=(\S+) wall_s=(\S+) rows=(\d+)", ln
+            r"run_etl stage=(\S+) start_s=(\S+) wall_s=(\S+) rows=(\d+)"
+            r" jobs=(\d+)",
+            ln,
         )
         if m:
-            out[m[1]] = (float(m[2]), float(m[3]), int(m[4]))
+            out[m[1]] = (float(m[2]), float(m[3]), int(m[4]), int(m[5]))
     return out
+
+
+def _in_group(spark, group, fn):
+    """Run ``fn()`` under job group ``group``; return its result and the
+    ids of the jobs the group started, read once the listener bus has
+    drained."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_cards_null_elixir_coerced(spark, tmp_path):
@@ -274,7 +298,10 @@ def test_cards_null_elixir_coerced(spark, tmp_path):
         [("99", "mystery", "epic", None, True)], schemas.CARDS
     )
     log_dir = os.path.join(str(tmp_path), "logs")
-    pipeline.run_etl(spark, lake, **ins, **CAL, log_dir=log_dir)
+    _, run_jobs = _in_group(
+        spark, "run-log-probe",
+        lambda: pipeline.run_etl(spark, lake, **ins, **CAL, log_dir=log_dir),
+    )
     row = lake.read("cards").where(F.col("card_id") == "99").collect()[0]
     assert row["elixir_cost"] == 0  # db_ops.py:129 null→0
     (log,) = glob.glob(os.path.join(log_dir, "etl_log_*.log"))
@@ -284,14 +311,20 @@ def test_cards_null_elixir_coerced(spark, tmp_path):
         "match_cards",
     ]
     assert stages["cards"][2] == 1  # the one card
-    assert all(start >= 0 and wall > 0 for start, wall, _ in stages.values())
+    assert all(start >= 0 and wall > 0 for start, wall, _, _ in stages.values())
     # match_cards starts once the matches stage has ended (ms rounding)
-    start, wall, _ = stages["matches"]
+    start, wall, _, _ = stages["matches"]
     assert stages["match_cards"][0] >= start + wall - 0.002
+    # each stage's jobs, and no other job, are the run's jobs
+    assert all(jobs > 0 for *_, jobs in stages.values())
+    assert sum(jobs for *_, jobs in stages.values()) == len(run_jobs)
 
     # a purge run logs a purge line, after the stages it reads
-    pipeline.run_etl(
-        spark, lake, **ins, failed_players=["#GONE"], **CAL, log_dir=log_dir
+    _, run_jobs = _in_group(
+        spark, "run-log-probe-purge",
+        lambda: pipeline.run_etl(
+            spark, lake, **ins, failed_players=["#GONE"], **CAL, log_dir=log_dir
+        ),
     )
     log = sorted(glob.glob(os.path.join(log_dir, "etl_log_*.log")))[-1]
     stages = _stage_lines(log)
@@ -301,8 +334,9 @@ def test_cards_null_elixir_coerced(spark, tmp_path):
     ]
     assert stages["purge"][2] == 1
     for read in ("players", "season_rankings"):
-        start, wall, _ = stages[read]
+        start, wall, _, _ = stages[read]
         assert stages["purge"][0] >= start + wall - 0.002
+    assert sum(jobs for *_, jobs in stages.values()) == len(run_jobs)
 
 
 # ---- the stage DAG: FK commit order, job group, failure -------------
@@ -365,6 +399,13 @@ DAG_STATS = {
     "seasons_inserted": 1, "clans_total": 1, "players_total": 2,
     "rankings_inserted": 2, "players_purged": 1, "cards_total": 8,
     "matches_inserted": 1, "match_cards_inserted": 8,
+}
+# Jobs each stage of that run starts. Each stage computes its delta
+# once, so a recount, a second battlelog read or a purge join shows up
+# here as a higher number.
+DAG_STAGE_JOBS = {
+    "seasons": 4, "clans": 2, "players": 2, "season_rankings": 4,
+    "purge": 4, "cards": 2, "matches": 7, "match_cards": 1,
 }
 # (parent, child) for the 8 FKs of the reference DDL
 FK_EDGES = [
@@ -441,7 +482,7 @@ def test_commits_follow_fk_order(spark, dag_seed, tmp_path, monkeypatch):
 def test_jobs_run_in_callers_group(spark, dag_seed, tmp_path):
     """Every job a run starts carries the caller's job group, so
     ``cancelJobGroup`` stops the whole run, and the description of the
-    stage that started it."""
+    stage that started it; each stage starts ``DAG_STAGE_JOBS`` jobs."""
     lake, inputs = _restored(spark, dag_seed, tmp_path)
     sc = spark.sparkContext
     store = sc._jsc.sc().statusStore()
@@ -472,6 +513,10 @@ def test_jobs_run_in_callers_group(spark, dag_seed, tmp_path):
             "cards", "matches", "match_cards",
         )
     }
+    per_stage = {s: 0 for s in DAG_STAGE_JOBS}
+    for _, desc in run:
+        per_stage[desc.removeprefix("run_etl ")] += 1
+    assert per_stage == DAG_STAGE_JOBS
 
 
 def test_failed_stage_commits_no_dependent(spark, dag_seed, tmp_path):
@@ -537,6 +582,62 @@ def test_commit_chain_holds_under_thread_contention(spark):
         sys.setswitchinterval(interval)
     assert done == list(range(n // 2))
     assert [str(e) for e in errors] == [f"link {n // 2}"]
+
+
+# ---- the new-matches delta: dedup and the deck handoff ----------------
+
+
+def test_battle_listed_twice_lands_once(spark, tmp_path):
+    """A battlelog that lists one battle three times (twice in one
+    record, once more in a retried fetch's record with another global
+    rank) inserts one match view and its 8 cards (uq_match_key). The
+    copy kept is the one whose columns sort first: the lower rank."""
+    lake = pipeline.Lake(spark, os.path.join(str(tmp_path), "lake"))
+    ins = _inputs(spark, tmp_path)
+    path = os.path.join(str(tmp_path), "twice.json")
+    write_battlelog_json(path, [
+        ("#ME", [battle(), battle()]),
+        ("#ME", [battle(global_rank=40)]),
+    ])
+    ins["battlelogs"] = read_battlelog_json(spark, path)
+    stats = pipeline.run_etl(spark, lake, **ins, **CAL)
+    assert (stats["matches_inserted"], stats["match_cards_inserted"]) == (1, 8)
+    (row,) = lake.read("matches").collect()
+    assert (row["match_view_id"], row["current_global_rank"]) == (1, 40)
+    counts = pipeline.audit(spark, lake)
+    assert counts == {k: 0 for k in counts}
+
+
+def test_new_match_cards_equal_reference_flatten(spark, tmp_path):
+    """The match_cards a run appends are ``flatten_match_cards`` of its
+    battlelog semi-joined to the keys it inserted, each under its
+    match's id, over a battle already in the lake, one not
+    pathOfLegend, one with a NULL team and one with an empty deck."""
+    lake = pipeline.Lake(spark, os.path.join(str(tmp_path), "lake"))
+    pipeline.run_etl(spark, lake, **_inputs(spark, tmp_path), **CAL)
+    no_team = battle(battle_time="20250115T100000.000Z")
+    no_team["team"] = None
+    path = os.path.join(str(tmp_path), "mixed.json")
+    write_battlelog_json(path, [("#ME", [
+        battle(),  # loaded by the first run
+        battle(btype="casual2v2", battle_time="20250114T100000.000Z"),
+        no_team,
+        battle(battle_time="20250116T100000.000Z", cards=[]),
+        battle(battle_time="20250117T100000.000Z", cards=range(11, 19)),
+    ])])
+    ins = dict(_inputs(spark, tmp_path), battlelogs=read_battlelog_json(spark, path))
+    stats = pipeline.run_etl(spark, lake, **ins, **CAL)
+    new = lake.read("matches").where(F.col("match_view_id") > 1)
+    assert stats["matches_inserted"] == new.count() == 3
+    want = flatten_match_cards(ins["battlelogs"]).join(
+        new.select("match_key"), "match_key", "left_semi"
+    )
+    got = lake.read("match_cards").where(F.col("match_view_id") > 1)
+    cols = ["match_key", "player_id", "card_id"]
+    assert sorted(got.select(*cols).collect()) == sorted(want.select(*cols).collect())
+    assert stats["match_cards_inserted"] == want.count() == 8
+    ids = {r["match_key"]: r["match_view_id"] for r in new.collect()}
+    assert all(ids[r["match_key"]] == r["match_view_id"] for r in got.collect())
 
 
 # ---- a lake whose history holds match_view_id as int ------------------
