@@ -13,11 +13,19 @@ IEEE division at the very end; PSI's per-bin chain is fixed IEEE
 ops on exact integers with a pinned ln. That is what makes the
 streamed monitor's output bit-identical to the batch recompute
 regardless of micro-batch slicing.
+
+Scale: every finish runs over the (v, ca, cb) count table, so its
+bound is the count table's cardinality (distinct values), never the
+row count. The KS and PSI finishes coalesce that table to one
+partition and run as one plan with no exchange and no join (see
+:func:`_finish`), so the final merge of the partial counts runs in
+one task: cheap while the value cardinality is bounded; swap in a
+sketch-CDF twin if the cardinality itself explodes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def value_counts(
@@ -67,13 +75,19 @@ def ks_from_counts(
     BIGINT cross-products; ks_stat is that max over n1*n2, rounded
     once.
 
-    Scale: the null-safe merge and cumulative window run over the
+    Scale: the null-safe merge and the cumulative window run over the
     UNION of distinct values — bounded by value cardinality, not
     sample size; sample totals ride the same window pass (no second
-    scan). The window is global but its input is the bounded value
-    table (the q177 contract); swap in a sketch-CDF twin if value
-    cardinality itself explodes."""
+    scan), and the finish runs in one task (:func:`ks_from_merged`)."""
     return ks_from_merged(merge_counts(counts_a, counts_b, val_col))
+
+
+def _finish(pts: DataFrame, text: str) -> DataFrame:
+    """Run a finish's one SQL text over the (v, ca, cb) table ``pts``
+    coalesced to ONE partition: the finish's windows, aggregates and
+    bin spine then plan no exchange and no join, and the last merge of
+    the partial counts runs in the same single task."""
+    return pts.sparkSession.sql(text, pts=pts.coalesce(1))
 
 
 def ks_from_merged(pts: DataFrame) -> DataFrame:
@@ -81,25 +95,25 @@ def ks_from_merged(pts: DataFrame) -> DataFrame:
     entry a one-scan producer uses directly (q177 derives ca/cb as
     conditional counts in a single corpus pass; routing it through
     the two-table entry would reintroduce the double scan a review
-    removed)."""
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    wall = Window.partitionBy()
-    cum = pts.select(
-        F.sum("ca").over(wcum).alias("f1"),
-        F.sum("cb").over(wcum).alias("f2"),
-        F.sum("ca").over(wall).cast("bigint").alias("n1"),
-        F.sum("cb").over(wall).cast("bigint").alias("n2"),
-    )
-    num = F.abs(F.col("f1") * F.col("n2") - F.col("f2") * F.col("n1"))
-    return cum.groupBy("n1", "n2").agg(
-        F.max(num).cast("bigint").alias("ks_num"),
-        F.round(
-            F.max(num).cast("double")
-            / (F.col("n1") * F.col("n2")).cast("double"),
-            6,
-        ).alias("ks_stat"),
+    removed).
+
+    Scale: one task over the count table (:func:`_finish`) — bounded
+    by value cardinality, never by sample size."""
+    return _finish(
+        pts,
+        """
+        SELECT n1, n2, CAST(MAX(num) AS BIGINT) AS ks_num,
+               ROUND(CAST(MAX(num) AS DOUBLE) / CAST(n1 * n2 AS DOUBLE), 6)
+                   AS ks_stat
+        FROM (SELECT abs(f1 * n2 - f2 * n1) AS num, n1, n2
+              FROM (SELECT SUM(ca) OVER cum AS f1, SUM(cb) OVER cum AS f2,
+                           CAST(SUM(ca) OVER () AS BIGINT) AS n1,
+                           CAST(SUM(cb) OVER () AS BIGINT) AS n2
+                    FROM {pts}
+                    WINDOW cum AS (ORDER BY v ROWS BETWEEN UNBOUNDED
+                                   PRECEDING AND CURRENT ROW)))
+        GROUP BY n1, n2
+        """,
     )
 
 
@@ -125,120 +139,78 @@ def psi_from_merged(pts: DataFrame, bins: int = 10) -> DataFrame:
     producer lands here directly, the ks_from_merged discipline).
 
     Binning: cut points are the EXACT reference quantiles — cut_i =
-    min v with cumulative reference count >= ceil(i*n1/bins) — so
-    both engines derive identical bins from integer rank arithmetic
-    (no percentile interpolation); rows with ca = 0 contribute no
-    cumulative mass, so live-only values never move a cut. Bin
-    membership is assigned ONCE per distinct value and both sides
-    aggregate off that single pass. An EMPTY reference yields no
-    cuts and every value lands in bin 1 (left join, not a
-    cross-join that would annihilate the live side — review-
-    flagged), so the verdict is maximal drift, never a silent
-    'stable'. Add-1 smoothing keeps empty bins finite. Determinism:
-    each bin's term is a fixed chain of IEEE ops (two one-division
-    proportions, one pinned-to-1e-5 ratio ln whose cross-products
-    multiply as DOUBLES — BIGINT products would wrap at ~4e9-row
-    sides, the TextRank overflow class), and the running psi
-    accumulates in BIN ORDER via a cumulative window — an unordered
-    float SUM would be shuffle-order dependent. Output: one row per
-    bin (ref_n, live_n, term, psi_cum); the last bin's psi_cum IS
-    the PSI.
+    min non-NULL v with cumulative reference count >= ceil(i*n1/bins),
+    i = 1..bins-1 — so both engines derive identical bins from
+    integer rank arithmetic (no percentile interpolation); rows with
+    ca = 0 contribute no cumulative mass, so live-only values never
+    move a cut. A value's bin is 1 + #{i : v > cut_i}, and v > cut_i
+    holds exactly when the running reference count of the previous
+    non-NULL value, P, is >= ceil(i*n1/bins), i.e. when
+    i <= P*bins div n1: bin = 1 + least(bins-1, P*bins div n1), with
+    no cut table and no join. NULL and the smallest non-NULL value
+    have no previous value and land in bin 1. An EMPTY reference
+    (n1 = 0) makes every threshold 0 and every cut the smallest
+    non-NULL value, so NULL and that value land in bin 1 and every
+    larger value in bin ``bins``: the live mass is never dropped and
+    the verdict is drift, never a silent 'stable'. ``bins = 1`` has
+    no cuts: every value lands in the one bin; ``bins`` < 1 raises.
+    Add-1 smoothing keeps empty bins finite. Determinism: each bin's
+    term is a fixed chain of IEEE ops (two one-division proportions,
+    one pinned-to-1e-5 ratio ln whose cross-products multiply as
+    DOUBLES — BIGINT products would wrap at ~4e9-row sides, the
+    TextRank overflow class), and the running psi accumulates in BIN
+    ORDER via a cumulative window — an unordered float SUM would be
+    shuffle-order dependent. Output: one row per bin (ref_n, live_n,
+    term, psi_cum), bins with no mass included (the spine is
+    ``sequence(1, bins)`` looked up in a bin -> counts map); the last
+    bin's psi_cum IS the PSI.
 
-    Scale: everything runs over value-count / ``bins``-row tables;
-    the cut table is ``bins - 1`` rows and broadcasts."""
-    wcum = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    Scale: one task over the count table (:func:`_finish`) — bounded
+    by value cardinality, never by sample size; everything after the
+    bin assignment is ``bins`` rows."""
+    if bins < 1:
+        raise ValueError(f"bins must be >= 1, got {bins}")
+    return _finish(
+        pts,
+        f"""
+        WITH w AS (
+            SELECT v, ca, cb, SUM(ca) OVER () AS n1, MIN(v) OVER () AS v0,
+                   SUM(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
+                                 PRECEDING AND CURRENT ROW) - ca AS prev_cum
+            FROM {{pts}}),
+        per_bin AS (
+            SELECT CAST(1 + CASE WHEN v IS NULL OR v = v0 THEN 0
+                                 WHEN n1 = 0 THEN {bins - 1}
+                                 ELSE least({bins - 1}, prev_cum * {bins} div n1)
+                            END AS INT) AS bin,
+                   SUM(ca) AS ref_n, SUM(cb) AS live_n
+            FROM w GROUP BY 1),
+        m AS (
+            SELECT map_from_entries(collect_list(
+                       struct(bin, struct(ref_n, live_n)))) AS m,
+                   COALESCE(SUM(ref_n), 0) AS n1,
+                   COALESCE(SUM(live_n), 0) AS n2
+            FROM per_bin),
+        spine AS (
+            SELECT bin, COALESCE(try_element_at(m, bin).ref_n, 0) AS ref_n,
+                   COALESCE(try_element_at(m, bin).live_n, 0) AS live_n, n1, n2
+            FROM m LATERAL VIEW explode(sequence(1, {bins})) s AS bin),
+        t AS (
+            SELECT bin, ref_n, live_n,
+                   (CAST(ref_n + 1 AS DOUBLE) / CAST(n1 + {bins} AS DOUBLE)
+                    - CAST(live_n + 1 AS DOUBLE) / CAST(n2 + {bins} AS DOUBLE))
+                   * (CAST(CAST(ROUND(log(
+                         (CAST(ref_n + 1 AS DOUBLE) * CAST(n2 + {bins} AS DOUBLE))
+                         / (CAST(live_n + 1 AS DOUBLE)
+                            * CAST(n1 + {bins} AS DOUBLE))) * 100000)
+                       AS BIGINT) AS DOUBLE) / 100000.0) AS term
+            FROM spine)
+        SELECT bin, ref_n, live_n, ROUND(term, 6) AS term,
+               ROUND(SUM(term) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
+                                     PRECEDING AND CURRENT ROW), 6) AS psi_cum
+        FROM t ORDER BY bin
+        """,
     )
-    wall = Window.partitionBy()
-    refc = pts.select(
-        "v",
-        "ca",
-        "cb",
-        F.sum("ca").over(wcum).alias("cum"),
-        F.sum("ca").over(wall).alias("n1"),
-    )
-    # cut_i = min v with cum >= ceil(i*n1/bins); ceil via (x+b-1) div b
-    cuts = (
-        refc.crossJoin(
-            F.broadcast(
-                refc.sparkSession.range(1, bins).select(
-                    F.col("id").cast("bigint").alias("i")
-                )
-            )
-        )
-        .where(F.col("cum") >= F.expr(f"(i * n1 + {bins - 1}) div {bins}"))
-        .groupBy("i")
-        .agg(F.min("v").alias("cut"))
-    )
-    vb = (
-        pts.join(F.broadcast(cuts), F.lit(True), "left")
-        .groupBy("v")
-        .agg(
-            F.first("ca").alias("ca"),
-            F.first("cb").alias("cb"),
-            (
-                F.lit(1)
-                + F.sum(
-                    F.when(F.col("v") > F.col("cut"), 1).otherwise(0)
-                )
-            )
-            .cast("int")
-            .alias("bin"),
-        )
-        .groupBy("bin")
-        .agg(F.sum("ca").alias("ref_n"), F.sum("cb").alias("live_n"))
-    )
-    allbins = (
-        pts.sparkSession.range(1, bins + 1)
-        .select(F.col("id").cast("int").alias("bin"))
-        .join(vb, "bin", "left")
-        .select(
-            "bin",
-            F.coalesce("ref_n", F.lit(0)).cast("bigint").alias("ref_n"),
-            F.coalesce("live_n", F.lit(0)).cast("bigint").alias("live_n"),
-        )
-    )
-    tot = allbins.select(
-        "bin",
-        "ref_n",
-        "live_n",
-        F.sum("ref_n").over(wall).alias("n1"),
-        F.sum("live_n").over(wall).alias("n2"),
-    )
-    p = (F.col("ref_n") + 1).cast("double") / (
-        F.col("n1") + F.lit(bins)
-    ).cast("double")
-    q = (F.col("live_n") + 1).cast("double") / (
-        F.col("n2") + F.lit(bins)
-    ).cast("double")
-    # ln(p/q) from cross-products multiplied AS DOUBLES (exact to
-    # 2^53 per factor; a BIGINT product wraps at ~4e9-row sides),
-    # pinned to 1e-5
-    lnr5 = F.round(
-        F.log(
-            (
-                (F.col("ref_n") + 1).cast("double")
-                * (F.col("n2") + F.lit(bins)).cast("double")
-            )
-            / (
-                (F.col("live_n") + 1).cast("double")
-                * (F.col("n1") + F.lit(bins)).cast("double")
-            )
-        )
-        * 100000
-    ).cast("bigint")
-    term = (p - q) * (lnr5.cast("double") / F.lit(100000.0))
-    wbin = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = tot.select("bin", "ref_n", "live_n", term.alias("__term"))
-    return out.select(
-        "bin",
-        "ref_n",
-        "live_n",
-        F.round(F.col("__term"), 6).alias("term"),
-        F.round(F.sum("__term").over(wbin), 6).alias("psi_cum"),
-    ).orderBy("bin")
 
 
 def _ln5(c) -> F.Column:

@@ -85,3 +85,18 @@ def compile_count(spark):
     """Classes Janino has compiled in this JVM so far."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def in_group(spark, group, fn):
+    """Run ``fn()`` under job group ``group``; return its result and the
+    ids of the jobs the group started, read once the listener bus has
+    drained."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

@@ -1,10 +1,15 @@
 """Drift kernels (operators/drift.py): review-flagged edge cases the
-oracle can't see — null monitored values, empty reference — plus an
-independent scipy-free KS recompute."""
+oracle can't see — null monitored values, empty reference — plus
+independent scipy-free KS and PSI recomputes, and the warm job counts
+of the drift queries."""
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from cr_data_pipeline_project_spark.operators import drift
+from cr_data_pipeline_project_spark.plans import all_queries
+
+from helpers import in_group
 
 
 def _counts(spark, vals):
@@ -47,8 +52,10 @@ def test_ks_matches_bruteforce(spark):
 def test_psi_empty_reference_signals_drift_not_stable(spark):
     """An empty reference must NOT annihilate the live side into a
     0.0 'stable' verdict (review finding: cross-join with an empty
-    cut table dropped every live row). With no cuts, all live mass
-    lands in bin 1 and PSI is large."""
+    cut table dropped every live row). With n1 = 0 every threshold
+    ceil(i*n1/bins) is 0, so every cut is the smallest value: that
+    value lands in bin 1, every larger one in the last bin, and PSI
+    is large."""
     ref = _counts(spark, [])
     live = _counts(spark, [1, 2, 3, 4, 5] * 20)
     rows = drift.psi_from_counts(ref, live).collect()
@@ -57,8 +64,89 @@ def test_psi_empty_reference_signals_drift_not_stable(spark):
     # nothing annihilated: every live row still counted somewhere
     assert sum(r["live_n"] for r in rows) == 100
     assert sum(r["ref_n"] for r in rows) == 0
+    # the 20 ones in bin 1, the 80 larger values in bin 10
+    assert [r["live_n"] for r in rows] == [20] + [0] * 8 + [80]
     psi = by_bin[10]["psi_cum"]
     assert psi > 0.25, psi  # 'shifted' verdict, not silent stable
+
+
+def _psi_bruteforce(table, bins):
+    """PSI rows (bin, ref_n, live_n, term, psi_cum) recomputed in plain
+    Python from ``{v: (ca, cb)}`` by the cut-table definition: cut_i =
+    min non-NULL v with cumulative reference count (NULL first) >=
+    ceil(i*n1/bins), bin = 1 + #{i : v > cut_i}."""
+    import math
+
+    order = ([None] if None in table else []) + sorted(
+        v for v in table if v is not None
+    )
+    n1 = sum(ca for ca, _ in table.values())
+    cum, run = {}, 0
+    for v in order:
+        run += table[v][0]
+        cum[v] = run
+    cuts = []
+    for i in range(1, bins):
+        t = -(-i * n1 // bins)
+        hits = [v for v in order if v is not None and cum[v] >= t]
+        if hits:
+            cuts.append(min(hits))
+    ref_n, live_n = [0] * bins, [0] * bins
+    for v, (ca, cb) in table.items():
+        b = 0 if v is None else sum(1 for c in cuts if v > c)
+        ref_n[b] += ca
+        live_n[b] += cb
+    n1, n2 = sum(ref_n), sum(live_n)
+    out, psi = [], 0.0
+    for b in range(bins):
+        p = (ref_n[b] + 1) / (n1 + bins)
+        q = (live_n[b] + 1) / (n2 + bins)
+        x = math.log(((ref_n[b] + 1) * (n2 + bins)) / ((live_n[b] + 1) * (n1 + bins)))
+        lnr5 = math.copysign(math.floor(abs(x) * 100000 + 0.5), x)  # HALF_UP
+        term = (p - q) * (lnr5 / 100000.0)
+        psi += term
+        out.append((b + 1, ref_n[b], live_n[b], term, psi))
+    return out
+
+
+def test_psi_matches_bruteforce(spark):
+    """An independent recompute of every PSI row over random merged
+    count tables: a NULL value, live-only values (ca = 0), cumulative
+    counts that tie with one another and land on the thresholds, at
+    2 and 10 bins."""
+    import random
+
+    rng = random.Random(11)
+    for trial in range(6):
+        table = {}
+        for v in rng.sample(range(-20, 40), rng.randrange(5, 30)):
+            table[v] = (rng.choice([0, 0, 1, 2, 5]), rng.randrange(0, 6))
+        table[None] = (rng.randrange(0, 4), rng.randrange(0, 4))
+        pts = spark.createDataFrame(
+            [(v, ca, cb) for v, (ca, cb) in table.items()],
+            "v: long, ca: bigint, cb: bigint",
+        )
+        for bins in (2, 10):
+            got = drift.psi_from_merged(pts, bins).collect()
+            want = _psi_bruteforce(table, bins)
+            assert [(r["bin"], r["ref_n"], r["live_n"]) for r in got] == [
+                w[:3] for w in want
+            ], (trial, bins)
+            for r, (_, _, _, term, psi) in zip(got, want):
+                assert abs(r["term"] - term) <= 1e-6, (trial, bins, r, term)
+                assert abs(r["psi_cum"] - psi) <= 1e-6, (trial, bins, r, psi)
+
+
+def test_psi_one_bin_holds_everything(spark):
+    """``bins = 1`` has no cut: every value, NULL included, lands in
+    the one bin, so both sides' shares are 1 and PSI is 0. Fewer
+    than one bin is an error, not an empty or reversed bin spine."""
+    ref = _counts(spark, [1, 2, 2, None])
+    live = _counts(spark, [5, 6, None, None, 7])
+    rows = [tuple(r) for r in drift.psi_from_counts(ref, live, bins=1).collect()]
+    assert rows == [(1, 4, 5, 0.0, 0.0)]
+    with pytest.raises(ValueError):
+        drift.psi_from_counts(ref, live, bins=0)
 
 
 def test_psi_identical_distributions_near_zero(spark):
@@ -80,6 +168,29 @@ def test_psi_detects_shift(spark):
     rows = drift.psi_from_counts(ref, live).collect()
     psi = {r["bin"]: r for r in rows}[10]["psi_cum"]
     assert psi > 0.25, psi
+
+
+@pytest.mark.parametrize(
+    "name, most",
+    [
+        ("q177_ks_source_drift", 2),
+        ("q182_psi_drift", 2),
+        ("q213_streaming_psi_snapshot", 3),
+    ],
+)
+def test_drift_finish_runs_one_job(spark, sf_dir, name, most):
+    """A warm drift query's plan runs the shuffle-map job of its count
+    aggregate (q213: also the live partials' sum) and ONE job for the
+    finish: the finish plans no join, no broadcast and no exchange of
+    its own. The cut-table form ran 10 jobs for q182 and 12 for
+    q213. Building the frame is left out: q213's two parquet reads
+    each start a schema job there."""
+    build = all_queries()[name]
+    build(spark, sf_dir).collect()  # cold: q213 streams its partials here
+    df = build(spark, sf_dir)
+    rows, jobs = in_group(spark, f"drift-jobs-{name}", df.collect)
+    assert rows
+    assert len(jobs) <= most, (name, len(jobs))
 
 
 def test_unigram_kl_zero_for_identical_groups(spark):

@@ -17,6 +17,8 @@ from pyspark.sql import types as T
 import cr_data_pipeline_project_spark as pkg
 from cr_data_pipeline_project_spark.session import local_frame
 
+from helpers import in_group
+
 NOT_NULL = T.StructType([
     T.StructField("id", T.StringType(), False),
     T.StructField("n", T.LongType(), True),
@@ -77,15 +79,15 @@ def test_naive_timestamp_keeps_host_local_meaning(spark, monkeypatch):
 
 
 def test_collect_starts_no_job(spark):
-    sc = spark.sparkContext
-    sc.setJobGroup("local-frame-probe", "local_frame")
-    try:
-        df = local_frame(spark, [(i, str(i)) for i in range(5)], "a int, b string")
-        assert len(df.collect()) == 5
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    assert list(sc.statusTracker().getJobIdsForGroup("local-frame-probe")) == []
+    rows, jobs = in_group(
+        spark,
+        "local-frame-probe",
+        lambda: local_frame(
+            spark, [(i, str(i)) for i in range(5)], "a int, b string"
+        ).collect(),
+    )
+    assert len(rows) == 5
+    assert jobs == []
 
 
 @pytest.mark.parametrize("rows", [[("x",)], [(1, 2)], [(1.5,)]])

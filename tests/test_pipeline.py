@@ -52,6 +52,7 @@ from helpers import (
     card_row,
     clan_row,
     compile_count,
+    in_group,
     player_row,
     write_battlelog_json,
 )
@@ -223,15 +224,14 @@ def test_written_match_view_id_is_int64(lifecycle):
 
 def test_read_starts_no_job(spark, lifecycle):
     lake, _, _ = lifecycle
-    sc = spark.sparkContext
-    sc.setJobGroup("lake-read-probe", "Lake.read")
-    try:
+
+    def read_all():
         frames = [lake.read(n) for n in pipeline.FACTS + pipeline.DIMS]
         frames.append(lake.read("players", version=lake.current_version("players")))
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    assert list(sc.statusTracker().getJobIdsForGroup("lake-read-probe")) == []
+        return frames
+
+    frames, jobs = in_group(spark, "lake-read-probe", read_all)
+    assert jobs == []
     # declared columns, partition column last
     want = [f.name for f in schemas.MATCHES if f.name != "season_id"]
     assert frames[0].columns == want + ["season_id"]
@@ -276,21 +276,6 @@ def _stage_lines(log):
     return out
 
 
-def _in_group(spark, group, fn):
-    """Run ``fn()`` under job group ``group``; return its result and the
-    ids of the jobs the group started, read once the listener bus has
-    drained."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_cards_null_elixir_coerced(spark, tmp_path):
     lake = pipeline.Lake(spark, os.path.join(str(tmp_path), "lake"))
     ins = _inputs(spark, tmp_path)
@@ -298,7 +283,7 @@ def test_cards_null_elixir_coerced(spark, tmp_path):
         [("99", "mystery", "epic", None, True)], schemas.CARDS
     )
     log_dir = os.path.join(str(tmp_path), "logs")
-    _, run_jobs = _in_group(
+    _, run_jobs = in_group(
         spark, "run-log-probe",
         lambda: pipeline.run_etl(spark, lake, **ins, **CAL, log_dir=log_dir),
     )
@@ -320,7 +305,7 @@ def test_cards_null_elixir_coerced(spark, tmp_path):
     assert sum(jobs for *_, jobs in stages.values()) == len(run_jobs)
 
     # a purge run logs a purge line, after the stages it reads
-    _, run_jobs = _in_group(
+    _, run_jobs = in_group(
         spark, "run-log-probe-purge",
         lambda: pipeline.run_etl(
             spark, lake, **ins, failed_players=["#GONE"], **CAL, log_dir=log_dir

@@ -66,7 +66,6 @@ NESTED_LOOP_OK = {
     "q169_daily_autocorrelation",  # 7-row lag-spine literal broadcast
     "q172_dsir_importance",  # 1-row corpus-totals (R, T) broadcast
     "q180_pmi_collocations",  # 1-row corpus-totals (N, M) broadcast
-    "q182_psi_drift",  # 9-row quantile-cut + 10-row bin-spine broadcasts
     "q183_semantic_decontamination",  # benchmark probe-set broadcast (q108 posture)
     "q186_important_part_values",  # 1-row nation-total broadcast
     "q189_source_kl_divergence",  # 1-row vocab-scalars broadcast
@@ -77,7 +76,6 @@ NESTED_LOOP_OK = {
     "q207_value_welch_ttest",  # 1-row moment-totals broadcast (q101 posture)
     "q209_chisq_source_lang",  # 1-row grand-total broadcast (q101 posture)
     "q211_rfm_segmentation",  # 1-row quartile-cuts broadcast (q101 posture)
-    "q213_streaming_psi_snapshot",  # q182's 9-row cut + 10-row bin-spine broadcasts
     "q216_vocab_overlap_matrix",  # #sources²-bounded pair-spine broadcast
     "q217_heaps_vocab_growth",  # 1-row corpus-size broadcasts (q101 posture)
     "q222_revenue_concentration",  # 1-row quartile-cut + total broadcasts (q211 posture)
