@@ -7,9 +7,13 @@ driver collect overhead). A warm-up pass primes the JVM/codegen; the
 reported number is the post-warmup run, which is what a resident
 cluster would see.
 
-A pinned calibration aggregate (lineitem group-by — never changes
-with the query surface) is timed at both ends of every sweep; its
-ratio to the previous run's calibration estimates host drift, and
+Measurement goes through the benchmark's own code in ``perfbench/``
+(imported by path): every timed run is a ``build`` phase and a
+``sink`` phase of ``tracing.Tracer``, and the per-layer fields of each
+query's kept run (plan building, eager jobs, execution) go to the
+detail file and the history record under ``layers``. The host-speed
+probe is ``yardstick.measure``, read at both ends of every sweep; its
+ratio to the previous run's reading estimates host drift, and
 regression WARNs compare drift-NORMALIZED times (round-9 totals
 swung 209.8→251.4 s with zero code change — raw ratios manufacture
 WARNs a later round must re-litigate).
@@ -22,12 +26,43 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "perfbench"))
 
-from cr_data_pipeline_project_spark.plans import all_queries
-from cr_data_pipeline_project_spark.session import get_session
+import yardstick  # noqa: E402
+from stats import median  # noqa: E402
+from tracing import PER_LAYER, Tracer  # noqa: E402
+
+from cr_data_pipeline_project_spark.plans import all_queries  # noqa: E402
+from cr_data_pipeline_project_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Probe version of ``calib``: 3 = median of ``yardstick.measure``. A
+# record of another version is never a drift baseline (v2 timed a
+# lineitem group-by, v1 took a min-of-3 of it).
+CALIB_V = 3
+
+# Per-layer fields of a query op, as perfbench names them. Catalyst's
+# planning time is left out: the no-op write plans its own
+# QueryExecution, and reading a plan time from Python means planning
+# the frame a second time inside the timed window. That time stays in
+# ``exec.sink_s`` and ``exec.idle_s``.
+LAYER_FIELDS = (
+    "plans.build_s", "plans.py4j_calls", "catalog.table_calls",
+    "operators.eager_jobs", "operators.eager_s",
+) + tuple(k for k in PER_LAYER if k.startswith("exec."))
+
+# Spark's status store keeps the last 1,000 jobs and 1,000 stages (its
+# defaults) and drops the oldest 10% when full. Every kept run waiting
+# to be read must still be there when it is, so the pending runs are
+# read once the stages started since the first of them pass this
+# budget (each job starts at least one new stage, so jobs stay inside
+# it too). One read per batch, not per query: each read first waits
+# for the listener bus. The heaviest query at sf0.01 starts 216
+# stages in its three runs.
+STAGE_BUDGET = 500
 
 
 def _sf_from_dir(d: str) -> float:
@@ -48,49 +83,83 @@ def _compile_count(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def _timed_run(spark, build) -> tuple[float, int]:
+def _timed_run(spark, build, tracer) -> tuple[float, int]:
     """(wall seconds, classes compiled) of one builder call + sink.
     Builder invocation is INSIDE the timed window: iterative operators
     (q66 connected components) run actions while building, and that
-    compute is part of the query. The compile counter is read outside
-    it."""
+    compute is part of the query. Each half runs as a tracer phase
+    (its own job group: two py4j calls); the compile counter is read
+    outside the window."""
     c0 = _compile_count(spark)
     t0 = time.time()
-    run_query(build(spark, SF_DIR))
+    with tracer.phase("build"):
+        df = build(spark, SF_DIR)
+    with tracer.phase("sink"):
+        run_query(df)
     wall = time.time() - t0
     return wall, _compile_count(spark) - c0
 
 
-def _calibration_time(spark) -> float:
-    """Fixed host-speed probe (round-9 verdict: totals swung
-    209.8→251.4 s with zero code change, making every per-query WARN
-    ambiguous). A pinned lineitem aggregate — never changes with the
-    query surface; the ratio of this run's probe to the previous
-    run's probe estimates host drift, and WARN ratios are computed
-    on drift-normalized times.
+def _best_of(spark, tracer, name, build) -> tuple[float, int, dict]:
+    """(wall, compiles, tracer span) of the fastest of three runs:
+    steady-state compute time (what a resident cluster sees), not
+    first-run codegen/file-listing noise nor driver-host contention
+    spikes (round-3 verdict: 2 runs let one noisy host window
+    manufacture 3× outliers on trivial plans)."""
+    best = None
+    for i in range(3):
+        with tracer.op(name, i):
+            wall, compiles = _timed_run(spark, build, tracer)
+        run = (wall, compiles, tracer.spans.pop())
+        if best is None or run[:2] < best[:2]:
+            best = run
+    return best
 
-    MEDIAN of 5 runs, not min: the probe is sub-second, and a single
-    lucky run would set a too-fast baseline that inflates every
-    normalized ratio (observed: one 0.147 s outlier among ~0.26 s
-    runs turned raw-1.0× queries into WARNs before this was a
-    median)."""
-    from pyspark.sql import functions as F
 
-    samples = []
-    for _ in range(5):
-        df = (
-            spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum("l_quantity"),
-                F.sum("l_extendedprice"),
-                F.count("*"),
-            )
-        )
-        t0 = time.time()
-        run_query(df)
-        samples.append(time.time() - t0)
-    return round(sorted(samples)[2], 3)
+class _Layers:
+    """Per-layer fields of each query's kept run, read from Spark's
+    status store in batches that stay inside ``STAGE_BUDGET``."""
+
+    def __init__(self, tracer, cores: int) -> None:
+        self.tracer, self.cores = tracer, cores
+        self.pending: dict[str, dict] = {}
+        self.fields: dict[str, dict[str, float]] = {}
+        self.first = self.last = 0  # stage-id marks
+
+    def _stage_mark(self, span: dict) -> int:
+        """Highest stage id of the span's sink jobs the store holds,
+        read without waiting for the listener bus. The kept run may be
+        up to two runs before its query's last, so a batch can pass
+        the budget by that much (at most 150 stages at sf0.01)."""
+        jobs = self.tracer._jobs(span["phases"][-1]["group"])
+        return max([s["id"] for j in jobs for s in j["stages"]], default=self.last)
+
+    def keep(self, name: str, span: dict) -> None:
+        if not self.pending:
+            self.first = self.last
+        self.pending[name] = span
+        self.last = self._stage_mark(span)
+        if self.last - self.first >= STAGE_BUDGET:
+            self.flush()
+
+    def flush(self) -> None:
+        if not self.pending:
+            return
+        self.tracer.spans = list(self.pending.values())
+        self.tracer.collect()
+        for name, span in self.pending.items():
+            self.tracer.spans = [span]
+            m = self.tracer.layer_metrics([], self.cores)
+            self.fields[name] = {k: round(m[k], 6) for k in LAYER_FIELDS}
+        self.tracer.spans, self.pending = [], {}
+
+
+def _calibration(spark) -> float:
+    """Host-speed probe: median of ``yardstick.measure`` (a fixed tiny
+    job that runs no engine code, perfbench's choice among several
+    probes). The median, not the min: a single lucky run would set a
+    too-fast baseline that inflates every normalized ratio."""
+    return round(median(yardstick.measure(spark)), 4)
 
 
 def main() -> None:
@@ -102,6 +171,12 @@ def main() -> None:
     # round 5 — keep the query + oracle row (it still attests the
     # one-shot API), but drop the redundant, misleading timing.
     qs.pop("q84_incremental_neardup", None)
+    # after all_queries(): the tracer's catalog.table wrapper replaces
+    # the name every imported plan module holds
+    tracer = Tracer()
+    tracer.install(spark)
+    tracer.recording = True
+    layers = _Layers(tracer, spark.sparkContext.defaultParallelism)
 
     # warm-up: JVM + codegen + parquet footer caches
     warm = qs["q01_pricing_summary"](spark, SF_DIR)
@@ -110,20 +185,20 @@ def main() -> None:
     # host-speed probe at both ends of the sweep (the sweep takes
     # minutes; load can arrive mid-run) — the min is this run's
     # calibration time
-    calib_pre = _calibration_time(spark)
+    calib_pre = _calibration(spark)
 
-    # three measured runs per query, report the min: steady-state
-    # compute time (what a resident cluster sees), not first-run
-    # codegen/file-listing noise nor driver-host contention spikes
-    # (round-3 verdict: 2 runs let one noisy host window manufacture
-    # 3× outliers on trivial plans).
+    # three measured runs per query, report the min (_best_of).
     # codegen_compiles: classes compiled during the kept run — 0 once
     # the query's classes sit in the codegen cache (session.py).
     times: dict[str, float] = {}
     compiles: dict[str, int] = {}
     for name in sorted(qs):
-        best, compiles[name] = min(_timed_run(spark, qs[name]) for _ in range(3))
+        best, compiles[name], span = _best_of(spark, tracer, name, qs[name])
         times[name] = round(best, 3)
+        layers.keep(name, span)
+    # a re-measured query's kept run is read at once (below): the
+    # runs that do not beat the kept time pass no budget check
+    layers.flush()
 
     # Re-measure suspected regressions before warning: min-of-3 still
     # inflates when the host is loaded for the whole 3-run window
@@ -131,20 +206,20 @@ def main() -> None:
     # anything that looks ≥1.5× slower gets three fresh runs at the
     # END of the sweep — a different load window. Real regressions
     # survive; contention spikes don't.
-    calib = min(calib_pre, _calibration_time(spark))
+    calib = min(calib_pre, _calibration(spark))
     prev, prev_calib, src = _load_prev()
     drift = _drift_factor(calib, prev_calib)
     for name in _regressed(times, prev, drift):
-        best, compiles[name] = min(
-            [(times[name], compiles[name])]
-            + [_timed_run(spark, qs[name]) for _ in range(3)]
-        )
-        times[name] = round(best, 3)
+        best, comp, span = _best_of(spark, tracer, name, qs[name])
+        if (best, comp) < (times[name], compiles[name]):
+            times[name], compiles[name] = round(best, 3), comp
+            layers.keep(name, span)
+            layers.flush()
 
     total = round(sum(times.values()), 3)
     _warn_regressions(times, prev, src, calib, prev_calib)
-    _append_history(times, total, calib, compiles)
-    _write_detail(times, total, calib, compiles)
+    _append_history(times, total, calib, compiles, layers.fields)
+    _write_detail(times, total, calib, compiles, layers.fields)
     print(json.dumps(_compact_report(times, total, calib)))
     spark.stop()
 
@@ -165,7 +240,7 @@ def _compact_report(times: dict[str, float], total: float, calib: float) -> dict
         "value": total,
         "unit": "sec",
         "calib_sec": calib,
-        "calib_v": 2,
+        "calib_v": CALIB_V,
         "queries": {},
         # placeholder at maximum rendered width so the size check
         # below bounds the FINAL line, not the pre-rollup one
@@ -189,16 +264,15 @@ def _compact_report(times: dict[str, float], total: float, calib: float) -> dict
     return report
 
 
-_DETAIL = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)),
-    "docs",
-    "metrics",
-    "bench_full_latest.json",
-)
+_DETAIL = os.path.join(HERE, "docs", "metrics", "bench_full_latest.json")
 
 
 def _write_detail(
-    times: dict[str, float], total: float, calib: float, compiles: dict[str, int]
+    times: dict[str, float],
+    total: float,
+    calib: float,
+    compiles: dict[str, int],
+    layers: dict[str, dict[str, float]],
 ) -> None:
     try:
         os.makedirs(os.path.dirname(_DETAIL), exist_ok=True)
@@ -211,6 +285,7 @@ def _write_detail(
                     "calib_sec": calib,
                     "queries": times,
                     "codegen_compiles": compiles,
+                    "layers": layers,
                     "sf": _sf_from_dir(SF_DIR),
                     # which core count produced this detail file —
                     # round-11 verdict: the 8-core scaling run
@@ -225,13 +300,15 @@ def _write_detail(
         pass
 
 
-_HISTORY = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), ".bench_history.jsonl"
-)
+_HISTORY = os.path.join(HERE, ".bench_history.jsonl")
 
 
 def _append_history(
-    times: dict[str, float], total: float, calib: float, compiles: dict[str, int]
+    times: dict[str, float],
+    total: float,
+    calib: float,
+    compiles: dict[str, int],
+    layers: dict[str, dict[str, float]],
 ) -> None:
     """Append this run to the local history file (the driver's
     BENCH_r*.json wrapper truncates per-query numbers, so the warner
@@ -248,13 +325,13 @@ def _append_history(
                         # manufactured 4 spurious WARNs)
                         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
                         "total": total,
-                        # calib_v 2 = median-of-5 probe; v1 (min-of-3)
-                        # records are ignored as normalization
-                        # baselines — a lucky min poisons the ratio
+                        # records of another calib_v are ignored as
+                        # normalization baselines (CALIB_V)
                         "calib": calib,
-                        "calib_v": 2,
+                        "calib_v": CALIB_V,
                         "queries": times,
                         "codegen_compiles": compiles,
+                        "layers": layers,
                     }
                 )
                 + "\n"
@@ -272,12 +349,13 @@ def _parse_driver_bench(
     (round-11 finding: reading the top level returned nothing, so a
     fresh clone silently lost the driver baseline); a bare record
     (the line itself, as in local history) also works. Returns
-    ({}, None) on a scale-factor mismatch; calib only from
-    ``calib_v`` 2 records (v1 min-of-3 probes poison the ratio)."""
+    ({}, None) on a scale-factor mismatch; calib only from records
+    of the current probe version (``CALIB_V``): another probe's
+    reading is no drift baseline."""
     inner = rec.get("parsed") or rec
     if not isinstance(inner, dict) or inner.get("sf") != sf:
         return {}, None
-    calib = inner.get("calib_sec") if inner.get("calib_v") == 2 else None
+    calib = inner.get("calib_sec") if inner.get("calib_v") == CALIB_V else None
     return inner.get("queries") or {}, calib
 
 
@@ -306,14 +384,14 @@ def _load_prev() -> tuple[dict[str, float], float | None, str | None]:
                 ):
                     prev, src = rec["queries"], os.path.basename(_HISTORY)
                     prev_calib = (
-                        rec.get("calib") if rec.get("calib_v") == 2 else None
+                        rec.get("calib") if rec.get("calib_v") == CALIB_V else None
                     )
     except (OSError, ValueError):
         pass
     if prev:
         return prev, prev_calib, src
     benches = sorted(
-        glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json")),
+        glob.glob(os.path.join(HERE, "BENCH_r*.json")),
         key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
     )
     if not benches:
@@ -342,9 +420,9 @@ def _drift_factor(calib: float, prev_calib: float | None) -> float:
     previous run's, clamped to [1.0, 3.0]. The floor is 1.0 — not
     symmetric — because normalization exists to EXCUSE a uniformly
     slow host window, never to manufacture WARNs on a fast one: the
-    probe's own noise (±40% observed on a ~0.25 s aggregate) would
-    otherwise inflate raw-1.0× queries past the warn threshold
-    whenever the probe got lucky. A real regression still fires on
+    probe's own noise (±40% observed on the earlier ~0.25 s lineitem
+    probe) would otherwise inflate raw-1.0× queries past the warn
+    threshold whenever the probe got lucky. A real regression still fires on
     its raw ratio. The 3.0 cap keeps a calibration fluke from
     hiding a huge regression. 1.0 when the previous record predates
     the calibration protocol."""

@@ -97,14 +97,20 @@ def ks_from_merged(pts: DataFrame) -> DataFrame:
     the two-table entry would reintroduce the double scan a review
     removed).
 
+    Empty side: ``ks_stat`` is NULL when ``n1 * n2 = 0`` (one side
+    holds no rows: there is no statistic to report, and a monitor
+    must not crash on it), while ``ks_num`` is still the max of
+    |F1*n2 - F2*n1|, as DuckDB's twin computes it (its DOUBLE
+    division by 0 is NULL). Two empty sides give no row.
+
     Scale: one task over the count table (:func:`_finish`) — bounded
     by value cardinality, never by sample size."""
     return _finish(
         pts,
         """
         SELECT n1, n2, CAST(MAX(num) AS BIGINT) AS ks_num,
-               ROUND(CAST(MAX(num) AS DOUBLE) / CAST(n1 * n2 AS DOUBLE), 6)
-                   AS ks_stat
+               ROUND(CAST(MAX(num) AS DOUBLE)
+                     / CAST(NULLIF(n1 * n2, 0) AS DOUBLE), 6) AS ks_stat
         FROM (SELECT abs(f1 * n2 - f2 * n1) AS num, n1, n2
               FROM (SELECT SUM(ca) OVER cum AS f1, SUM(cb) OVER cum AS f2,
                            CAST(SUM(ca) OVER () AS BIGINT) AS n1,

@@ -6513,8 +6513,11 @@ def _materialized_drift_partials(
     (streaming/incremental.py:streaming_value_count_partials) over a
     3-file source with maxFilesPerTrigger=1 — ≥2 real micro-batches,
     so the snapshot queries attest merge-across-batches, not a
-    degenerate single-batch copy."""
+    degenerate single-batch copy. The lake lives in a temp dir that
+    is removed at interpreter exit."""
+    import atexit
     import os
+    import shutil
     import tempfile
 
     from ..operators.drift import value_counts
@@ -6524,6 +6527,7 @@ def _materialized_drift_partials(
     if paths is not None:
         return paths
     base = tempfile.mkdtemp(prefix="sg_drift_lake_")
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
     docs = table(spark, "documents", sf_dir)
     word = lambda df: df.select(  # noqa: E731
         F.explode(F.split("text", " ")).alias("w")

@@ -49,6 +49,18 @@ def test_ks_matches_bruteforce(spark):
     assert row["ks_stat"] == round(want / (n1 * n2), 6)
 
 
+def test_ks_empty_side_gives_null_statistic(spark):
+    """One side with no rows: n1 * n2 = 0, so there is no statistic.
+    ``ks_stat`` is NULL (DuckDB's twin divides a DOUBLE by 0 to NULL)
+    and ``ks_num`` is still the max, 0, in either order; the finish
+    must not raise DIVIDE_BY_ZERO. Two empty sides give no row."""
+    full, empty = _counts(spark, [1, 2]), _counts(spark, [])
+    for a, b, n1, n2 in ((full, empty, 2, 0), (empty, full, 0, 2)):
+        rows = drift.ks_from_counts(a, b).collect()
+        assert [tuple(r) for r in rows] == [(n1, n2, 0, None)]
+    assert drift.ks_from_counts(empty, empty).collect() == []
+
+
 def test_psi_empty_reference_signals_drift_not_stable(spark):
     """An empty reference must NOT annihilate the live side into a
     0.0 'stable' verdict (review finding: cross-join with an empty
@@ -253,3 +265,33 @@ def test_unigram_kl_matches_direct_formula(spark):
             pc = (corpus[w] + 1) / (n_c + V)
             kl += pg * math.log(pg / pc)
         assert abs(got[g] - kl) < 1e-4, (g, got[g], kl)
+
+
+def test_drift_lake_is_removed_at_exit(tmp_path, sf_dir):
+    """q212-q214 stream their partials into a temp-dir lake built once
+    per process; a child process that builds q212 and exits leaves no
+    ``sg_drift_lake_*`` dir behind."""
+    import os
+    import subprocess
+    import sys
+
+    child = (
+        "import glob, sys, tempfile\n"
+        "from cr_data_pipeline_project_spark.plans import all_queries\n"
+        "from cr_data_pipeline_project_spark.session import get_session\n"
+        "spark = get_session('drift-lake', master='local[2]',"
+        " shuffle_partitions=2)\n"
+        "all_queries()['q212_streaming_ks_snapshot'](spark, sys.argv[1])\n"
+        "print(len(glob.glob(tempfile.gettempdir() + '/sg_drift_lake_*')))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", child, sf_dir],
+        cwd=repo,
+        env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert out.split()[-1] == "1"  # the lake existed while the child ran
+    assert list(tmp_path.glob("sg_drift_lake_*")) == []
