@@ -601,18 +601,12 @@ def _decode_scan(payload, pos, sof, scan, qtables, dc_tables, ac_tables, dri):
 
 
 def decode_jpeg_features(payload: bytes) -> dict:
-    """REAL baseline JPEG decode → the shared image feature contract
-    (per-channel means + Rec.601 luma in [0, 1]); grayscale
-    replicates its mean, matching the PNG kernel."""
-    w, h, ch, grid = _parse_jpeg(payload)
-    img = grid.astype(np.float64) / 255.0
-    means = img.mean(axis=(0, 1))
-    if ch == 1:
-        rgb = [float(means[0])] * 3
-    else:
-        rgb = [float(means[0]), float(means[1]), float(means[2])]
-    luma = 0.299 * rgb[0] + 0.587 * rgb[1] + 0.114 * rgb[2]
-    return {"width": w, "height": h, "feat": [*rgb, float(luma)]}
+    """REAL baseline JPEG decode → the image feature contract of
+    ``multimodal`` (its module docstring: per-channel means + Rec.601
+    luma in [0, 1]; a gray JPEG follows the gray rule)."""
+    from . import multimodal
+
+    return multimodal._image_features("image/jpeg", payload)
 
 
 def synth_jpeg(width: int, height: int, value: int, subsample: str = "444") -> bytes:

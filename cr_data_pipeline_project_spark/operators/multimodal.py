@@ -34,6 +34,59 @@ Two tiers of decode kernels:
   seam. Everything Spark-side is identical and tested: schemas,
   batch iteration, partition sizing, UDF signatures.
 
+
+One per-row harness
+-------------------
+Each of the seven DataFrame entry points (:func:`extract_features`,
+:func:`resize_media`, :func:`decode_media_features`,
+:func:`gif_frame_features`, :func:`wav_frame_features`,
+:func:`mp4_jpeg_frame_features`, :func:`media_embedding`) is one
+call of :func:`_per_row`, the module's only ``mapInPandas``. It walks
+each Arrow batch's rows in input order and calls the entry point's
+kernel once per row; a kernel returns one output row, or many rows
+as columns (the frame kernels). Per-row capture by contract: a
+kernel that raises — anything, since a hostile header can raise far
+outside ``ValueError`` (numpy ``OverflowError`` on absurd dims) —
+yields ONE row whose error column is ``f"{type(exc).__name__}:
+{exc}"`` cut to 200 characters, carrying the row's head columns
+(``media_id``; ``media_type``, ``n_bytes`` or the original payload
+where the schema has them) and NULL elsewhere. One bad blob never
+kills the batch — the property a 100 TB crawl decode job cannot live
+without. Payload bytes never shuffle: every entry point is one
+narrow map stage; shuffle the (bounded) feature rows downstream.
+
+One image-format table
+----------------------
+``_IMAGE_FORMATS`` maps each image mime type (``image/ppm``, ``pgm``,
+``bmp``, ``png``, ``gif``, ``jpeg``) to its parser — payload →
+``(grid, maxval, palette)``: the sample grid, its full-scale value
+and, for GIF, the color table the grid indexes — and its encoder,
+the parser's inverse. Written once over the table:
+
+- the feature contract (:func:`_image_features`, behind every
+  ``decode_<format>_features``): per-channel means plus Rec.601 luma,
+  all in [0, 1]; alpha is dropped;
+- the resize (:func:`_resize_image`, behind every ``resize_<format>``
+  and :func:`resize_media`): the nearest-neighbor center rule
+  ``floor((i+0.5)·src/dst)`` clamped (:func:`_nearest`), re-encoded
+  in the source format (PNG keeps its color type, a gray JPEG stays
+  gray, GIF resizes its index grid against the unchanged color
+  table — no quantization loss);
+- the pixel lookup behind the band signature
+  (:func:`_image_pixels`) and the dispatch of
+  :func:`decode_media_features` and :func:`resize_media`.
+
+
+Three rules every path shares
+-----------------------------
+- Error text is cut at 200 characters in every entry point.
+- A gray image's features (PGM, gray and gray+alpha PNG, gray JPEG)
+  are its gray mean — integer sample sum / n / maxval — in all four
+  slots: the gray mean IS the luma.
+- An audio clip's ``duration_ms`` is ``n·1000 // sr`` (floor), for
+  WAV, μ-law and MP3 alike.
+
+
 Scale notes (100 TB of media)
 -----------------------------
 - Binary payloads dominate partition size: size partitions by bytes,
@@ -47,9 +100,12 @@ Scale notes (100 TB of media)
   to the blob so pruning/filtering never touches payload bytes.
 """
 
+
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -63,6 +119,32 @@ FEATURE_SCHEMA = (
     "feat array<float>"
 )
 
+DECODED_SCHEMA = (
+    "media_id long, media_type string, n_bytes long, "
+    "width int, height int, "
+    "sample_rate int, n_samples long, duration_ms int, "
+    "feat array<double>, decode_error string"
+)
+
+RESIZE_SCHEMA = MEDIA_SCHEMA + ", resize_error string"
+
+GIF_FRAME_SCHEMA = (
+    "media_id long, frame_idx int, width int, height int, "
+    "r double, g double, b double, frame_error string"
+)
+
+MP4_FRAME_SCHEMA = GIF_FRAME_SCHEMA  # same frame-census plane
+
+FRAME_SCHEMA = (
+    "media_id long, frame_idx int, t_ms int, "
+    "rms double, zcr double, frame_error string"
+)
+
+EMBED_SCHEMA = (
+    "media_id long, media_type string, embedding array<double>, "
+    "embed_error string"
+)
+
 
 def attach_payload_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Cheap JVM-side metadata: byte length + content hash — computed
@@ -72,126 +154,6 @@ def attach_payload_meta(df: DataFrame, payload_col: str = "payload") -> DataFram
         F.octet_length(F.col(payload_col)).cast("long").alias("n_bytes"),
         F.md5(F.col(payload_col)).alias("payload_md5"),
     )
-
-
-def _image_grid(payload: bytes, mtype: str):
-    """Dispatch a binary image payload through the matching REAL
-    from-scratch decoder; returns an (H, W, C) uint8 pixel grid.
-    Shared by :func:`media_embedding` and :func:`payload_features`."""
-    from . import jpeg as jpeg_mod
-
-    if mtype == "image/ppm":
-        _, _, _, g = _parse_ppm(payload)
-        return g
-    if mtype == "image/pgm":
-        _, _, _, g = _parse_pgm(payload)
-        return g[..., None] if g.ndim == 2 else g
-    if mtype == "image/bmp":
-        return _parse_bmp(payload)[2]
-    if mtype == "image/png":
-        return _parse_png(payload)[3]
-    if mtype == "image/gif":
-        w, h, pal, idx = _parse_gif(payload)
-        return pal[idx]
-    if mtype == "image/jpeg":
-        return jpeg_mod._parse_jpeg(payload)[3]
-    raise ValueError(f"unsupported image type {mtype}")
-
-
-def payload_features(payload: bytes, media_type: str, dim: int = 8) -> list[float]:
-    """REAL ``dim``-float content signature for any payload — the
-    default featurizer (this replaced the early ``_fake_decode_
-    features`` hash stand-in once the nine from-scratch container
-    decoders landed):
-
-    - decodable images (``image/ppm|pgm|bmp|png|gif|jpeg``): full
-      decode → integer Rec.601 luma → ``dim``-bin normalized
-      histogram (the q246 band kernel);
-    - decodable audio (``audio/wav|ulaw``): full decode → rFFT power
-      spectrum → energy share per ``dim`` equal bands of [0,
-      Nyquist];
-    - anything else (text bytes, unknown containers, corrupt
-      payloads): byte-value histogram over ``dim`` equal bands of
-      [0, 256) — an honest raw-byte signature, always defined, so
-      the featurizer is total without hiding decode errors behind a
-      fake (use :func:`decode_media_features` /
-      :func:`media_embedding` when per-row error capture matters).
-
-    All outputs are L1-normalized shares. The one remaining neural
-    seam is documented at module level: there is no CLIP-style
-    learned encoder here by design.
-    """
-    import numpy as np
-
-    if payload is None:
-        raise ValueError("null payload")
-    payload = bytes(payload)
-    try:
-        if media_type in ("audio/wav", "audio/ulaw"):
-            sr, x = (
-                decode_wav_samples(payload)
-                if media_type == "audio/wav"
-                else decode_ulaw_samples(payload)
-            )
-            if len(x) < 2:
-                raise ValueError("clip too short for FFT")
-            power = np.abs(np.fft.rfft(x)) ** 2
-            edges = np.linspace(0, len(power), dim + 1).astype(int)
-            bands = np.array(
-                [power[a:b].sum() for a, b in zip(edges, edges[1:])]
-            )
-            tot = bands.sum()
-            out = (bands / tot) if tot > 0 else bands
-            return [float(v) for v in out]
-        if media_type.startswith("image/"):
-            g = _image_grid(payload, media_type).astype(np.int64)
-            if g.shape[-1] >= 3:
-                luma = (
-                    299 * g[..., 0] + 587 * g[..., 1] + 114 * g[..., 2]
-                ) // 1000
-            else:
-                luma = g[..., 0]
-            bins = np.minimum(luma * dim // 256, dim - 1)
-            hist = np.bincount(bins.reshape(-1), minlength=dim).astype(
-                np.float64
-            )
-            return [float(v) for v in hist / hist.sum()]
-    except Exception:
-        pass  # undecodable under its claimed type → raw-byte signature
-    b = np.frombuffer(payload or b"\x00", dtype=np.uint8)
-    hist = np.bincount(
-        b.astype(np.int64) * dim // 256, minlength=dim
-    ).astype(np.float64)
-    return [float(v) for v in hist / hist.sum()]
-
-
-def extract_features(df: DataFrame, dim: int = 8) -> DataFrame:
-    """Arrow-batched feature extraction over media blobs via the REAL
-    :func:`payload_features` kernel (decode where the container type
-    is one of the nine from-scratch decoders, raw-byte signature
-    otherwise). Input schema: MEDIA_SCHEMA; output: FEATURE_SCHEMA."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            feats = [
-                payload_features(p, t, dim) if p is not None else None
-                for p, t in zip(pdf["payload"], pdf["media_type"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                    "payload_md5": [
-                        __import__("hashlib").md5(p).hexdigest() if p is not None else None
-                        for p in pdf["payload"]
-                    ],
-                    "feat": feats,
-                }
-            )
-
-    return df.mapInPandas(run, FEATURE_SCHEMA)
 
 
 def frame_sample_plan(
@@ -215,42 +177,8 @@ def frame_sample_plan(
 
 
 # ------------------------------------------------------------------ #
-# REAL decode kernels (stdlib + numpy formats)                        #
+# REAL image containers (stdlib + numpy formats)                      #
 # ------------------------------------------------------------------ #
-
-DECODED_SCHEMA = (
-    "media_id long, media_type string, n_bytes long, "
-    "width int, height int, "
-    "sample_rate int, n_samples long, duration_ms int, "
-    "feat array<double>, decode_error string"
-)
-
-
-def decode_wav_features(payload: bytes) -> dict:
-    """REAL WAV/PCM decode via the stdlib ``wave`` module: parses the
-    RIFF container, extracts the int16 sample stream, and reduces it
-    to audio features — RMS energy, zero-crossing rate, peak
-    amplitude (all normalized to [-1, 1] full scale). Mono or
-    interleaved multi-channel; 16-bit PCM. The container parse is
-    :func:`decode_wav_samples` — ONE decoder feeds both the
-    clip-level features here and the frame-level featurizer."""
-    import numpy as np
-
-    sr, x = decode_wav_samples(payload)
-    n = len(x)
-    rms = float(np.sqrt(np.mean(x * x))) if len(x) else 0.0
-    zcr = (
-        float(np.mean(np.abs(np.diff(np.signbit(x).astype(np.int8)))))
-        if len(x) > 1
-        else 0.0
-    )
-    peak = float(np.max(np.abs(x))) if len(x) else 0.0
-    return {
-        "sample_rate": sr,
-        "n_samples": n,
-        "duration_ms": int(n * 1000 // sr) if sr else 0,
-        "feat": [rms, zcr, peak],
-    }
 
 
 def _parse_netpbm(payload: bytes, magic: bytes, channels: int):
@@ -313,250 +241,23 @@ def _parse_pgm(payload: bytes):
     return _parse_netpbm(payload, b"P5", 1)
 
 
-def decode_pgm_features(payload: bytes) -> dict:
-    """REAL binary-PGM (P5) grayscale decode. Feature contract
-    mirrors :func:`decode_ppm_features` with the gray mean standing
-    in for all three channel slots (gray IS the luma), so image
-    features stay shape-compatible across container formats."""
+def _netpbm_image(magic: bytes, channels: int, payload: bytes):
+    """Table parser for binary Netpbm: (grid, maxval, no palette)."""
+    _, _, maxval, grid = _parse_netpbm(payload, magic, channels)
+    return grid, maxval, None
+
+
+def _netpbm_encode(magic: bytes, grid, maxval: int, _palette=None) -> bytes:
+    """(H, W, C) grid → binary Netpbm container: ``magic`` (P6 or
+    P5), width, height, maxval, one whitespace byte, raw samples."""
     import numpy as np
 
-    width, height, maxval, grid = _parse_pgm(payload)
-    mean = float(grid.astype(np.float64).mean() / maxval)
-    return {
-        "width": width,
-        "height": height,
-        "feat": [mean, mean, mean, mean],
-    }
-
-
-def synth_pgm(width: int, height: int, value: int) -> bytes:
-    """Deterministic binary-PGM (P5) synthesizer — constant-fill
-    grayscale; :func:`synth_ppm`'s single-channel sibling."""
-    import numpy as np
-
-    px = np.full((height, width), value, dtype=np.uint8)
-    return f"P5\n{width} {height}\n255\n".encode() + px.tobytes()
-
-
-def decode_ppm_features(payload: bytes) -> dict:
-    """REAL binary-PPM (P6) image decode: header parse + numpy pixel
-    grid. Features: per-channel means and Rec.601 luma mean, all in
-    [0, 1]."""
-    import numpy as np
-
-    width, height, maxval, grid = _parse_ppm(payload)
-    img = grid.astype(np.float64) / maxval
-    means = img.mean(axis=(0, 1))
-    luma = float(0.299 * means[0] + 0.587 * means[1] + 0.114 * means[2])
-    return {
-        "width": width,
-        "height": height,
-        "feat": [float(means[0]), float(means[1]), float(means[2]), luma],
-    }
-
-
-def resize_ppm(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL image resize: decode the P6 container, nearest-neighbor
-    sample the pixel grid to (out_w × out_h), re-encode as P6 —
-    deterministic (sample index = floor((i+0.5)·src/dst), the
-    standard nearest-neighbor center rule), pure numpy slicing, no
-    external imaging library."""
-    import numpy as np
-
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"invalid target size {out_w}x{out_h}")
-    width, height, maxval, grid = _parse_ppm(payload)
-    rows = np.minimum(
-        ((np.arange(out_h) + 0.5) * height / out_h).astype(np.int64),
-        height - 1,
-    )
-    cols = np.minimum(
-        ((np.arange(out_w) + 0.5) * width / out_w).astype(np.int64),
-        width - 1,
-    )
-    out = grid[rows][:, cols]
+    h, w = grid.shape[:2]
     return (
-        f"P6\n{out_w} {out_h}\n{maxval}\n".encode()
-        + np.ascontiguousarray(out).tobytes()
+        magic
+        + f"\n{w} {h}\n{maxval}\n".encode()
+        + np.ascontiguousarray(grid).tobytes()
     )
-
-
-def resize_pgm(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL PGM resize: same nearest-neighbor center rule as
-    :func:`resize_ppm`, re-encoded as P5."""
-    import numpy as np
-
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"invalid target size {out_w}x{out_h}")
-    width, height, maxval, grid = _parse_pgm(payload)
-    rows = np.minimum(
-        ((np.arange(out_h) + 0.5) * height / out_h).astype(np.int64),
-        height - 1,
-    )
-    cols = np.minimum(
-        ((np.arange(out_w) + 0.5) * width / out_w).astype(np.int64),
-        width - 1,
-    )
-    out = grid[rows][:, cols]
-    return (
-        f"P5\n{out_w} {out_h}\n{maxval}\n".encode()
-        + np.ascontiguousarray(out).tobytes()
-    )
-
-
-RESIZE_SCHEMA = MEDIA_SCHEMA + ", resize_error string"
-
-
-def resize_media(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Arrow-batched image resize over a MEDIA_SCHEMA table:
-    ``image/ppm`` and ``image/bmp`` payloads are nearest-neighbor
-    resampled to (out_w × out_h) with width/height updated; every
-    other media type passes through untouched (a resize stage must
-    not drop the audio rows riding the same table). Corrupt payloads
-    keep their original bytes and carry the error per row — the same
-    batch-survives posture as :func:`decode_media_features`. Payload
-    bytes stay inside their partition: one narrow mapInPandas stage,
-    nothing shuffles."""
-    import pandas as pd
-
-    resizers = {
-        "image/ppm": resize_ppm,
-        "image/pgm": resize_pgm,
-        "image/bmp": resize_bmp,
-        "image/png": resize_png,
-        "image/gif": resize_gif,
-        "image/jpeg": resize_jpeg,
-    }
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            payloads, widths, heights, errs = [], [], [], []
-            for p, mt, w, h in zip(
-                pdf["payload"], pdf["media_type"], pdf["width"], pdf["height"]
-            ):
-                kernel = resizers.get(mt)
-                if kernel is None or p is None:
-                    payloads.append(p)
-                    widths.append(w)
-                    heights.append(h)
-                    errs.append(None)
-                    continue
-                try:
-                    payloads.append(kernel(bytes(p), out_w, out_h))
-                    widths.append(out_w)
-                    heights.append(out_h)
-                    errs.append(None)
-                except Exception as exc:  # per-row capture by contract
-                    # (same posture as decode_media_features: a
-                    # hostile header can raise far outside ValueError
-                    # — e.g. numpy OverflowError on absurd dims — and
-                    # one bad blob must not kill the batch)
-                    payloads.append(p)
-                    widths.append(w)
-                    heights.append(h)
-                    errs.append(f"{type(exc).__name__}: {exc}"[:200])
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["width"] = pd.array(widths, dtype="Int32")
-            out["height"] = pd.array(heights, dtype="Int32")
-            out["resize_error"] = errs
-            yield out
-
-    return df.mapInPandas(run, RESIZE_SCHEMA)
-
-
-def decode_media_features(df: DataFrame) -> DataFrame:
-    """Arrow-batched REAL decode dispatch: ``audio/wav`` payloads go
-    through the stdlib WAV parser, ``image/ppm`` through the numpy
-    PPM parser; any other media_type (or a corrupt payload) yields a
-    row with ``decode_error`` set and NULL features — per-row error
-    capture, the batch never dies on one bad blob (the property a
-    100 TB crawl decode job cannot live without).
-
-    Input: MEDIA_SCHEMA (payload + media_type); output:
-    DECODED_SCHEMA. Payload bytes never shuffle — this is a narrow
-    map stage; shuffle the (bounded) feature rows downstream."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        kernels = {
-            "audio/wav": decode_wav_features,
-            "image/ppm": decode_ppm_features,
-            "image/pgm": decode_pgm_features,
-            "image/bmp": decode_bmp_features,
-            "image/png": decode_png_features,
-            "image/gif": decode_gif_features,
-            "audio/ulaw": decode_ulaw_features,
-            "video/mp4": decode_mp4_features,
-            "image/jpeg": _decode_jpeg_features,
-            "audio/mpeg": decode_mp3_features,
-        }
-        for pdf in batches:
-            rows = []
-            for mid, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                row = {
-                    "media_id": mid,
-                    "media_type": mtype,
-                    "n_bytes": len(payload) if payload is not None else None,
-                    "width": None,
-                    "height": None,
-                    "sample_rate": None,
-                    "n_samples": None,
-                    "duration_ms": None,
-                    "feat": None,
-                    "decode_error": None,
-                }
-                kernel = kernels.get(mtype)
-                try:
-                    if kernel is None:
-                        raise ValueError(f"unsupported media_type: {mtype}")
-                    if payload is None:
-                        raise ValueError("null payload")
-                    row.update(kernel(bytes(payload)))
-                except Exception as exc:  # per-row capture by contract
-                    row["decode_error"] = f"{type(exc).__name__}: {exc}"
-                rows.append(row)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, DECODED_SCHEMA)
-
-
-def synth_wav(
-    freq_hz: float, sample_rate: int = 8000, n_samples: int = 800, amplitude: float = 0.5
-) -> bytes:
-    """Deterministic mono 16-bit PCM WAV synthesizer (a genuine WAV
-    container written by the stdlib ``wave`` module) — the test/
-    fixture source for the real decode path when no media files ship
-    with the corpus."""
-    import io
-    import wave
-
-    import numpy as np
-
-    t = np.arange(n_samples, dtype=np.float64)
-    x = np.floor(
-        amplitude * 32767.0 * np.sin(2.0 * np.pi * freq_hz * t / sample_rate) + 0.5
-    ).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(x.tobytes())
-    return buf.getvalue()
-
-
-def synth_ppm(width: int, height: int, value: int) -> bytes:
-    """Deterministic binary-PPM (P6) synthesizer — a genuine
-    header+pixel-grid container filled with one constant 8-bit
-    value; the image-side test/fixture source for the real decode
-    path, mirroring :func:`synth_wav`."""
-    import numpy as np
-
-    px = np.full((height, width, 3), value, dtype=np.uint8)
-    return f"P6\n{width} {height}\n255\n".encode() + px.tobytes()
 
 
 def _parse_bmp(payload: bytes):
@@ -605,79 +306,31 @@ def _parse_bmp(payload: bytes):
     return width, height, bgr[..., ::-1]
 
 
-def decode_bmp_features(payload: bytes) -> dict:
-    """REAL 24-bit BMP decode: header parse + numpy pixel grid.
-    Same feature contract as :func:`decode_ppm_features` (per-channel
-    means + Rec.601 luma, all in [0, 1]) so image features are
-    comparable across container formats."""
-    import numpy as np
-
-    width, height, grid = _parse_bmp(payload)
-    img = grid.astype(np.float64) / 255.0
-    means = img.mean(axis=(0, 1))
-    luma = float(0.299 * means[0] + 0.587 * means[1] + 0.114 * means[2])
-    return {
-        "width": width,
-        "height": height,
-        "feat": [float(means[0]), float(means[1]), float(means[2]), luma],
-    }
-
-
-def synth_bmp(width: int, height: int, value: int) -> bytes:
-    """Deterministic 24-bit BMP synthesizer — a genuine
-    header+padded-row container (bottom-up, BGR) filled with one
-    constant 8-bit value; :func:`synth_ppm`'s BMP twin."""
+def _bmp_encode(grid, *_) -> bytes:
+    """(H, W, 3) RGB grid, top row first → uncompressed 24-bit BMP:
+    bottom-up BGR rows padded to 4 bytes; :func:`_parse_bmp`'s
+    inverse."""
     import struct
 
     import numpy as np
 
-    stride = (3 * width + 3) & ~3
-    img_size = stride * height
-    rows = np.zeros((height, stride), dtype=np.uint8)
-    rows[:, : 3 * width] = value
+    h, w = grid.shape[:2]
+    stride = (3 * w + 3) & ~3
+    img_size = stride * h
+    rows = np.zeros((h, stride), dtype=np.uint8)
+    rows[:, : 3 * w] = grid[::-1, :, ::-1].reshape(h, 3 * w)
     file_hdr = b"BM" + struct.pack("<IHHI", 14 + 40 + img_size, 0, 0, 54)
     info_hdr = struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, img_size,
+        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size,
         2835, 2835, 0, 0,
     )
     return file_hdr + info_hdr + rows.tobytes()
 
 
-def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL BMP resize: decode, nearest-neighbor sample with the
-    SAME center rule as :func:`resize_ppm`, re-encode as bottom-up
-    24-bit BMP with row padding."""
-    import numpy as np
-
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"invalid target size {out_w}x{out_h}")
-    width, height, grid = _parse_bmp(payload)
-    rows = np.minimum(
-        ((np.arange(out_h) + 0.5) * height / out_h).astype(np.int64),
-        height - 1,
-    )
-    cols = np.minimum(
-        ((np.arange(out_w) + 0.5) * width / out_w).astype(np.int64),
-        width - 1,
-    )
-    out = grid[rows][:, cols]  # RGB, top row first
-    import struct
-
-    stride = (3 * out_w + 3) & ~3
-    padded = np.zeros((out_h, stride), dtype=np.uint8)
-    padded[:, : 3 * out_w] = out[::-1, :, ::-1].reshape(out_h, 3 * out_w)
-    img_size = stride * out_h
-    file_hdr = b"BM" + struct.pack("<IHHI", 14 + 40 + img_size, 0, 0, 54)
-    info_hdr = struct.pack(
-        "<IiiHHIIiiII", 40, out_w, out_h, 1, 24, 0, img_size,
-        2835, 2835, 0, 0,
-    )
-    return file_hdr + info_hdr + padded.tobytes()
-
-
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # color type -> samples per pixel (8-bit depth only; no palette)
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
+_PNG_COLOR_TYPES = {ch: ct for ct, ch in _PNG_CHANNELS.items()}
 
 
 def _png_chunk(tag: bytes, data: bytes) -> bytes:
@@ -931,171 +584,6 @@ def _parse_png(payload: bytes):
     if pos != len(stream):
         raise ValueError("IDAT stream long for Adam7 passes")
     return w, h, ch, grid
-
-
-def decode_png_features(payload: bytes) -> dict:
-    """REAL PNG decode: chunk/CRC walk, inflate, unfilter, pixel
-    grid. Same feature contract as :func:`decode_ppm_features`
-    (per-channel means + Rec.601 luma in [0, 1]); grayscale
-    replicates the gray mean across the RGB slots, alpha is dropped
-    — image features stay comparable across containers."""
-    import numpy as np
-
-    w, h, ch, grid = _parse_png(payload)
-    img = grid.astype(np.float64) / 255.0
-    means = img.mean(axis=(0, 1))
-    if ch <= 2:  # gray / gray+alpha
-        rgb = [float(means[0])] * 3
-    else:
-        rgb = [float(means[0]), float(means[1]), float(means[2])]
-    luma = 0.299 * rgb[0] + 0.587 * rgb[1] + 0.114 * rgb[2]
-    return {"width": w, "height": h, "feat": [*rgb, float(luma)]}
-
-
-def synth_png(width: int, height: int, value: int) -> bytes:
-    """Deterministic RGB PNG synthesizer — a genuine signature +
-    IHDR + zlib IDAT + IEND container filled with one constant 8-bit
-    value, scanlines filtered with the rotating ``y % 5`` schedule so
-    the decode side must reconstruct through all five PNG filters to
-    recover the fill; :func:`synth_ppm`'s PNG twin."""
-    import numpy as np
-
-    return _png_encode(
-        np.full((height, width, 3), value, dtype=np.uint8), color_type=2
-    )
-
-
-def resize_png(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL PNG resize: full decode, nearest-neighbor sample with
-    the SAME center rule as :func:`resize_ppm`, re-encode preserving
-    the source color type."""
-    import numpy as np
-
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"invalid target size {out_w}x{out_h}")
-    w, h, ch, grid = _parse_png(payload)
-    rows = np.minimum(
-        ((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1
-    )
-    cols = np.minimum(
-        ((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1
-    )
-    color_type = {1: 0, 3: 2, 2: 4, 4: 6}[ch]
-    return _png_encode(grid[rows][:, cols], color_type=color_type)
-
-
-def _parse_riff_wav(payload: bytes):
-    """Manual RIFF/WAVE chunk walk → (format_code, channels,
-    sample_rate, bits_per_sample, data bytes). The stdlib ``wave``
-    module refuses every format except PCM; compressed-audio formats
-    (G.711 μ-law = format 7) need this parser. Unknown chunks are
-    skipped by their declared size (word-aligned), matching the RIFF
-    grammar."""
-    import struct
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= len(payload):
-        tag = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) != size:
-            raise ValueError(f"truncated {tag!r} chunk")
-        if tag == b"fmt ":
-            if size < 16:
-                raise ValueError("fmt chunk too short")
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif tag == b"data":
-            data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt or data chunk")
-    code, ch, sr, _byterate, _align, bits = fmt
-    if ch <= 0 or sr <= 0:
-        raise ValueError(f"invalid WAV header: ch={ch} sr={sr}")
-    return code, ch, sr, bits, data
-
-
-def _ulaw_table():
-    """The 256-entry G.711 μ-law expansion table (ITU-T G.711:
-    complement, split 3-bit exponent / 4-bit mantissa, bias 0x84):
-    decoded[b] = ±(((mantissa·8 + 0x84) << exponent) − 0x84), full
-    scale ±32124."""
-    import numpy as np
-
-    b = np.arange(256, dtype=np.int64)
-    inv = b ^ 0xFF
-    sign = np.where(inv & 0x80, -1, 1)
-    exp = (inv >> 4) & 0x07
-    mant = inv & 0x0F
-    mag = ((mant * 8 + 0x84) << exp) - 0x84
-    return (sign * mag).astype(np.int32)
-
-
-def decode_ulaw_samples(payload: bytes):
-    """REAL G.711 μ-law decode: RIFF parse (format code 7, 8-bit
-    codewords), table expansion to linear PCM, normalized to
-    [-1, 1] at the μ-law full scale (32124). Multi-channel downmixes
-    like the PCM path. Returns (sample_rate, float64 samples)."""
-    import numpy as np
-
-    code, ch, sr, bits, data = _parse_riff_wav(payload)
-    if code != 7:
-        raise ValueError(f"expected mu-law (format 7), got format {code}")
-    if bits != 8:
-        raise ValueError(f"mu-law codewords are 8-bit, got {bits}")
-    x = _ulaw_table()[np.frombuffer(data, dtype=np.uint8)].astype(
-        np.float64
-    ) / 32124.0
-    if ch > 1:
-        x = x[: len(x) - len(x) % ch].reshape(-1, ch).mean(axis=1)
-    return sr, x
-
-
-def decode_ulaw_features(payload: bytes) -> dict:
-    """REAL compressed-audio decode: G.711 μ-law → linear PCM →
-    the SAME clip-level feature contract as
-    :func:`decode_wav_features` (RMS, zero-crossing rate, peak, all
-    in μ-law full scale), so audio features stay comparable across
-    codecs."""
-    import numpy as np
-
-    sr, x = decode_ulaw_samples(payload)
-    n = len(x)
-    rms = float(np.sqrt(np.mean(x * x))) if n else 0.0
-    zcr = (
-        float(np.mean(np.abs(np.diff(np.signbit(x).astype(np.int8)))))
-        if n > 1
-        else 0.0
-    )
-    peak = float(np.max(np.abs(x))) if n else 0.0
-    return {
-        "sample_rate": sr,
-        "n_samples": n,
-        "duration_ms": int(round(1000.0 * n / sr)) if sr else None,
-        "feat": [rms, zcr, peak],
-    }
-
-
-def synth_ulaw_wav(
-    byte_value: int, sample_rate: int = 8000, n_samples: int = 160
-) -> bytes:
-    """Deterministic μ-law WAV synthesizer — a genuine RIFF/WAVE
-    container with format code 7 and every codeword equal to
-    ``byte_value``; the compressed-audio twin of :func:`synth_wav`."""
-    import struct
-
-    data = bytes([byte_value % 256]) * n_samples
-    fmt = struct.pack("<HHIIHH", 7, 1, sample_rate, sample_rate, 1, 8)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def _lzw_decode(data: bytes, min_code_size: int) -> list[int]:
@@ -1353,24 +841,6 @@ def _gif_encode(index_grid, palette) -> bytes:
     return b"".join(parts)
 
 
-def decode_gif_features(payload: bytes) -> dict:
-    """REAL GIF decode: header/descriptor parse, sub-block
-    reassembly, LZW expansion, palette lookup. Same feature contract
-    as :func:`decode_ppm_features` (per-channel means + Rec.601 luma
-    in [0, 1])."""
-    import numpy as np
-
-    w, h, palette, grid = _parse_gif(payload)
-    rgb = palette[grid].astype(np.float64) / 255.0
-    means = rgb.mean(axis=(0, 1))
-    luma = float(0.299 * means[0] + 0.587 * means[1] + 0.114 * means[2])
-    return {
-        "width": w,
-        "height": h,
-        "feat": [float(means[0]), float(means[1]), float(means[2]), luma],
-    }
-
-
 def synth_gif(width: int, height: int, value: int) -> bytes:
     """Deterministic GIF synthesizer — a genuine GIF87a container
     whose single frame fills with palette entry (value, value,
@@ -1418,133 +888,217 @@ def synth_gif_anim(width: int, height: int, values) -> bytes:
     return b"".join(parts)
 
 
-GIF_FRAME_SCHEMA = (
-    "media_id long, frame_idx int, width int, height int, "
-    "r double, g double, b double, frame_error string"
-)
+def _jpeg():
+    """operators/jpeg.py, imported on first use."""
+    from . import jpeg
+
+    return jpeg
 
 
-def gif_frame_features(df: DataFrame, max_frames: int | None = None) -> DataFrame:
-    """Frame-level features from REAL animated-GIF decode — the
-    video-modality twin of :func:`wav_frame_features`: each
-    ``image/gif`` payload's frame stream is LZW-expanded and reduced
-    to per-frame per-channel means (``frame_idx`` 0-based).
-    ``max_frames`` caps decode work per clip — the frame-sampling
-    contract of q43's plan, but against a REAL container. Per-row
-    error capture: a corrupt payload yields ONE row with
-    ``frame_error`` set, the batch survives.
+def _gif_image(payload: bytes):
+    """Table parser for GIF: the first frame's index grid, full
+    scale 255, and the color table it indexes."""
+    _, _, palette, grid = _parse_gif(payload)
+    return grid, 255, palette
 
-    Scale: payload bytes never shuffle — decode + reduction fuse
-    into one narrow Arrow stage; fan-out is metadata-sized feature
-    rows, never pixel grids."""
-    import pandas as pd
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
+class _ImageFormat(NamedTuple):
+    """One image container of the table: ``parse`` maps a payload to
+    ``(grid, maxval, palette)``; ``encode`` maps that triple back to
+    a payload."""
 
-        for pdf in batches:
-            rows = []
-            for mid, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                try:
-                    if mtype != "image/gif":
-                        raise ValueError(f"unsupported media_type: {mtype}")
-                    if payload is None:
-                        raise ValueError("null payload")
-                    frames = _parse_gif_frames(bytes(payload), max_frames)
-                    for idx, (w, h, pal, grid) in enumerate(frames):
-                        rgb = pal[grid].astype(np.float64) / 255.0
-                        m = rgb.mean(axis=(0, 1))
-                        rows.append(
-                            {
-                                "media_id": mid,
-                                "frame_idx": idx,
-                                "width": w,
-                                "height": h,
-                                "r": float(m[0]),
-                                "g": float(m[1]),
-                                "b": float(m[2]),
-                                "frame_error": None,
-                            }
-                        )
-                except Exception as exc:  # per-row capture by contract
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": None,
-                            "width": None,
-                            "height": None,
-                            "r": None,
-                            "g": None,
-                            "b": None,
-                            "frame_error": f"{type(exc).__name__}: {exc}"[:200],
-                        }
-                    )
-            out = pd.DataFrame(rows)
-            for c in ("frame_idx", "width", "height"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+    parse: Callable
+    encode: Callable
 
-    return df.mapInPandas(run, GIF_FRAME_SCHEMA)
+
+_IMAGE_FORMATS = {
+    "image/ppm": _ImageFormat(
+        partial(_netpbm_image, b"P6", 3), partial(_netpbm_encode, b"P6")
+    ),
+    "image/pgm": _ImageFormat(
+        partial(_netpbm_image, b"P5", 1), partial(_netpbm_encode, b"P5")
+    ),
+    "image/bmp": _ImageFormat(
+        lambda p: (_parse_bmp(p)[2], 255, None), _bmp_encode
+    ),
+    "image/png": _ImageFormat(
+        lambda p: (_parse_png(p)[3], 255, None),
+        lambda g, *_: _png_encode(
+            g, color_type=_PNG_COLOR_TYPES[g.shape[-1]]
+        ),
+    ),
+    "image/gif": _ImageFormat(
+        _gif_image, lambda g, _maxval, pal: _gif_encode(g, pal)
+    ),
+    "image/jpeg": _ImageFormat(
+        lambda p: (_jpeg()._parse_jpeg(p)[3], 255, None),
+        lambda g, *_: _jpeg().encode_baseline(
+            g[:, :, 0] if g.shape[-1] == 1 else g
+        ),
+    ),
+}
+
+
+def _image_pixels(mtype: str, payload: bytes):
+    """Parse ``payload`` through the table → ((H, W, C) uint8 pixel
+    grid with palettes resolved, maxval)."""
+    fmt = _IMAGE_FORMATS.get(mtype)
+    if fmt is None:
+        raise ValueError(f"unsupported image type {mtype}")
+    grid, maxval, palette = fmt.parse(payload)
+    return (grid if palette is None else palette[grid]), maxval
+
+
+def _image_features(mtype: str, payload: bytes) -> dict:
+    """The image feature contract of the module docstring: width,
+    height and [r, g, b, luma] means in [0, 1]; a gray image's gray
+    mean fills all four slots."""
+    import numpy as np
+
+    px, maxval = _image_pixels(mtype, payload)
+    h, w = px.shape[:2]
+    if px.shape[-1] <= 2:  # gray / gray+alpha
+        gray = float(px[..., 0].astype(np.float64).mean() / maxval)
+        return {"width": w, "height": h, "feat": [gray] * 4}
+    means = (px.astype(np.float64) / maxval).mean(axis=(0, 1))
+    r, g, b = (float(m) for m in means[:3])
+    return {
+        "width": w,
+        "height": h,
+        "feat": [r, g, b, 0.299 * r + 0.587 * g + 0.114 * b],
+    }
+
+
+def _nearest(grid, out_w: int, out_h: int):
+    """Nearest-neighbor sample of an (H, W, ...) grid: output index i
+    reads source index floor((i+0.5)·src/dst), clamped to the last —
+    the standard center rule; pure numpy slicing."""
+    import numpy as np
+
+    h, w = grid.shape[:2]
+    rows = np.minimum(
+        ((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1
+    )
+    cols = np.minimum(
+        ((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1
+    )
+    return grid[rows][:, cols]
+
+
+def _resize_image(mtype: str, payload: bytes, out_w: int, out_h: int):
+    """Decode through the table, :func:`_nearest` to (out_w × out_h),
+    re-encode in the same format."""
+    if out_w <= 0 or out_h <= 0:
+        raise ValueError(f"invalid target size {out_w}x{out_h}")
+    fmt = _IMAGE_FORMATS[mtype]
+    grid, maxval, palette = fmt.parse(payload)
+    return fmt.encode(_nearest(grid, out_w, out_h), maxval, palette)
+
+
+def _synth_image(
+    mtype: str, width: int, height: int, value: int, channels: int = 3
+) -> bytes:
+    """A constant-fill image written by the table's encoder."""
+    import numpy as np
+
+    grid = np.full((height, width, channels), value, dtype=np.uint8)
+    return _IMAGE_FORMATS[mtype].encode(grid, 255, None)
+
+
+def decode_ppm_features(payload: bytes) -> dict:
+    """Binary-PPM (P6) features (the table's feature contract)."""
+    return _image_features("image/ppm", payload)
+
+
+def decode_pgm_features(payload: bytes) -> dict:
+    """Binary-PGM (P5) grayscale features (the gray rule)."""
+    return _image_features("image/pgm", payload)
+
+
+def decode_bmp_features(payload: bytes) -> dict:
+    """24-bit BMP features (the table's feature contract)."""
+    return _image_features("image/bmp", payload)
+
+
+def decode_png_features(payload: bytes) -> dict:
+    """PNG features (the table's feature contract; gray and
+    gray+alpha follow the gray rule, alpha is dropped)."""
+    return _image_features("image/png", payload)
+
+
+def decode_gif_features(payload: bytes) -> dict:
+    """GIF first-frame features (the table's feature contract over
+    the palette-resolved pixels)."""
+    return _image_features("image/gif", payload)
+
+
+def resize_ppm(payload: bytes, out_w: int, out_h: int) -> bytes:
+    """PPM resize (the table's nearest-neighbor rule), re-encoded as
+    P6 with the source maxval."""
+    return _resize_image("image/ppm", payload, out_w, out_h)
+
+
+def resize_pgm(payload: bytes, out_w: int, out_h: int) -> bytes:
+    """PGM resize, re-encoded as P5 with the source maxval."""
+    return _resize_image("image/pgm", payload, out_w, out_h)
+
+
+def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes:
+    """BMP resize, re-encoded as bottom-up 24-bit BMP."""
+    return _resize_image("image/bmp", payload, out_w, out_h)
+
+
+def resize_png(payload: bytes, out_w: int, out_h: int) -> bytes:
+    """PNG resize, re-encoded with the source color type."""
+    return _resize_image("image/png", payload, out_w, out_h)
 
 
 def resize_gif(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL GIF resize in palette space: decode to the index grid,
-    nearest-neighbor sample with the SAME center rule as
-    :func:`resize_ppm`, re-encode against the unchanged color
-    table — no quantization loss."""
-    import numpy as np
-
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"invalid target size {out_w}x{out_h}")
-    w, h, palette, grid = _parse_gif(payload)
-    rows = np.minimum(
-        ((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1
-    )
-    cols = np.minimum(
-        ((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1
-    )
-    return _gif_encode(grid[rows][:, cols], palette)
-
-
-def _decode_jpeg_features(payload: bytes) -> dict:
-    """Dispatch shim for the baseline JPEG kernel (operators/jpeg.py
-    — full from-scratch T.81 decode: markers, canonical Huffman,
-    dequantize, IDCT, chroma upsample, YCbCr→RGB)."""
-    from . import jpeg
-
-    return jpeg.decode_jpeg_features(payload)
+    """GIF resize in palette space: the index grid is sampled and
+    re-encoded against the unchanged color table."""
+    return _resize_image("image/gif", payload, out_w, out_h)
 
 
 def resize_jpeg(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL JPEG resize: full baseline decode, nearest-neighbor
-    sample with the SAME center rule as :func:`resize_ppm`,
-    re-encode baseline 4:4:4 (one controlled requantization — the
-    loss model every thumbnailing pipeline accepts)."""
-    import numpy as np
-
-    from . import jpeg
-
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"invalid target size {out_w}x{out_h}")
-    w, h, ch, grid = jpeg._parse_jpeg(payload)
-    rows = np.minimum(
-        ((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1
-    )
-    cols = np.minimum(
-        ((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1
-    )
-    out = grid[rows][:, cols]
-    if ch == 1:
-        return jpeg.encode_baseline(out[:, :, 0])
-    return jpeg.encode_baseline(out)
+    """JPEG resize: full baseline decode, re-encode baseline 4:4:4
+    (one controlled requantization — the loss model every
+    thumbnailing pipeline accepts)."""
+    return _resize_image("image/jpeg", payload, out_w, out_h)
 
 
-FRAME_SCHEMA = (
-    "media_id long, frame_idx int, t_ms int, "
-    "rms double, zcr double, frame_error string"
-)
+def synth_ppm(width: int, height: int, value: int) -> bytes:
+    """Deterministic binary-PPM (P6) synthesizer — a genuine
+    header+pixel-grid container filled with one constant 8-bit
+    value; the image-side test/fixture source for the real decode
+    path, mirroring :func:`synth_wav`."""
+    return _synth_image("image/ppm", width, height, value)
+
+
+def synth_pgm(width: int, height: int, value: int) -> bytes:
+    """Deterministic binary-PGM (P5) synthesizer — constant-fill
+    grayscale; :func:`synth_ppm`'s single-channel sibling."""
+    return _synth_image("image/pgm", width, height, value, channels=1)
+
+
+def synth_bmp(width: int, height: int, value: int) -> bytes:
+    """Deterministic 24-bit BMP synthesizer — a genuine
+    header+padded-row container (bottom-up, BGR) filled with one
+    constant 8-bit value; :func:`synth_ppm`'s BMP twin."""
+    return _synth_image("image/bmp", width, height, value)
+
+
+def synth_png(width: int, height: int, value: int) -> bytes:
+    """Deterministic RGB PNG synthesizer — a genuine signature +
+    IHDR + zlib IDAT + IEND container filled with one constant 8-bit
+    value, scanlines filtered with the rotating ``y % 5`` schedule so
+    the decode side must reconstruct through all five PNG filters to
+    recover the fill; :func:`synth_ppm`'s PNG twin."""
+    return _synth_image("image/png", width, height, value)
+
+
+# ------------------------------------------------------------------ #
+# REAL audio containers                                               #
+# ------------------------------------------------------------------ #
 
 
 def decode_wav_samples(payload: bytes):
@@ -1569,93 +1123,154 @@ def decode_wav_samples(payload: bytes):
     return sr, x
 
 
-def wav_frame_features(
-    df: DataFrame, frame_ms: int = 25, hop_ms: int = 10
-) -> DataFrame:
-    """Frame-level audio features from REAL WAV decode — the
-    windowing front end every speech/audio featurizer starts with
-    (25 ms frames, 10 ms hop is the public ASR convention): per
-    frame, RMS energy and zero-crossing rate over the decoded PCM.
-    Frames are strided views (``frame_idx`` 0-based,
-    ``t_ms = frame_idx·hop_ms``); a clip shorter than one frame
-    yields no rows. Per-row error capture: a corrupt payload yields
-    ONE row with ``frame_error`` set, the batch survives.
+def _parse_riff_wav(payload: bytes):
+    """Manual RIFF/WAVE chunk walk → (format_code, channels,
+    sample_rate, bits_per_sample, data bytes). The stdlib ``wave``
+    module refuses every format except PCM; compressed-audio formats
+    (G.711 μ-law = format 7) need this parser. Unknown chunks are
+    skipped by their declared size (word-aligned), matching the RIFF
+    grammar."""
+    import struct
 
-    Scale: payload bytes never shuffle — decode + framing fuse into
-    one narrow Arrow stage, fan-out is rows-per-clip =
-    ⌊(n_samples − frame)/hop⌋ + 1 (metadata-sized rows, not sample
-    arrays); downstream aggregates shuffle features only. The numpy
-    framing is one fancy-index gather + two vector reductions per
-    clip, and rows emit via bulk extends — no Python per-frame
-    loop."""
-    import pandas as pd
+    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    pos = 12
+    fmt = None
+    data = None
+    while pos + 8 <= len(payload):
+        tag = payload[pos : pos + 4]
+        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
+        body = payload[pos + 8 : pos + 8 + size]
+        if len(body) != size:
+            raise ValueError(f"truncated {tag!r} chunk")
+        if tag == b"fmt ":
+            if size < 16:
+                raise ValueError("fmt chunk too short")
+            fmt = struct.unpack("<HHIIHH", body[:16])
+        elif tag == b"data":
+            data = body
+        pos += 8 + size + (size & 1)  # chunks are word-aligned
+    if fmt is None or data is None:
+        raise ValueError("missing fmt or data chunk")
+    code, ch, sr, _byterate, _align, bits = fmt
+    if ch <= 0 or sr <= 0:
+        raise ValueError(f"invalid WAV header: ch={ch} sr={sr}")
+    return code, ch, sr, bits, data
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                "media_id": [],
-                "frame_idx": [],
-                "t_ms": [],
-                "rms": [],
-                "zcr": [],
-                "frame_error": [],
-            }
+def _ulaw_table():
+    """The 256-entry G.711 μ-law expansion table (ITU-T G.711:
+    complement, split 3-bit exponent / 4-bit mantissa, bias 0x84):
+    decoded[b] = ±(((mantissa·8 + 0x84) << exponent) − 0x84), full
+    scale ±32124."""
+    import numpy as np
 
-            def emit(mid, idx, t, rms, zcr, err):
-                out["media_id"].append(mid)
-                out["frame_idx"].append(idx)
-                out["t_ms"].append(t)
-                out["rms"].append(rms)
-                out["zcr"].append(zcr)
-                out["frame_error"].append(err)
+    b = np.arange(256, dtype=np.int64)
+    inv = b ^ 0xFF
+    sign = np.where(inv & 0x80, -1, 1)
+    exp = (inv >> 4) & 0x07
+    mant = inv & 0x0F
+    mag = ((mant * 8 + 0x84) << exp) - 0x84
+    return (sign * mag).astype(np.int32)
 
-            for mid, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                try:
-                    if mtype != "audio/wav":
-                        raise ValueError(f"unsupported media_type: {mtype}")
-                    if payload is None:
-                        raise ValueError("null payload")
-                    sr, x = decode_wav_samples(bytes(payload))
-                    flen = sr * frame_ms // 1000
-                    hop = sr * hop_ms // 1000
-                    if flen <= 0 or hop <= 0:
-                        raise ValueError(
-                            f"degenerate framing {frame_ms}/{hop_ms}ms at {sr}Hz"
-                        )
-                    if len(x) < flen:
-                        continue
-                    n_frames = (len(x) - flen) // hop + 1
-                    idx = (
-                        np.arange(flen)[None, :]
-                        + hop * np.arange(n_frames)[:, None]
-                    )
-                    frames = x[idx]  # (n_frames, flen)
-                    rms = np.sqrt(np.mean(frames * frames, axis=1))
-                    sb = np.signbit(frames).astype(np.int8)
-                    zcr = np.abs(np.diff(sb, axis=1)).mean(axis=1)
-                    # bulk-extend, no per-frame Python loop: a long
-                    # clip fans out to ~10⁵ frames and 6 appends per
-                    # frame would dominate the vectorized kernel
-                    out["media_id"].extend([mid] * n_frames)
-                    out["frame_idx"].extend(range(n_frames))
-                    out["t_ms"].extend(range(0, n_frames * hop_ms, hop_ms))
-                    out["rms"].extend(rms.tolist())
-                    out["zcr"].extend(zcr.tolist())
-                    out["frame_error"].extend([None] * n_frames)
-                except Exception as exc:  # per-row capture by contract
-                    emit(mid, None, None, None, None, f"{type(exc).__name__}: {exc}")
-            # nullable-int dtypes: error rows carry NULL frame_idx/t_ms,
-            # and a float64 column with NaN would fail Arrow's safe
-            # cast to int
-            out["frame_idx"] = pd.array(out["frame_idx"], dtype="Int32")
-            out["t_ms"] = pd.array(out["t_ms"], dtype="Int32")
-            yield pd.DataFrame(out)
 
-    return df.mapInPandas(run, FRAME_SCHEMA)
+def decode_ulaw_samples(payload: bytes):
+    """REAL G.711 μ-law decode: RIFF parse (format code 7, 8-bit
+    codewords), table expansion to linear PCM, normalized to
+    [-1, 1] at the μ-law full scale (32124). Multi-channel downmixes
+    like the PCM path. Returns (sample_rate, float64 samples)."""
+    import numpy as np
+
+    code, ch, sr, bits, data = _parse_riff_wav(payload)
+    if code != 7:
+        raise ValueError(f"expected mu-law (format 7), got format {code}")
+    if bits != 8:
+        raise ValueError(f"mu-law codewords are 8-bit, got {bits}")
+    x = _ulaw_table()[np.frombuffer(data, dtype=np.uint8)].astype(
+        np.float64
+    ) / 32124.0
+    if ch > 1:
+        x = x[: len(x) - len(x) % ch].reshape(-1, ch).mean(axis=1)
+    return sr, x
+
+
+def _clip_features(sr: int, x) -> dict:
+    """The clip feature contract over decoded samples in [-1, 1]:
+    RMS energy, zero-crossing rate and peak amplitude;
+    ``duration_ms = n·1000 // sr``."""
+    import numpy as np
+
+    n = len(x)
+    rms = float(np.sqrt(np.mean(x * x))) if n else 0.0
+    zcr = (
+        float(np.mean(np.abs(np.diff(np.signbit(x).astype(np.int8)))))
+        if n > 1
+        else 0.0
+    )
+    peak = float(np.max(np.abs(x))) if n else 0.0
+    return {
+        "sample_rate": sr,
+        "n_samples": n,
+        "duration_ms": int(n * 1000 // sr) if sr else 0,
+        "feat": [rms, zcr, peak],
+    }
+
+
+def decode_wav_features(payload: bytes) -> dict:
+    """REAL WAV/PCM decode (:func:`decode_wav_samples`, stdlib
+    ``wave``; mono or downmixed, 16-bit PCM) → the clip feature
+    contract of :func:`_clip_features`."""
+    return _clip_features(*decode_wav_samples(payload))
+
+
+def decode_ulaw_features(payload: bytes) -> dict:
+    """REAL compressed-audio decode: G.711 μ-law → linear PCM
+    (:func:`decode_ulaw_samples`) → the same clip feature contract as
+    :func:`decode_wav_features`, in μ-law full scale."""
+    return _clip_features(*decode_ulaw_samples(payload))
+
+
+def synth_wav(
+    freq_hz: float, sample_rate: int = 8000, n_samples: int = 800, amplitude: float = 0.5
+) -> bytes:
+    """Deterministic mono 16-bit PCM WAV synthesizer (a genuine WAV
+    container written by the stdlib ``wave`` module) — the test/
+    fixture source for the real decode path when no media files ship
+    with the corpus."""
+    import io
+    import wave
+
+    import numpy as np
+
+    t = np.arange(n_samples, dtype=np.float64)
+    x = np.floor(
+        amplitude * 32767.0 * np.sin(2.0 * np.pi * freq_hz * t / sample_rate) + 0.5
+    ).astype("<i2")
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(sample_rate)
+        w.writeframes(x.tobytes())
+    return buf.getvalue()
+
+
+def synth_ulaw_wav(
+    byte_value: int, sample_rate: int = 8000, n_samples: int = 160
+) -> bytes:
+    """Deterministic μ-law WAV synthesizer — a genuine RIFF/WAVE
+    container with format code 7 and every codeword equal to
+    ``byte_value``; the compressed-audio twin of :func:`synth_wav`."""
+    import struct
+
+    data = bytes([byte_value % 256]) * n_samples
+    fmt = struct.pack("<HHIIHH", 7, 1, sample_rate, sample_rate, 1, 8)
+    body = (
+        b"WAVE"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 # ------------------------------------------------------------------ #
@@ -1999,89 +1614,6 @@ def synth_mjpeg_mp4(
     return build(mdat_payload_off)
 
 
-MP4_FRAME_SCHEMA = GIF_FRAME_SCHEMA  # same frame-census plane
-
-
-def mp4_jpeg_frame_features(
-    df: DataFrame, max_frames: int | None = None
-) -> DataFrame:
-    """Frame-level features from REAL MJPEG-in-MP4 decode — the MP4
-    twin of :func:`gif_frame_features`, closing the last frame-level
-    codec seam (round-8 verdict #7): the ISO BMFF sample tables are
-    resolved by :func:`_mp4_sample_table` (stsz/stco/stsc, the real
-    demuxer lookup), each sample is a complete baseline JPEG sliced
-    from mdat and decoded by the from-scratch T.81 decoder
-    (operators/jpeg.py), reduced to per-frame per-channel means.
-    Compressed inter-frame codecs (avc1/hevc) remain the one
-    documented external seam — their samples are not independent
-    images. Per-row error capture; ``max_frames`` caps decode work
-    per clip. Scale: payload bytes never shuffle — demux + decode +
-    reduction fuse into one narrow Arrow stage, only
-    metadata-sized feature rows fan out."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-
-        from . import jpeg as jpeg_mod
-
-        for pdf in batches:
-            rows = []
-            for mid, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                try:
-                    if mtype != "video/mp4":
-                        raise ValueError(f"unsupported media_type: {mtype}")
-                    if payload is None:
-                        raise ValueError("null payload")
-                    payload = bytes(payload)
-                    _, _, samples = _mp4_sample_table(payload, "jpeg")
-                    if max_frames is not None:
-                        samples = samples[:max_frames]
-                    for idx, (off, size) in enumerate(samples):
-                        w, h, _c, grid = jpeg_mod._parse_jpeg(
-                            payload[off : off + size]
-                        )
-                        rgb = grid.astype(np.float64) / 255.0
-                        if rgb.ndim == 2:
-                            rgb = rgb[..., None]
-                        if rgb.shape[-1] == 1:
-                            rgb = np.repeat(rgb, 3, axis=-1)
-                        m = rgb.mean(axis=(0, 1))
-                        rows.append(
-                            {
-                                "media_id": mid,
-                                "frame_idx": idx,
-                                "width": w,
-                                "height": h,
-                                "r": float(m[0]),
-                                "g": float(m[1]),
-                                "b": float(m[2]),
-                                "frame_error": None,
-                            }
-                        )
-                except Exception as exc:  # per-row capture by contract
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": None,
-                            "width": None,
-                            "height": None,
-                            "r": None,
-                            "g": None,
-                            "b": None,
-                            "frame_error": f"{type(exc).__name__}: {exc}"[:200],
-                        }
-                    )
-            out = pd.DataFrame(rows)
-            for c in ("frame_idx", "width", "height"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
-
-    return df.mapInPandas(run, MP4_FRAME_SCHEMA)
-
-
 # ------------------------------------------------------------------ #
 # MP3 (MPEG-1 Layer III) frame-header census — REAL sync walk         #
 # ------------------------------------------------------------------ #
@@ -2182,107 +1714,371 @@ def synth_mp3(
     return bytes(out)
 
 
-EMBED_SCHEMA = (
-    "media_id long, media_type string, embedding array<double>, "
-    "embed_error string"
-)
+# ------------------------------------------------------------------ #
+# Band signatures and the DataFrame entry points                      #
+# ------------------------------------------------------------------ #
+
+_DECODERS = {
+    **{t: partial(_image_features, t) for t in _IMAGE_FORMATS},
+    "audio/wav": decode_wav_features,
+    "audio/ulaw": decode_ulaw_features,
+    "video/mp4": decode_mp4_features,
+    "audio/mpeg": decode_mp3_features,
+}
+
+
+def _band_signature(payload: bytes, mtype: str, dim: int):
+    """``dim`` L1-normalized band shares of a decodable payload:
+
+    - audio (``audio/wav|ulaw``): full decode → rFFT power spectrum →
+      energy share per ``dim`` equal bands of [0, Nyquist] (a
+      synthesized sine concentrates its energy in the band holding
+      its frequency, which is exactly what the q246 oracle predicts);
+    - images (the table's types): full decode → integer Rec.601 luma
+      → ``dim``-bin histogram (share of pixels per luma band).
+
+    Anything else raises."""
+    import numpy as np
+
+    if mtype in ("audio/wav", "audio/ulaw"):
+        _, x = (
+            decode_wav_samples(payload)
+            if mtype == "audio/wav"
+            else decode_ulaw_samples(payload)
+        )
+        if len(x) < 2:
+            raise ValueError("clip too short for FFT")
+        power = np.abs(np.fft.rfft(x)) ** 2
+        edges = np.linspace(0, len(power), dim + 1).astype(int)
+        bands = np.array(
+            [power[a:b].sum() for a, b in zip(edges, edges[1:])]
+        )
+        tot = bands.sum()
+        return (bands / tot) if tot > 0 else bands
+    if mtype.startswith("image/"):
+        # Integer luma (Rec.601 weights ×1000, which sum to exactly
+        # 1000) so a constant gray value v always lands in bin
+        # v*dim//256 — float 0.299r+0.587g+0.114b rounds to
+        # 31.999... for v=32 and truncates into the wrong bin at
+        # every multiple-of-32 boundary.
+        g = _image_pixels(mtype, payload)[0].astype(np.int64)
+        if g.shape[-1] >= 3:
+            luma = (
+                299 * g[..., 0] + 587 * g[..., 1] + 114 * g[..., 2]
+            ) // 1000
+        else:
+            luma = g[..., 0]
+        bins = np.minimum(luma * dim // 256, dim - 1)
+        hist = np.bincount(bins.reshape(-1), minlength=dim).astype(
+            np.float64
+        )
+        return hist / hist.sum()
+    raise ValueError(f"unsupported media_type: {mtype}")
+
+
+def payload_features(payload: bytes, media_type: str, dim: int = 8) -> list[float]:
+    """REAL ``dim``-float content signature for any payload — the
+    default featurizer (this replaced the early ``_fake_decode_
+    features`` hash stand-in once the nine from-scratch container
+    decoders landed): the band signature of
+    :func:`_band_signature` for decodable audio and images, else —
+    text bytes, unknown containers, corrupt payloads — the
+    byte-value histogram over ``dim`` equal bands of [0, 256): an
+    honest raw-byte signature, always defined, so the featurizer is
+    total without hiding decode errors behind a fake (use
+    :func:`decode_media_features` / :func:`media_embedding` when
+    per-row error capture matters).
+
+    All outputs are L1-normalized shares. The one remaining neural
+    seam is documented at module level: there is no CLIP-style
+    learned encoder here by design.
+    """
+    import numpy as np
+
+    if payload is None:
+        raise ValueError("null payload")
+    payload = bytes(payload)
+    try:
+        return [float(v) for v in _band_signature(payload, media_type, dim)]
+    except Exception:
+        pass  # undecodable under its claimed type → raw-byte signature
+    b = np.frombuffer(payload or b"\x00", dtype=np.uint8)
+    hist = np.bincount(
+        b.astype(np.int64) * dim // 256, minlength=dim
+    ).astype(np.float64)
+    return [float(v) for v in hist / hist.sum()]
+
+
+def _per_row(
+    df: DataFrame,
+    schema: str,
+    kernel: Callable,
+    head: Callable,
+    error: str | None = None,
+    ints: tuple = (),
+    fan_out: bool = False,
+) -> DataFrame:
+    """The module's one ``mapInPandas`` stage — the per-row harness
+    of the module docstring. For each input row (a pandas
+    ``itertuples`` row), ``head(row)`` gives the columns every output
+    row of it carries, its error row included, and ``kernel(row)``
+    the rest: a dict of values (one row) or, with ``fan_out``, a
+    dict of equal-length columns (many rows). A kernel's exception
+    becomes one row with ``error`` set; with no ``error`` column it
+    fails the task. ``ints`` are cast to nullable ``Int32``: error
+    rows leave them NULL, and a float64 column with NaN would fail
+    Arrow's safe cast to int."""
+    import pandas as pd
+
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for pdf in batches:
+            out: dict[str, list] = {c: [] for c in names}
+            for row in pdf.itertuples(index=False):
+                carried = head(row)
+                try:
+                    got = kernel(row)
+                    if fan_out:
+                        n = len(next(iter(got.values())))
+                    else:
+                        got, n = {c: [v] for c, v in got.items()}, 1
+                except Exception as exc:  # per-row capture by contract
+                    if error is None:
+                        raise
+                    got = {error: [f"{type(exc).__name__}: {exc}"[:200]]}
+                    n = 1
+                for c in names:
+                    out[c].extend(got[c] if c in got else [carried.get(c)] * n)
+            for c in ints:
+                out[c] = pd.array(out[c], dtype="Int32")
+            yield pd.DataFrame(out)
+
+    return df.mapInPandas(run, schema)
+
+
+def _media_id(row) -> dict:
+    return {"media_id": row.media_id}
+
+
+def _media_id_type(row) -> dict:
+    return {"media_id": row.media_id, "media_type": row.media_type}
+
+
+def _payload(row, media_types) -> bytes:
+    """The row's payload bytes, if its media_type is one of
+    ``media_types``; raises otherwise or on a NULL payload."""
+    if row.media_type not in media_types:
+        raise ValueError(f"unsupported media_type: {row.media_type}")
+    if row.payload is None:
+        raise ValueError("null payload")
+    return bytes(row.payload)
+
+
+def extract_features(df: DataFrame, dim: int = 8) -> DataFrame:
+    """Arrow-batched feature extraction over media blobs via the REAL
+    :func:`payload_features` kernel (decode where the container type
+    is one of the nine from-scratch decoders, raw-byte signature
+    otherwise); a NULL payload gets NULL features. Input schema:
+    MEDIA_SCHEMA; output: FEATURE_SCHEMA. No error column: the
+    featurizer is total."""
+    import hashlib
+
+    def kernel(row) -> dict:
+        p = row.payload
+        if p is None:
+            return {"n_bytes": 0, "payload_md5": None, "feat": None}
+        return {
+            "n_bytes": len(p),
+            "payload_md5": hashlib.md5(p).hexdigest(),
+            "feat": payload_features(p, row.media_type, dim),
+        }
+
+    return _per_row(df, FEATURE_SCHEMA, kernel, _media_id_type)
+
+
+def resize_media(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
+    """Arrow-batched image resize over a MEDIA_SCHEMA table: payloads
+    of the image table's types are nearest-neighbor resampled to
+    (out_w × out_h) with width/height updated; every other media type
+    and NULL payloads pass through untouched (a resize stage must not
+    drop the audio rows riding the same table). A corrupt payload
+    keeps its original bytes and dimensions and carries
+    ``resize_error`` (the per-row harness)."""
+
+    def kernel(row) -> dict:
+        if row.media_type not in _IMAGE_FORMATS or row.payload is None:
+            return {}
+        return {
+            "payload": _resize_image(
+                row.media_type, bytes(row.payload), out_w, out_h
+            ),
+            "width": out_w,
+            "height": out_h,
+        }
+
+    return _per_row(
+        df, RESIZE_SCHEMA, kernel, lambda row: row._asdict(),
+        "resize_error", ints=("width", "height"),
+    )
+
+
+def decode_media_features(df: DataFrame) -> DataFrame:
+    """Arrow-batched REAL decode dispatch: the image table's types go
+    through the image feature contract, ``audio/wav|ulaw`` through
+    the clip contract, ``video/mp4`` and ``audio/mpeg`` through their
+    container-metadata parsers; any other media_type, a NULL or a
+    corrupt payload yields a row with ``decode_error`` set and NULL
+    features (the per-row harness). Input: MEDIA_SCHEMA; output:
+    DECODED_SCHEMA."""
+
+    def head(row) -> dict:
+        n_bytes = None if row.payload is None else len(row.payload)
+        return {**_media_id_type(row), "n_bytes": n_bytes}
+
+    def kernel(row) -> dict:
+        payload = _payload(row, _DECODERS)
+        return _DECODERS[row.media_type](payload)
+
+    return _per_row(
+        df, DECODED_SCHEMA, kernel, head, "decode_error",
+        ints=("width", "height", "sample_rate", "duration_ms"),
+    )
+
+
+def _frame_columns(frames) -> dict:
+    """Per-frame mean reduction shared by the GIF and MJPEG frame
+    kernels: (H, W, C) uint8 frames (gray is replicated) → columns
+    ``frame_idx`` (0-based), ``width``, ``height``, ``r``, ``g``,
+    ``b`` (channel means in [0, 1])."""
+    import numpy as np
+
+    out: dict[str, list] = {
+        c: [] for c in ("frame_idx", "width", "height", "r", "g", "b")
+    }
+    for idx, grid in enumerate(frames):
+        rgb = grid.astype(np.float64) / 255.0
+        if rgb.shape[-1] == 1:
+            rgb = np.repeat(rgb, 3, axis=-1)
+        m = rgb.mean(axis=(0, 1))
+        h, w = grid.shape[:2]
+        values = (idx, w, h, float(m[0]), float(m[1]), float(m[2]))
+        for c, v in zip(out, values):
+            out[c].append(v)
+    return out
+
+
+def gif_frame_features(df: DataFrame, max_frames: int | None = None) -> DataFrame:
+    """Frame-level features from REAL animated-GIF decode — the
+    video-modality twin of :func:`wav_frame_features`: each
+    ``image/gif`` payload's frame stream is LZW-expanded and reduced
+    to per-frame per-channel means (:func:`_frame_columns`).
+    ``max_frames`` caps decode work per clip — the frame-sampling
+    contract of q43's plan, but against a REAL container. A corrupt
+    payload yields ONE row with ``frame_error`` set (the per-row
+    harness); fan-out is metadata-sized feature rows, never pixel
+    grids."""
+
+    def kernel(row) -> dict:
+        frames = _parse_gif_frames(_payload(row, ("image/gif",)), max_frames)
+        return _frame_columns(pal[grid] for _, _, pal, grid in frames)
+
+    return _per_row(
+        df, GIF_FRAME_SCHEMA, kernel, _media_id, "frame_error",
+        ints=("frame_idx", "width", "height"), fan_out=True,
+    )
+
+
+def wav_frame_features(
+    df: DataFrame, frame_ms: int = 25, hop_ms: int = 10
+) -> DataFrame:
+    """Frame-level audio features from REAL WAV decode — the
+    windowing front end every speech/audio featurizer starts with
+    (25 ms frames, 10 ms hop is the public ASR convention): per
+    frame, RMS energy and zero-crossing rate over the decoded PCM.
+    Frames are strided views (``frame_idx`` 0-based,
+    ``t_ms = frame_idx·hop_ms``); a clip shorter than one frame
+    yields no rows. A corrupt payload yields ONE row with
+    ``frame_error`` set (the per-row harness). Fan-out is
+    rows-per-clip = ⌊(n_samples − frame)/hop⌋ + 1; the numpy framing
+    is one fancy-index gather + two vector reductions per clip."""
+    import numpy as np
+
+    def kernel(row) -> dict:
+        sr, x = decode_wav_samples(_payload(row, ("audio/wav",)))
+        flen = sr * frame_ms // 1000
+        hop = sr * hop_ms // 1000
+        if flen <= 0 or hop <= 0:
+            raise ValueError(
+                f"degenerate framing {frame_ms}/{hop_ms}ms at {sr}Hz"
+            )
+        n_frames = (len(x) - flen) // hop + 1 if len(x) >= flen else 0
+        idx = np.arange(flen)[None, :] + hop * np.arange(n_frames)[:, None]
+        frames = x[idx]  # (n_frames, flen)
+        rms = np.sqrt(np.mean(frames * frames, axis=1))
+        sb = np.signbit(frames).astype(np.int8)
+        zcr = np.abs(np.diff(sb, axis=1)).mean(axis=1)
+        # whole columns, no per-frame Python loop: a long clip fans
+        # out to ~10⁵ frames and per-frame appends would dominate
+        # the vectorized kernel
+        return {
+            "frame_idx": range(n_frames),
+            "t_ms": range(0, n_frames * hop_ms, hop_ms),
+            "rms": rms.tolist(),
+            "zcr": zcr.tolist(),
+        }
+
+    return _per_row(
+        df, FRAME_SCHEMA, kernel, _media_id, "frame_error",
+        ints=("frame_idx", "t_ms"), fan_out=True,
+    )
+
+
+def mp4_jpeg_frame_features(
+    df: DataFrame, max_frames: int | None = None
+) -> DataFrame:
+    """Frame-level features from REAL MJPEG-in-MP4 decode — the MP4
+    twin of :func:`gif_frame_features`, closing the last frame-level
+    codec seam (round-8 verdict #7): the ISO BMFF sample tables are
+    resolved by :func:`_mp4_sample_table` (stsz/stco/stsc, the real
+    demuxer lookup), each sample is a complete baseline JPEG sliced
+    from mdat and decoded by the from-scratch T.81 decoder
+    (operators/jpeg.py), reduced by :func:`_frame_columns`.
+    Compressed inter-frame codecs (avc1/hevc) remain the one
+    documented external seam — their samples are not independent
+    images. ``max_frames`` caps decode work per clip; a clip any of
+    whose frames fails yields ONE row with ``frame_error`` set (the
+    per-row harness)."""
+
+    def kernel(row) -> dict:
+        payload = _payload(row, ("video/mp4",))
+        _, _, samples = _mp4_sample_table(payload, "jpeg")
+        return _frame_columns(
+            _jpeg()._parse_jpeg(payload[off : off + size])[3]
+            for off, size in samples[:max_frames]
+        )
+
+    return _per_row(
+        df, MP4_FRAME_SCHEMA, kernel, _media_id, "frame_error",
+        ints=("frame_idx", "width", "height"), fan_out=True,
+    )
 
 
 def media_embedding(df: DataFrame, n_bands: int = 8) -> DataFrame:
     """REAL classical media embeddings — the honest non-neural
-    feature extractor with per-row error capture (a NEURAL encoder
-    remains the one documented external seam; this one is real math
-    end to end):
+    feature extractor (a NEURAL encoder remains the one documented
+    external seam; this one is real math end to end): the
+    ``n_bands`` band signature of :func:`_band_signature` — luma
+    histogram for the image table's types, FFT band energy for
+    WAV/μ-law. Embeddings are L1-normalized shares, comparable
+    across formats of the same modality; any other media_type, a
+    NULL or a corrupt payload carries ``embed_error`` (the per-row
+    harness). Only ``n_bands`` doubles per blob ever shuffle."""
 
-    - images (PPM/PGM/BMP/PNG/GIF/JPEG): full decode → Rec.601 luma
-      → ``n_bands``-bin normalized histogram (share of pixels per
-      luma band) — the classical color/intensity signature;
-    - audio (WAV/μ-law): full decode → numpy real FFT → power
-      spectrum → energy share in ``n_bands`` equal bands of
-      [0, Nyquist] — genuine spectral analysis (a synthesized sine
-      concentrates its energy in the band containing its frequency,
-      which is exactly what the q246 oracle predicts).
+    def kernel(row) -> dict:
+        if row.payload is None:
+            raise ValueError("null payload")
+        emb = _band_signature(bytes(row.payload), row.media_type, n_bands)
+        return {"embedding": [float(v) for v in emb]}
 
-    Embeddings are L1-normalized shares, comparable across formats
-    of the same modality; per-row error capture as everywhere in
-    this module. Scale: decode + reduce fuse into one narrow Arrow
-    stage; only ``n_bands`` doubles per blob ever shuffle."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-
-        image_grid = _image_grid
-
-        for pdf in batches:
-            rows = []
-            for mid, payload, mtype in zip(
-                pdf["media_id"], pdf["payload"], pdf["media_type"]
-            ):
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    payload = bytes(payload)
-                    if mtype in ("audio/wav", "audio/ulaw"):
-                        sr, x = (
-                            decode_wav_samples(payload)
-                            if mtype == "audio/wav"
-                            else decode_ulaw_samples(payload)
-                        )
-                        if len(x) < 2:
-                            raise ValueError("clip too short for FFT")
-                        power = np.abs(np.fft.rfft(x)) ** 2
-                        edges = np.linspace(
-                            0, len(power), n_bands + 1
-                        ).astype(int)
-                        bands = np.array([
-                            power[a:b].sum() for a, b in zip(edges, edges[1:])
-                        ])
-                        tot = bands.sum()
-                        emb = (bands / tot) if tot > 0 else bands
-                    elif mtype.startswith("image/"):
-                        # Integer luma (Rec.601 weights ×1000, which sum
-                        # to exactly 1000) so a constant gray value v
-                        # always lands in bin v*n_bands//256 — float
-                        # 0.299r+0.587g+0.114b rounds to 31.999... for
-                        # v=32 and truncates into the wrong bin at
-                        # every multiple-of-32 boundary.
-                        g = image_grid(payload, mtype).astype(np.int64)
-                        if g.shape[-1] >= 3:
-                            luma = (
-                                299 * g[..., 0]
-                                + 587 * g[..., 1]
-                                + 114 * g[..., 2]
-                            ) // 1000
-                        else:
-                            luma = g[..., 0]
-                        bins = np.minimum(
-                            luma * n_bands // 256,
-                            n_bands - 1,
-                        )
-                        emb = np.bincount(
-                            bins.reshape(-1), minlength=n_bands
-                        ).astype(np.float64)
-                        emb /= emb.sum()
-                    else:
-                        raise ValueError(f"unsupported media_type: {mtype}")
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "media_type": mtype,
-                            "embedding": [float(v) for v in emb],
-                            "embed_error": None,
-                        }
-                    )
-                except Exception as exc:  # per-row capture by contract
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "media_type": mtype,
-                            "embedding": None,
-                            "embed_error": f"{type(exc).__name__}: {exc}"[:200],
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, EMBED_SCHEMA)
+    return _per_row(df, EMBED_SCHEMA, kernel, _media_id_type, "embed_error")

@@ -26,9 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from .jsonl import check_required
-
-_CORRUPT = "__corrupt_record"
+from .jsonl import _CORRUPT, split_lines, with_corrupt_column
 
 
 def _csv_opts() -> dict:
@@ -43,19 +41,11 @@ def parse_csv_lines(
     verdict that splits type_mismatch from malformed_csv (every
     field as string: arity/quoting failures still corrupt it, type
     failures cannot)."""
-    if _CORRUPT in schema.fieldNames():
-        raise ValueError(
-            f"schema field {_CORRUPT!r} collides with the loader's "
-            "reserved corrupt-record column — rename it"
+    full = with_corrupt_column(schema)
+    probe = with_corrupt_column(
+        T.StructType(
+            [T.StructField(f.name, T.StringType()) for f in schema.fields]
         )
-    full = T.StructType(
-        [*schema.fields, T.StructField(_CORRUPT, T.StringType())]
-    )
-    probe = T.StructType(
-        [
-            *[T.StructField(f.name, T.StringType()) for f in schema.fields],
-            T.StructField(_CORRUPT, T.StringType()),
-        ]
     )
     opts = {**_csv_opts(), "sep": sep}
     ddl = lambda st: ", ".join(
@@ -88,32 +78,19 @@ def split_csv(
     joined by ``sep``), ``malformed_csv`` (arity or quoting failure
     — the all-strings probe also fails), ``type_mismatch`` (arity
     fine, at least one field failed its declared type),
-    ``missing_required:<col>``."""
-    check_required(schema, required)
-    blank = F.col("raw_line").rlike(r"^\s*$")
+    ``missing_required:<col>`` (the order of
+    :func:`sources.jsonl.split_lines`)."""
     header = F.col("raw_line") == F.lit(sep.join(schema.fieldNames()))
-    corrupt = F.col("rec").isNull() | F.col("rec").getField(
-        _CORRUPT
-    ).isNotNull()
-    reason = (
-        F.when(blank, F.lit("blank_line"))
-        .when(header, F.lit("header_line"))
-        .when(corrupt & F.col("probe_ok"), F.lit("type_mismatch"))
-        .when(corrupt, F.lit("malformed_csv"))
+    return split_lines(
+        parsed,
+        schema,
+        required,
+        lambda corrupt: [
+            (header, "header_line"),
+            (corrupt & F.col("probe_ok"), "type_mismatch"),
+            (corrupt, "malformed_csv"),
+        ],
     )
-    for col in required:
-        reason = reason.when(
-            F.col("rec").getField(col).isNull(),
-            F.lit(f"missing_required:{col}"),
-        )
-    p = parsed.withColumn("reason", reason)
-    clean = p.where(F.col("reason").isNull()).select(
-        *[F.col("rec").getField(f).alias(f) for f in schema.fieldNames()]
-    )
-    quarantine = p.where(F.col("reason").isNotNull()).select(
-        "raw_line", "src_file", "reason"
-    )
-    return clean, quarantine
 
 
 def read_csv_corpus(

@@ -52,6 +52,59 @@ def check_required(schema: T.StructType, required: tuple[str, ...]) -> None:
             )
 
 
+def with_corrupt_column(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the loader's reserved corrupt-record column —
+    the parse schema of the JSONL and CSV loaders; a schema that
+    already names that column is rejected."""
+    if _CORRUPT in schema.fieldNames():
+        raise ValueError(
+            f"schema field {_CORRUPT!r} collides with the loader's "
+            "reserved corrupt-record column — rename it"
+        )
+    return T.StructType(
+        [*schema.fields, T.StructField(_CORRUPT, T.StringType())]
+    )
+
+
+def split_lines(
+    parsed: DataFrame,
+    schema: T.StructType,
+    required: tuple[str, ...],
+    reasons,
+) -> tuple[DataFrame, DataFrame]:
+    """Route a parsed ``(raw_line, src_file, rec, ...)`` frame into
+    ``(clean, quarantine)`` — the one quarantine router behind
+    :func:`split_jsonl` and ``csvfile.split_csv``. A line's reason is
+    the first that holds of: ``blank_line``; the format's own
+    ``(condition, reason)`` pairs, ``reasons(corrupt)``, in order
+    (``corrupt``: the typed parse failed); then
+    ``missing_required:<col>`` in ``required`` order. ``clean`` is
+    the reason-less rows projected to the schema's columns;
+    ``quarantine`` is ``(raw_line, src_file, reason)``."""
+    check_required(schema, required)
+    # \s-anywhere, not F.trim: trim strips ASCII spaces only, and a
+    # tab-padded blank line mislabeled malformed is exactly the
+    # false alarm the reason taxonomy exists to avoid
+    reason = F.when(F.col("raw_line").rlike(r"^\s*$"), F.lit("blank_line"))
+    corrupt = F.col("rec").isNull() | F.col("rec").getField(
+        _CORRUPT
+    ).isNotNull()
+    missing = [
+        (F.col("rec").getField(col).isNull(), f"missing_required:{col}")
+        for col in required
+    ]
+    for cond, name in [*reasons(corrupt), *missing]:
+        reason = reason.when(cond, F.lit(name))
+    p = parsed.withColumn("reason", reason)
+    clean = p.where(F.col("reason").isNull()).select(
+        *[F.col("rec").getField(f).alias(f) for f in schema.fieldNames()]
+    )
+    quarantine = p.where(F.col("reason").isNotNull()).select(
+        "raw_line", "src_file", "reason"
+    )
+    return clean, quarantine
+
+
 def parse_lines(text_df: DataFrame, schema: T.StructType) -> DataFrame:
     """``value`` lines (batch OR streaming text source) →
     (raw_line, src_file, rec struct) — the shared narrow plan.
@@ -60,20 +113,12 @@ def parse_lines(text_df: DataFrame, schema: T.StructType) -> DataFrame:
     PERMISSIVE mode yields an all-NULL struct for a malformed line
     (indistinguishable from a valid ``{}``), so malformedness must be
     observed through the corrupt column, not struct nullness."""
-    if _CORRUPT in schema.fieldNames():
-        raise ValueError(
-            f"schema field {_CORRUPT!r} collides with the loader's "
-            "reserved corrupt-record column — rename it"
-        )
-    full = T.StructType(
-        [*schema.fields, T.StructField(_CORRUPT, T.StringType())]
-    )
     return text_df.select(
         F.col("value").alias("raw_line"),
         F.input_file_name().alias("src_file"),
         F.from_json(
             F.col("value"),
-            full,
+            with_corrupt_column(schema),
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": _CORRUPT},
         ).alias("rec"),
     )
@@ -92,15 +137,7 @@ def split_jsonl(
     :func:`_parsed`, batch or micro-batch) into ``(clean,
     quarantine)`` — ONE routing definition shared by the batch reader
     and the streaming ingest, so their accept/reject semantics cannot
-    drift."""
-    check_required(schema, required)
-    # \s-anywhere, not F.trim: trim strips ASCII spaces only, and a
-    # tab-padded blank line mislabeled malformed_json is exactly the
-    # false alarm the reason taxonomy exists to avoid
-    blank = F.col("raw_line").rlike(r"^\s*$")
-    corrupt = F.col("rec").isNull() | F.col("rec").getField(
-        _CORRUPT
-    ).isNotNull()
+    drift (the reasons of :func:`split_lines`)."""
     # type_mismatch vs malformed_json needs an independent "is this
     # a JSON object at all" probe — a schema-field-salvaged heuristic
     # mislabels a record whose ONLY present field type-fails (and is
@@ -110,24 +147,15 @@ def split_jsonl(
     is_obj = F.from_json(
         F.col("raw_line"), "map<string,string>"
     ).isNotNull()
-    reason = (
-        F.when(blank, F.lit("blank_line"))
-        .when(corrupt & is_obj, F.lit("type_mismatch"))
-        .when(corrupt, F.lit("malformed_json"))
+    return split_lines(
+        parsed,
+        schema,
+        required,
+        lambda corrupt: [
+            (corrupt & is_obj, "type_mismatch"),
+            (corrupt, "malformed_json"),
+        ],
     )
-    for col in required:
-        reason = reason.when(
-            F.col("rec").getField(col).isNull(),
-            F.lit(f"missing_required:{col}"),
-        )
-    p = parsed.withColumn("reason", reason)
-    clean = p.where(F.col("reason").isNull()).select(
-        *[F.col("rec").getField(f).alias(f) for f in schema.fieldNames()]
-    )
-    quarantine = p.where(F.col("reason").isNotNull()).select(
-        "raw_line", "src_file", "reason"
-    )
-    return clean, quarantine
 
 
 def read_jsonl_corpus(

@@ -268,30 +268,46 @@ def test_unigram_kl_matches_direct_formula(spark):
 
 
 def test_drift_lake_is_removed_at_exit(tmp_path, sf_dir):
-    """q212-q214 stream their partials into a temp-dir lake built once
-    per process; a child process that builds q212 and exits leaves no
-    ``sg_drift_lake_*`` dir behind."""
+    """The temp-dir lakes queries build once per process — q212-q214's
+    streamed drift partials, q103/q104's near-dup index, q110's PQ
+    index, q112's near-dup components and q244's DP partials — are
+    removed at interpreter exit: a child process that builds q104,
+    q110, q112, q212 and q244 and exits leaves no ``sg_*`` dir
+    behind."""
     import os
     import subprocess
     import sys
 
+    prefixes = (
+        "sg_neardup_idx_", "sg_pq_idx_", "sg_neardup_comp_",
+        "sg_drift_lake_", "sg_dp_lake_",
+    )
     child = (
         "import glob, sys, tempfile\n"
         "from cr_data_pipeline_project_spark.plans import all_queries\n"
         "from cr_data_pipeline_project_spark.session import get_session\n"
         "spark = get_session('drift-lake', master='local[2]',"
         " shuffle_partitions=2)\n"
-        "all_queries()['q212_streaming_ks_snapshot'](spark, sys.argv[1])\n"
-        "print(len(glob.glob(tempfile.gettempdir() + '/sg_drift_lake_*')))\n"
+        "qs = all_queries()\n"
+        "for name in ('q104_neardup_probe', 'q110_pq_ann_topk',"
+        " 'q112_neardup_dedup_export', 'q212_streaming_ks_snapshot',"
+        " 'q244_streaming_dp_snapshot'):\n"
+        "    qs[name](spark, sys.argv[1])\n"
+        "for prefix in sys.argv[2:]:\n"
+        "    print(prefix, len(glob.glob(tempfile.gettempdir()"
+        " + '/' + prefix + '*')))\n"
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "-c", child, sf_dir],
+        [sys.executable, "-c", child, sf_dir, *prefixes],
         cwd=repo,
         env=dict(os.environ, TMPDIR=str(tmp_path)),
         capture_output=True,
         text=True,
         check=True,
     ).stdout
-    assert out.split()[-1] == "1"  # the lake existed while the child ran
-    assert list(tmp_path.glob("sg_drift_lake_*")) == []
+    # each lake existed, once, while the child ran
+    counts = dict(line.split() for line in out.splitlines()[-len(prefixes):])
+    assert counts == {prefix: "1" for prefix in prefixes}
+    for prefix in prefixes:
+        assert list(tmp_path.glob(prefix + "*")) == []

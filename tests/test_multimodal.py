@@ -1162,3 +1162,142 @@ def test_mp4_sample_table_multichunk_stsc():
         _w, _h, _c, grid = jpeg._parse_jpeg(payload[off : off + size])
         got.append(int(round(float(grid.mean()))))
     assert got == [10, 20, 30, 40, 50]
+
+
+# ------------------------------------------------------------------ #
+# one harness, one image table, three shared rules                    #
+# ------------------------------------------------------------------ #
+
+
+def test_error_text_is_cut_at_200_characters(spark):
+    """Every entry point cuts its per-row error text at 200
+    characters — decode_media_features too."""
+    mtype = "image/" + "x" * 250
+    df = spark.createDataFrame(
+        [(1, b"P6\n1 1\n255\n\x00\x00\x00", mtype, None, None, None)],
+        multimodal.MEDIA_SCHEMA,
+    )
+    (row,) = multimodal.decode_media_features(df).collect()
+    full = f"ValueError: unsupported media_type: {mtype}"
+    assert row.decode_error == full[:200] and len(row.decode_error) == 200
+
+
+def test_gray_luma_is_the_gray_mean():
+    """A gray image's four feature slots are its gray mean — PGM's
+    rule, now PNG's too — including the fills where the float
+    0.299g+0.587g+0.114g sum is not g."""
+    import numpy as np
+
+    differing = [
+        v for v in range(256)
+        if 0.299 * (v / 255) + 0.587 * (v / 255) + 0.114 * (v / 255) != v / 255
+    ]
+    assert len(differing) == 89
+    for v in differing:
+        png = multimodal._png_encode(
+            np.full((1, 1), v, dtype=np.uint8), color_type=0
+        )
+        feat = multimodal.decode_png_features(png)["feat"]
+        assert feat == [feat[0]] * 4 == [v / 255] * 4
+        pgm = multimodal.decode_pgm_features(multimodal.synth_pgm(1, 1, v))
+        assert pgm["feat"] == feat
+
+
+def test_ulaw_duration_is_floored():
+    """duration_ms = n·1000 // sr for μ-law as for WAV: 5 samples at
+    7 kHz are 714.3 µs, so 0 ms (rounding gave 1)."""
+    clip = multimodal.synth_ulaw_wav(0x55, 7000, 5)
+    d = multimodal.decode_ulaw_features(clip)
+    assert d["n_samples"] == 5 and d["duration_ms"] == 5 * 1000 // 7000 == 0
+    wav = multimodal.decode_wav_features(multimodal.synth_wav(50.0, 7000, 5))
+    assert wav["duration_ms"] == d["duration_ms"]
+
+
+def _image_payload(mtype: str, w: int, h: int, v: int) -> bytes:
+    from cr_data_pipeline_project_spark.operators import jpeg
+
+    synth = {
+        "image/ppm": multimodal.synth_ppm,
+        "image/pgm": multimodal.synth_pgm,
+        "image/bmp": multimodal.synth_bmp,
+        "image/png": multimodal.synth_png,
+        "image/gif": multimodal.synth_gif,
+        "image/jpeg": jpeg.synth_jpeg,
+    }
+    assert set(synth) == set(multimodal._IMAGE_FORMATS)
+    return synth[mtype](w, h, v)
+
+
+@pytest.mark.parametrize(
+    "mtype", sorted(multimodal._IMAGE_FORMATS), ids=lambda t: t.split("/")[1]
+)
+def test_image_table_resize_then_decode(spark, mtype):
+    """For every type in the image table: resize_media then
+    decode_media_features keeps the target size and the fill (an
+    even fill survives JPEG's requantization exactly), and a payload
+    with a broken magic is a per-row error in both stages (resize
+    keeps the original bytes)."""
+    good = _image_payload(mtype, 6, 5, 42)
+    bad = b"XX" + good[2:]
+    df = spark.createDataFrame(
+        [(1, good, mtype, 6, 5, None), (2, bad, mtype, 6, 5, None)],
+        multimodal.MEDIA_SCHEMA,
+    )
+    resized = {
+        r.media_id: r for r in multimodal.resize_media(df, 3, 2).collect()
+    }
+    assert (resized[1].width, resized[1].height) == (3, 2)
+    assert resized[1].resize_error is None
+    assert resized[2].resize_error is not None
+    assert bytes(resized[2].payload) == bad and resized[2].width == 6
+    dec = {
+        r.media_id: r
+        for r in multimodal.decode_media_features(
+            multimodal.resize_media(df, 3, 2).drop("resize_error")
+        ).collect()
+    }
+    assert dec[1].decode_error is None
+    assert (dec[1].width, dec[1].height) == (3, 2)
+    assert dec[1].feat == pytest.approx([42 / 255] * 4, abs=1e-12)
+    assert dec[2].decode_error is not None and dec[2].feat is None
+
+
+def test_multimodal_has_one_harness():
+    """``operators/multimodal.py`` has one ``mapInPandas`` call and
+    one per-row ``except Exception`` capture site (the harness);
+    the only other broad catch is payload_features' raw-byte
+    fallback."""
+    import ast
+
+    with open(multimodal.__file__) as f:
+        tree = ast.parse(f.read())
+    calls = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "mapInPandas"
+    ]
+    assert len(calls) == 1
+
+    def broad(handler):
+        return handler.type is None or any(
+            isinstance(n, ast.Name) and n.id in ("Exception", "BaseException")
+            for n in ast.walk(handler.type)
+        )
+
+    sites = [
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.ExceptHandler) and broad(node)
+    ]
+    module_level = [
+        node
+        for stmt in tree.body
+        if not isinstance(stmt, ast.FunctionDef)
+        for node in ast.walk(stmt)
+        if isinstance(node, ast.ExceptHandler)
+    ]
+    assert sorted(sites) == ["_per_row", "payload_features"]
+    assert not module_level

@@ -45,7 +45,7 @@ def test_entry_smoke(spark):
     assert "usage_rate" in df.columns
 
 
-def test_q223_auc_formula_reference(spark):
+def test_q223_auc_formula_reference(spark, tmp_path):
     """Pin the rank-sum AUC formula against hand-computed cases,
     independent of the DuckDB twin: perfect separation, perfect
     inversion, and a tie spanning both classes (midrank)."""
@@ -69,7 +69,7 @@ def test_q223_auc_formula_reference(spark):
         import os
         import tempfile
 
-        d = tempfile.mkdtemp(prefix="sg_auc_fix_")
+        d = tempfile.mkdtemp(dir=tmp_path)
         spark.createDataFrame(
             pdf, "vec_id long, embedding array<float>, label int"
         ).write.parquet(os.path.join(d, "embeddings.parquet"))
