@@ -21,6 +21,9 @@ Scale notes (100 TB / billions of vectors)
 - Iterations are driver-side loop steps: each generation's centroid
   table is collected and feeds the next assign; only the last one
   ``localCheckpoint``s.
+- ``kmeans_assign`` runs the fit's assign kernel once
+  (``similarity.nearest_centroids``, after one collect of the
+  centroid table); ``inertia`` scores with a sequential JVM fold.
 - Seeding samples the k rows with the smallest ``xxhash64(id,
   seed)`` — engine- and partitioning-independent. The fitted means
   are float-sum-order dependent in the last ulps (as in every
@@ -33,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .similarity import as_double_vec
+from .similarity import as_double_vec, nearest_centroids
 
 __all__ = ["kmeans_fit", "kmeans_assign", "inertia"]
 
@@ -47,42 +50,16 @@ def _sqdist(a: Column, b: Column) -> Column:
     )
 
 
-def _assign(
-    vecs: DataFrame, cents: DataFrame, engine: str = "expr"
-) -> DataFrame:
-    """(_id, vd) × centroids → (_id, vd, cid) of the nearest
-    centroid, ties broken on smallest cid.
+def _pad(dim: Column) -> Column:
+    """``vd`` zero-padded to ``dim`` elements."""
+    return F.concat(F.col("vd"), F.array_repeat(F.lit(0.0), dim - F.size("vd")))
 
-    ``engine='expr'``: broadcast join + struct-min aggregate — pure
-    JVM, bit-reproducible sequential folds, the shape the oracled
-    IVF assignment shares. Partial aggregation collapses the k
-    candidates per vector map-side, but each of the N×k distance
-    folds evaluates interpreted — cost grows linearly in k.
 
-    ``engine='arrow'``: one BLAS GEMM per Arrow batch against all k
-    centroids (similarity.nearest_centroids) — no N×k row expansion
-    at all, constant-ish cost in k. Summation order differs in the
-    last ulps, so this path serves the fit loop and other
-    recall-gated surfaces, not bit-parity-tested assignment."""
-    if engine == "arrow":
-        from .similarity import nearest_centroids
-
-        return nearest_centroids(
-            vecs, cents, probe=1, id_col="_id", vec_col="vd", carry_vec=True
-        ).select("_id", "vd", "cid")
-    scored = vecs.join(F.broadcast(cents)).withColumn(
-        "_d", _sqdist(F.col("vd"), F.col("cv"))
-    )
-    return (
-        scored.groupBy("_id")
-        .agg(
-            F.min(F.struct(F.col("_d"), F.col("cid"))).alias("_m"),
-            # all rows in the group share the vector; first() is
-            # value-deterministic here
-            F.first("vd").alias("vd"),
-        )
-        .select("_id", "vd", F.col("_m.cid").alias("cid"))
-    )
+def _vecs(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(_id, vd double array) rows of ``corpus``, null vectors dropped."""
+    return corpus.select(
+        F.col(id_col).alias("_id"), as_double_vec(vec_col).alias("vd")
+    ).where(F.col("vd").isNotNull())
 
 
 def kmeans_fit(
@@ -103,21 +80,12 @@ def kmeans_fit(
     padding). Null vectors take no part; an empty or all-null corpus
     fits no centroid (0 rows).
 
-    The assign step is the Arrow GEMM (see :func:`_assign`): the fit
-    is ulp-tolerant by contract (tests assert inertia descent and
+    The assign step is :func:`similarity.nearest_centroids`' GEMM:
+    the fit is ulp-tolerant by contract (tests assert inertia descent and
     assignment quality, never bit-exact centroids), and the GEMM
     keeps per-iteration cost flat as k grows toward the √N centroid
     counts a real IVF fit wants."""
-    vecs = (
-        corpus.select(F.col(id_col).alias("_id"), as_double_vec(vec_col).alias("vd"))
-        .where(F.col("vd").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-
-    def _pad(dim: Column) -> Column:
-        return F.concat(
-            F.col("vd"), F.array_repeat(F.lit(0.0), dim - F.size("vd"))
-        )
+    vecs = _vecs(corpus, id_col, vec_col).localCheckpoint(eager=True)
 
     # deterministic seeds, numbered 0..k-1 in hash order (k rows on
     # the driver-side window is trivial); dim rides along
@@ -151,8 +119,10 @@ def kmeans_fit(
     avgs = [F.avg(F.col("vd")[i]).alias(f"__a{i}") for i in range(dim)]
     arr = F.array(*[F.col(f"__a{i}") for i in range(dim)]).alias("cv")
     for i in range(n_iter):
-        upd = _assign(padded, rows, engine="arrow").groupBy("cid").agg(*avgs)
-        upd = upd.select("cid", arr)
+        upd = nearest_centroids(
+            padded, rows, id_col="_id", vec_col="vd", carry_vec=True
+        )
+        upd = upd.groupBy("cid").agg(*avgs).select("cid", arr)
         if i < n_iter - 1:
             rows = upd.collect()
     return upd.localCheckpoint(eager=True)
@@ -165,11 +135,15 @@ def kmeans_assign(
     vec_col: str = "emb",
 ) -> DataFrame:
     """Assign every vector to its nearest fitted centroid (squared
-    L2). Returns ``(id_col, cluster_id)``. Centroids broadcast."""
-    vecs = corpus.select(
-        F.col(id_col).alias("_id"), as_double_vec(vec_col).alias("vd")
-    )
-    return _assign(vecs, centroids).select(
+    L2, ties toward the smaller cid; :func:`similarity.nearest_centroids`).
+    Returns ``(id_col, cluster_id)``. Which vectors: the fit's rule —
+    every non-null vector no longer than the centroids' dim, read
+    zero-padded to it; a null or longer vector gets no row."""
+    rows = centroids.select("cid", "cv").collect()  # bounded: k×dim
+    dim = len(rows[0]["cv"]) if rows else 0
+    vecs = _vecs(corpus, id_col, vec_col).where(F.size("vd") <= dim)
+    vecs = vecs.select("_id", _pad(F.lit(dim)).alias("vd"))
+    return nearest_centroids(vecs, rows, id_col="_id", vec_col="vd").select(
         F.col("_id").alias(id_col), F.col("cid").alias("cluster_id")
     )
 
@@ -182,12 +156,13 @@ def inertia(
 ) -> float:
     """Sum of squared distances to the nearest centroid — the
     quantity Lloyd iterations monotonically decrease (up to float
-    summation noise). One aggregate; for monitoring/tests."""
-    vecs = corpus.select(
-        F.col(id_col).alias("_id"), as_double_vec(vec_col).alias("vd")
-    )
-    scored = vecs.join(F.broadcast(centroids)).withColumn(
-        "_d", _sqdist(F.col("vd"), F.col("cv"))
+    summation noise) — over the vectors :func:`kmeans_assign`
+    assigns, read the same way. One aggregate; for monitoring/tests."""
+    scored = (
+        _vecs(corpus, id_col, vec_col)
+        .join(F.broadcast(centroids))
+        .where(F.size("vd") <= F.size("cv"))
+        .withColumn("_d", _sqdist(_pad(F.size("cv")), F.col("cv")))
     )
     row = (
         scored.groupBy("_id")

@@ -3,10 +3,10 @@ MinHash+LSH, SimHash, and n-gram Jaccard.
 
 All are DataFrame compositions with JVM-side hashing (``xxhash64`` /
 ``md5``) staying inside whole-stage codegen until the unavoidable
-shuffles — except the SimHash signature step, whose per-document
-local reduction defaults to an Arrow-batched mapInPandas engine
-(bit-identical to the expression engine, kept as ``engine='expr'``
-and asserted equal in tests).
+shuffles — except the SimHash signature step, a per-document local
+reduction that runs as one Arrow-batched mapInPandas pass
+(bit-identical to the pure-expression form that tests/test_dedup.py
+keeps as its reference).
 
 Scale notes (100 TB corpus)
 ---------------------------
@@ -578,16 +578,23 @@ def _md5_half(col: Column, offset: int) -> Column:
     return F.conv(F.substring(F.md5(col), offset, 8), 16, 10).cast("bigint")
 
 
-def _simhash_signatures_arrow(
-    df: DataFrame, text_col: str, id_col: str, n: int
+def simhash_signatures(
+    df: DataFrame, text_col: str, id_col: str, n: int = 5
 ) -> DataFrame:
-    """Arrow-batched SimHash: per document the signature is a purely
-    local reduction (distinct shingles → md5 halves → 64 bit-sums →
-    signs), so one mapInPandas pass computes it with no explode, no
-    distinct aggregate, and no 65-column groupBy. Integer arithmetic
-    end-to-end — bit-identical to the expression engine. The
-    repartition spreads the per-row compute across cores (narrow
-    scan, wide compute) and the shuffle moves doc rows once."""
+    """64-bit SimHash over word n-gram shingles, as two 32-bit halves
+    (hi, lo) for portable arithmetic: per bit, sum ±1 over feature
+    hashes; sign → bit. md5-based so an external oracle can reproduce
+    it. Returns (id, sim_hi, sim_lo).
+
+    Per document the signature is a purely local reduction (distinct
+    shingles → md5 halves → 64 bit-sums → signs), so one Arrow-batched
+    mapInPandas pass computes it with no explode, no distinct
+    aggregate and no 65-column groupBy — ~2× the throughput of that
+    expression form, which tests/test_dedup.py keeps as the reference
+    (hashlib md5 and numpy bit arithmetic are integer-exact, so the
+    two agree to the bit). The repartition spreads the per-row
+    compute across cores (narrow scan, wide compute) and the shuffle
+    moves doc rows once."""
     import hashlib
 
     import numpy as np
@@ -642,69 +649,6 @@ def _simhash_signatures_arrow(
             compute,
             schema=f"{id_col} {id_type}, sim_hi long, sim_lo long",
         )
-    )
-
-
-def simhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 5,
-    engine: str = "arrow",
-) -> DataFrame:
-    """64-bit SimHash over word n-gram shingles, as two 32-bit halves
-    (hi, lo) for portable arithmetic: per bit, sum ±1 over feature
-    hashes; sign → bit. md5-based so an external oracle can reproduce
-    it. Returns (id, sim_hi, sim_lo).
-
-    ``engine='arrow'`` (default) computes shingling + hashing +
-    bit-sums in one Arrow-batched mapInPandas pass — hashlib md5 and
-    numpy bit arithmetic are integer-exact, so the result is
-    bit-identical to the expression engine (asserted in
-    tests/test_dedup.py) at ~2× the throughput: the expression path
-    pays explode + distinct + a 65-aggregate, all to compute what is
-    a per-document local reduction. ``engine='expr'`` keeps the pure
-    whole-stage-codegen form (zero Python anywhere)."""
-    if engine == "arrow":
-        return _simhash_signatures_arrow(df, text_col, id_col, n)
-    # Project the md5 halves ONCE per row before aggregating: an
-    # expression embedded in each of the 64 sum aggregates is
-    # evaluated per-aggregate (no cross-aggregate CSE), i.e. 64 md5
-    # computations per shingle. Per bit k the SimHash needs
-    # sum(±1) = 2·sum(bit_k) − n, so the per-row work per aggregate
-    # is one shiftright+mask on a projected long (pure integer
-    # codegen) and n is shared by all 64 bits.
-    sh = shingle_set(df, text_col, id_col, n).select(
-        F.col(id_col),
-        _md5_half(F.col("shingle"), 1).alias("__hi"),
-        _md5_half(F.col("shingle"), 9).alias("__lo"),
-    )
-    sums = [F.count(F.lit(1)).alias("__n")]
-    for k in range(32):
-        sums.append(
-            F.sum(
-                F.shiftright(F.col("__hi"), k).bitwiseAND(F.lit(1))
-            ).alias(f"__shi{k}")
-        )
-        sums.append(
-            F.sum(
-                F.shiftright(F.col("__lo"), k).bitwiseAND(F.lit(1))
-            ).alias(f"__slo{k}")
-        )
-    agg = sh.groupBy(id_col).agg(*sums)
-    sim_hi = None
-    sim_lo = None
-    for k in range(32):
-        set_hi = 2 * F.col(f"__shi{k}") - F.col("__n") >= 0
-        set_lo = 2 * F.col(f"__slo{k}") - F.col("__n") >= 0
-        term_hi = F.when(set_hi, F.lit(1 << k)).otherwise(F.lit(0))
-        term_lo = F.when(set_lo, F.lit(1 << k)).otherwise(F.lit(0))
-        sim_hi = term_hi if sim_hi is None else sim_hi + term_hi
-        sim_lo = term_lo if sim_lo is None else sim_lo + term_lo
-    return agg.select(
-        F.col(id_col),
-        sim_hi.cast("bigint").alias("sim_hi"),
-        sim_lo.cast("bigint").alias("sim_lo"),
     )
 
 

@@ -944,7 +944,7 @@ def _image_pixels(mtype: str, payload: bytes):
     grid with palettes resolved, maxval)."""
     fmt = _IMAGE_FORMATS.get(mtype)
     if fmt is None:
-        raise ValueError(f"unsupported image type {mtype}")
+        raise ValueError(f"unsupported media_type: {mtype}")
     grid, maxval, palette = fmt.parse(payload)
     return (grid if palette is None else palette[grid]), maxval
 

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..session import local_frame
-from .similarity import as_double_vec
+from .similarity import _centroid_table, _nearest, as_double_vec
 
 
 def _sub_rows(v: DataFrame, m: int, sub_d: int) -> DataFrame:
@@ -61,35 +61,25 @@ def _sub_rows(v: DataFrame, m: int, sub_d: int) -> DataFrame:
 
 
 def _pack_books(book_rows) -> dict:
-    """(sub, cid, cv) rows → {sub: (cids, C, |C|²)} numpy tables for
-    the Arrow assignment kernel. Accepts any iterable of Row-likes
-    (a collected codebook DataFrame or the fit loop's own list)."""
-    import numpy as np
-
+    """(sub, cid, cv) rows → {sub: (cids, C, |C|²)} numpy tables
+    sorted by cid (:func:`similarity._centroid_table` per subspace).
+    Accepts any iterable of Row-likes (a collected codebook DataFrame
+    or the fit loop's own list)."""
     tables: dict[int, list] = {}
     for r in book_rows:
-        tables.setdefault(int(r["sub"]), []).append(
-            (int(r["cid"]), list(r["cv"]))
-        )
-    packed = {}
-    for s, ent in tables.items():
-        ent.sort()
-        cids = np.array([c for c, _ in ent], dtype=np.int64)
-        C = np.array([cv for _, cv in ent], dtype=np.float64)
-        packed[s] = (cids, C, (C * C).sum(axis=1))
-    return packed
+        tables.setdefault(int(r["sub"]), []).append((r["cid"], r["cv"]))
+    return {s: _centroid_table(ent) for s, ent in tables.items()}
 
 
 def _assign_all_subs(rows: DataFrame, books, carry_sv: bool):
     """Assign every (sub, _id, sv) row to its own subspace's nearest
     centroid in one Arrow pass — all m codebooks ship in the task
-    closure (m·k sub-vectors, tiny by construction). Ties break
-    toward the smallest cid (codebooks sort by cid before the GEMM),
-    matching the flat assigner's contract. ``books`` is either a
-    codebook DataFrame (collected here — bounded; job-free when the
-    fit returned its LocalRelation form) or an already-packed dict
-    from :func:`_pack_books` (the fit loop's path: zero extra jobs
-    per iteration)."""
+    closure (m·k sub-vectors, tiny by construction). The pick is
+    :func:`similarity._nearest`'s, so ties break toward the smallest
+    cid. ``books`` is either a codebook DataFrame (collected here —
+    bounded; job-free when the fit returned its LocalRelation form)
+    or an already-packed dict from :func:`_pack_books` (the fit
+    loop's path: zero extra jobs per iteration)."""
     import numpy as np
     import pandas as pd
 
@@ -113,9 +103,8 @@ def _assign_all_subs(rows: DataFrame, books, carry_sv: bool):
                 msk = subs == s
                 if not msk.any():
                     continue
-                V = np.stack(pdf["sv"].values[msk])
-                D = cn - 2.0 * (V @ C.T)
-                out[msk] = cids[D.argmin(axis=1)]
+                pick, _ = _nearest(np.stack(pdf["sv"].values[msk]), C, cn, 1)
+                out[msk] = cids[pick[:, 0]]
             if (out < 0).any():
                 missing = sorted(set(subs[out < 0].tolist()))
                 raise ValueError(
@@ -307,6 +296,106 @@ def pq_decode(
     )
 
 
+def _adc_topk(
+    codes: DataFrame,
+    codebooks: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    k: int,
+    cells: DataFrame | None = None,
+    nprobe: int = 0,
+) -> DataFrame:
+    """The one ADC scan behind :func:`pq_topk` and :func:`ivfpq_topk`:
+    collect the queries, build each one's (m, kcent) LUT of squared
+    sub-distances (+inf for absent cids), stream ``codes`` through
+    one Arrow kernel that emits every batch's local top-k per query,
+    and merge with one per-query window on (adist, neighbor_id).
+    With ``cells`` (the coarse (cid, cv) table), each query keeps
+    only rows whose ``cell`` is one of its ``nprobe`` nearest cells
+    (picked by :func:`similarity._nearest`, one query at a time)."""
+    import numpy as np
+    import pandas as pd
+
+    if cells is not None:
+        cell_ids, C, cn = _centroid_table(
+            (r["cid"], r["cv"]) for r in cells.select("cid", "cv").collect()
+        )  # bounded: n_cells×dim
+    books = _pack_books(codebooks.collect())  # bounded: m·k' rows
+    m = len(books)
+    kcent = max(int(cids.max()) for cids, _, _ in books.values()) + 1
+    sub_d = next(iter(books.values()))[1].shape[1]
+
+    id_type = dict(codes.dtypes)[id_col]
+    qid_type = dict(queries.dtypes)[query_id_col]
+    qrows = queries.select(
+        F.col(query_id_col).alias("__qid"), as_double_vec(vec_col).alias("__qv")
+    ).collect()  # bounded query set by contract
+    if not qrows:
+        # same schema as the non-empty path — a hardcoded long would
+        # diverge for non-long ids and break unions/appends
+        return local_frame(
+            codes.sparkSession,
+            [],
+            f"query_id {qid_type}, neighbor_id {id_type}, "
+            "rank int, adist double",
+        )
+    qids, luts, probed = [], [], []
+    for r in qrows:
+        q = np.array(r["__qv"], dtype=np.float64)
+        qids.append(r["__qid"])
+        L = np.full((m, kcent), np.inf)
+        for s, (cids, B, _) in books.items():
+            qs = q[s * sub_d : (s + 1) * sub_d]
+            for cid, cv in zip(cids, B):
+                d = qs - cv
+                L[s, cid] = float(d @ d)
+        luts.append(L)
+        if cells is not None:
+            # one row at a time: a batched GEMM's summation order
+            # differs in the last ulps from this per-query product
+            pick, _ = _nearest(q[None, :], C, cn, nprobe)
+            probed.append(cell_ids[pick[0]])
+    LUT = np.stack(luts)  # (Q, m, kcent)
+    subs_idx = np.arange(m)
+
+    def kern(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            M = np.stack(pdf["codes"].values).astype(np.int64)  # (n, m)
+            ids = pdf[id_col].values
+            for qi, qid in enumerate(qids):
+                mask = ids != qid
+                if probed:
+                    mask &= np.isin(pdf["cell"].values, probed[qi])
+                kk = min(k, int(mask.sum()))
+                if kk == 0:
+                    continue
+                d = LUT[qi][subs_idx[None, :], M[mask]].sum(axis=1)
+                part = np.argpartition(d, kk - 1)[:kk]
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.repeat(qid, kk),
+                        "neighbor_id": ids[mask][part],
+                        "adist": d[part],
+                    }
+                )
+
+    partial = codes.mapInPandas(
+        kern, f"query_id {qid_type}, neighbor_id {id_type}, adist double"
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("adist"), F.col("neighbor_id"))
+    return (
+        partial.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id", "rank", F.round("adist", 6).alias("adist")
+        )
+    )
+
+
 def pq_topk(
     codes: DataFrame,
     codebooks: DataFrame,
@@ -333,86 +422,7 @@ def pq_topk(
     emits its local top-k per query, and one final per-query window
     merges ≤ batches·k candidate rows. Self-matches (same id) are
     excluded."""
-    import numpy as np
-    import pandas as pd
-
-    books: dict[int, list] = {}
-    for r in codebooks.collect():  # bounded: m·k' rows
-        books.setdefault(int(r["sub"]), []).append(
-            (int(r["cid"]), np.array(r["cv"], dtype=np.float64))
-        )
-    m = len(books)
-    kcent = max(c for ent in books.values() for c, _ in ent) + 1
-    sub_d = len(next(iter(books.values()))[0][1])
-
-    id_type = dict(codes.dtypes)[id_col]
-    qid_type = dict(queries.dtypes)[query_id_col]
-    qrows = queries.select(
-        F.col(query_id_col).alias("__qid"), as_double_vec(vec_col).alias("__qv")
-    ).collect()  # bounded query set by contract
-    if not qrows:
-        # same schema as the non-empty path — a hardcoded long would
-        # diverge for non-long ids and break unions/appends
-        return local_frame(
-            codes.sparkSession,
-            [],
-            f"query_id {qid_type}, neighbor_id {id_type}, "
-            "rank int, adist double",
-        )
-    qids = [r["__qid"] for r in qrows]
-    # LUT[qi]: (m, kcent) squared distances, +inf for absent cids
-    luts = []
-    for r in qrows:
-        q = np.array(r["__qv"], dtype=np.float64)
-        L = np.full((m, kcent), np.inf)
-        for s, ent in books.items():
-            qs = q[s * sub_d : (s + 1) * sub_d]
-            for cid, cv in ent:
-                d = qs - cv
-                L[s, cid] = float(d @ d)
-        luts.append(L)
-    LUT = np.stack(luts)  # (Q, m, kcent)
-    subs_idx = np.arange(m)
-
-    schema = (
-        f"query_id {qid_type}, neighbor_id {id_type}, adist double"
-    )
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(pdf["codes"].values).astype(np.int64)  # (n, m)
-            ids = pdf[id_col].values
-            for qi, qid in enumerate(qids):
-                d = LUT[qi][subs_idx[None, :], M].sum(axis=1)
-                mask = ids != qid
-                cand_ids, cand_d = ids[mask], d[mask]
-                kk = min(k, len(cand_ids))
-                if kk == 0:
-                    continue
-                part = np.argpartition(cand_d, kk - 1)[:kk]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qid, kk),
-                        "neighbor_id": cand_ids[part],
-                        "adist": cand_d[part],
-                    }
-                )
-
-    partial = codes.mapInPandas(kern, schema)
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adist"), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round("adist", 6).alias("adist")
-        )
-    )
+    return _adc_topk(codes, codebooks, queries, id_col, vec_col, query_id_col, k)
 
 
 def ivfpq_topk(
@@ -428,9 +438,10 @@ def ivfpq_topk(
 ) -> DataFrame:
     """IVF-PQ: the production ANN stack (Jégou et al., TPAMI 2011
     §V) — a coarse quantizer routes each query to its ``nprobe``
-    nearest CELLS, and the ADC scan touches only those cells' codes
-    instead of the whole corpus: compute drops by ~n_cells/nprobe on
-    top of PQ's 32× byte compression.
+    nearest CELLS (squared L2, ties toward the smaller cid), and the
+    ADC scan touches only those cells' codes instead of the whole
+    corpus: compute drops by ~n_cells/nprobe on top of PQ's 32× byte
+    compression.
 
     ``codes_with_cell``: (id_col, codes, cell) — the PQ-encoded
     corpus with its coarse assignment (clustering.kmeans_assign),
@@ -441,93 +452,9 @@ def ivfpq_topk(
     rank, adist) like :func:`pq_topk`; a query recalls a neighbor
     only if they share a probed cell — the standard IVF recall
     trade, governed by ``nprobe``."""
-    import numpy as np
-    import pandas as pd
-
-    cells = sorted(
-        cell_centroids.select("cid", "cv").collect(), key=lambda r: r["cid"]
-    )  # bounded: n_cells×dim
-    C = np.array([list(r["cv"]) for r in cells], dtype=np.float64)
-    cell_ids = np.array([r["cid"] for r in cells], dtype=np.int64)
-    cn = (C * C).sum(axis=1)
-
-    books: dict[int, list] = {}
-    for r in codebooks.collect():
-        books.setdefault(int(r["sub"]), []).append(
-            (int(r["cid"]), np.array(r["cv"], dtype=np.float64))
-        )
-    m = len(books)
-    kcent = max(c for ent in books.values() for c, _ in ent) + 1
-    sub_d = len(next(iter(books.values()))[0][1])
-
-    id_type = dict(codes_with_cell.dtypes)[id_col]
-    qid_type = dict(queries.dtypes)[query_id_col]
-    qrows = queries.select(
-        F.col(query_id_col).alias("__qid"), as_double_vec(vec_col).alias("__qv")
-    ).collect()  # bounded query set by contract
-    if not qrows:
-        # same schema as the non-empty path (see pq_topk)
-        return local_frame(
-            codes_with_cell.sparkSession,
-            [],
-            f"query_id {qid_type}, neighbor_id {id_type}, "
-            "rank int, adist double",
-        )
-    qids, luts, probed = [], [], []
-    p = min(nprobe, len(cells))
-    for r in qrows:
-        q = np.array(r["__qv"], dtype=np.float64)
-        qids.append(r["__qid"])
-        # coarse routing: p nearest cells (ties toward smaller cid
-        # via stable sort over ascending-cid columns)
-        D = cn - 2.0 * (C @ q)
-        order = np.argsort(D, kind="stable")[:p]
-        probed.append(set(int(c) for c in cell_ids[order]))
-        L = np.full((m, kcent), np.inf)
-        for s, ent in books.items():
-            qs = q[s * sub_d : (s + 1) * sub_d]
-            for cid, cv in ent:
-                d = qs - cv
-                L[s, cid] = float(d @ d)
-        luts.append(L)
-    LUT = np.stack(luts)
-    subs_idx = np.arange(m)
-
-    schema = f"query_id {qid_type}, neighbor_id {id_type}, adist double"
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(pdf["codes"].values).astype(np.int64)
-            ids = pdf[id_col].values
-            rcells = pdf["cell"].values
-            for qi, qid in enumerate(qids):
-                mask = np.isin(rcells, list(probed[qi])) & (ids != qid)
-                if not mask.any():
-                    continue
-                d = LUT[qi][subs_idx[None, :], M[mask]].sum(axis=1)
-                cand_ids = ids[mask]
-                kk = min(k, len(cand_ids))
-                part = np.argpartition(d, kk - 1)[:kk]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qid, kk),
-                        "neighbor_id": cand_ids[part],
-                        "adist": d[part],
-                    }
-                )
-
-    partial = codes_with_cell.mapInPandas(kern, schema)
-    from pyspark.sql.window import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.col("adist"), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round("adist", 6).alias("adist")
-        )
+    return _adc_topk(
+        codes_with_cell, codebooks, queries, id_col, vec_col, query_id_col, k,
+        cells=cell_centroids, nprobe=nprobe,
     )
 
 

@@ -19,9 +19,12 @@ Scale notes (100 TB / billions of vectors)
 - IVF: corpus is pre-assigned to centroids (one shuffle, or better:
   written bucketed by cluster_id); a query probes ``nprobe``
   clusters → candidate set shrinks by ~ncentroids/nprobe. Centroid
-  count should be ~sqrt(N) at scale; here centroids are a
-  deterministic id-prefix sample standing in for a k-means fit
-  (pluggable — any centroid DataFrame works).
+  count should be ~sqrt(N) at scale. Centroids are any ``(cid, cv)``
+  table; ``clustering.kmeans_fit`` fits them.
+- Every nearest-centroid pick in the numpy kernels (this module's
+  flat and two-level assigners, PQ's subspace assign and IVF-PQ's
+  coarse routing) goes through :func:`_nearest`: one distance
+  ``‖c‖² − 2·v·c`` over cid-sorted centroids, one tie rule.
 - Normalize once, store the norm: cosine becomes a pure dot product.
 """
 
@@ -296,6 +299,33 @@ def cosine_neardup_pairs(
     return pairs.select("vec_a", "vec_b", F.round("cos", 6).alias("score"))
 
 
+def _cosine_probe(
+    v: DataFrame,
+    key: str,
+    vec: str,
+    centroids: DataFrame,
+    centroid_id: str,
+    centroid_vec: str,
+    n: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The ``n`` max-cosine centroids per ``key`` of ``v`` as (key,
+    *carry, cluster_id) rows: centroids broadcast, ties toward the
+    smaller centroid id (the order q42's oracle twin ranks by)."""
+    cents = centroids.select(
+        F.col(centroid_id), as_double_vec(centroid_vec).alias("cvd")
+    )
+    scored = v.crossJoin(F.broadcast(cents)).select(
+        key, *carry, centroid_id, cosine(F.col(vec), F.col("cvd")).alias("cos")
+    )
+    w = Window.partitionBy(key).orderBy(F.desc("cos"), F.col(centroid_id))
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= n)
+        .select(key, *carry, F.col(centroid_id).alias("cluster_id"))
+    )
+
+
 def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -308,20 +338,7 @@ def ivf_assign(
     Centroids broadcast; tie-break on centroid id.
     Returns (vec_id, cluster_id)."""
     v = corpus.select(F.col(id_col), as_double_vec(vec_col).alias("v"))
-    cents = centroids.select(
-        F.col(centroid_id), as_double_vec(centroid_vec).alias("cvd")
-    )
-    scored = v.crossJoin(F.broadcast(cents)).select(
-        id_col,
-        centroid_id,
-        cosine(F.col("v"), F.col("cvd")).alias("cos"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cos"), F.col(centroid_id))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(F.col(id_col), F.col(centroid_id).alias("cluster_id"))
-    )
+    return _cosine_probe(v, id_col, "v", centroids, centroid_id, centroid_vec, 1)
 
 
 def ivf_topk(
@@ -340,15 +357,8 @@ def ivf_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double_vec(vec_col).alias("qv")
     )
-    cents = centroids.select("cid", as_double_vec("cv").alias("cvd"))
-    probe_scored = q.crossJoin(F.broadcast(cents)).select(
-        "query_id", "qv", "cid", cosine(F.col("qv"), F.col("cvd")).alias("cos")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("cid"))
-    probes = (
-        probe_scored.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= nprobe)
-        .select("query_id", "qv", F.col("cid").alias("cluster_id"))
+    probes = _cosine_probe(
+        q, "query_id", "qv", centroids, "cid", "cv", nprobe, carry=("qv",)
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double_vec(vec_col).alias("cv")
@@ -605,7 +615,6 @@ def semantic_neardup(
     probe: int = 3,
     max_cluster: int = 100_000,
     target_cluster: int = 125,
-    verify: str = "gemm",
     routing: str = "flat",
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al.,
@@ -644,7 +653,6 @@ def semantic_neardup(
     standard escape hatch) rather than a flat table: it never
     collects the k×dim fine table, so the 2¹⁶ cap does not apply."""
     from .clustering import kmeans_fit
-    from .dedup import _bucket_pairs
 
     if k is None:
         from math import ceil
@@ -668,35 +676,7 @@ def semantic_neardup(
         assigned = nearest_centroids(
             v, cents, probe=probe, id_col="id", vec_col="v"
         )
-    if verify == "gemm":
-        return _verify_clusters_gemm(v, assigned, threshold, max_cluster)
-    pairs = _bucket_pairs(assigned, ["cid"], "id", max_cluster)
-    # The verify joins fetch CORPUS-sized vector tables — hint them
-    # to shuffle-hash: a parquet size estimate under the broadcast
-    # threshold would otherwise broadcast the whole vector table
-    # (deserialized arrays are many times the file size; measured as
-    # a driver broadcast-build OOM at 100k×64d in the 50× scaling
-    # sweep), and at real corpus scale broadcasting vectors is never
-    # the right plan.
-    a = v.select(
-        F.col("id").alias("doc_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    ).hint("shuffle_hash")
-    b = v.select(
-        F.col("id").alias("doc_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    ).hint("shuffle_hash")
-    return (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            F.col("doc_a").alias("vec_a"),
-            F.col("doc_b").alias("vec_b"),
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-                "cos"
-            ),
-        )
-        .where(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b", F.round("cos", 6).alias("score"))
-    )
+    return _verify_clusters_gemm(v, assigned, threshold, max_cluster)
 
 
 def _verify_clusters_gemm(
@@ -711,9 +691,9 @@ def _verify_clusters_gemm(
     interpreted dot folds. With constant cluster occupancy m, the
     candidate-pair count is still ~N·m·probe²/2, but the per-pair
     cost drops from an interpreted 2·dim-element fold to a GEMM
-    cell (measured ~8× end-to-end at 100k×64d). Shuffle volume is
-    one (id, vector) row per (vector, probe) — the same rows the
-    pair-join path moved, without the pair-table join fan-out.
+    cell (measured ~8× end-to-end at 100k×64d against the per-pair
+    join-and-fold verify it replaced). Shuffle volume is one (id,
+    vector) row per (vector, probe), with no pair-table join fan-out.
 
     A pair sharing several probed clusters is scored in each;
     duplicates collapse on the PAIR KEY alone (groupBy + max(score))
@@ -830,7 +810,7 @@ def nearest_centroids_two_level(
     import numpy as np
     import pandas as pd
 
-    from math import ceil, isqrt
+    from math import isqrt
 
     from .clustering import kmeans_fit
 
@@ -859,19 +839,13 @@ def nearest_centroids_two_level(
     ).withColumnRenamed("cid", "cell")
 
     id_type = dict(vecs.dtypes)[id_col]
-    p = probe
 
     def per_cell(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
         if not len(left) or not len(right):
             return pd.DataFrame({"__vid": [], "cid": [], "__d": []})
-        order = np.argsort(right["fid"].values)  # ascending fid → tie order
-        fids = right["fid"].values[order]
-        Fm = np.stack(right["fv"].values[order])
-        V = np.stack(left["__vv"].values)
-        D = (Fm * Fm).sum(axis=1) - 2.0 * (V @ Fm.T)
-        pp = min(p, len(fids))
-        pick = np.argsort(D, axis=1, kind="stable")[:, :pp]
-        rows = np.repeat(np.arange(len(left)), pp)
+        fids, Fm, fn = _centroid_table(zip(right["fid"].values, right["fv"].values))
+        pick, D = _nearest(np.stack(left["__vv"].values), Fm, fn, probe)
+        rows = np.repeat(np.arange(len(left)), pick.shape[1])
         cols = pick.reshape(-1)
         return pd.DataFrame(
             {
@@ -894,6 +868,54 @@ def nearest_centroids_two_level(
     )
 
 
+def _centroid_table(pairs):
+    """(cid, cv) pairs → ``(cids, C, ‖c‖²)`` numpy arrays sorted by
+    cid, the table :func:`_nearest` ranks against."""
+    import numpy as np
+
+    ent = sorted(((int(c), list(v)) for c, v in pairs), key=lambda e: e[0])
+    C = np.array([v for _, v in ent], dtype=np.float64)
+    return np.array([c for c, _ in ent], dtype=np.int64), C, (C * C).sum(axis=1)
+
+
+def _nearest(V, C, cn, p: int):
+    """The nearest-centroid kernel: for each row of ``V`` (b, dim),
+    the column indices of its ``p`` nearest rows of the cid-sorted
+    table ``C`` (k, dim), nearest first, and the (b, k) distance
+    matrix ``‖c‖² − 2·v·c`` (``‖v‖²`` is rank-invariant and left
+    out). Ties break toward the smaller column, i.e. the smaller cid:
+    ``argmin`` takes the first hit, and the top-p select keeps
+    stable-argsort order."""
+    import numpy as np
+
+    D = cn - 2.0 * (V @ C.T)
+    p = min(p, D.shape[1])
+    if p == 1:
+        return D.argmin(axis=1)[:, None], D
+    if p == D.shape[1]:
+        return np.argsort(D, axis=1, kind="stable")[:, :p], D
+    # O(k) select of the top-p, then stable-sort only the p
+    # candidates — a full stable argsort of all k distances is
+    # O(k log k) per row and sorts the whole (batch, k) matrix just to
+    # take the top 3-4 once auto-k reaches 2¹⁶. Sorting the candidate
+    # COLUMN INDICES ascending first, then a stable value sort,
+    # reproduces full-argsort tie semantics within the selected set.
+    part = np.argpartition(D, p - 1, axis=1)[:, :p]
+    part.sort(axis=1)
+    vals = np.take_along_axis(D, part, axis=1)
+    pick = np.take_along_axis(part, np.argsort(vals, axis=1, kind="stable"), axis=1)
+    # BOUNDARY ties (a tie spanning the p-th slot) let argpartition
+    # keep an arbitrary tied member; redo the rows where an
+    # unselected column equals the p-th value with the full stable
+    # sort — exact float64 ties only arise from duplicate centroids,
+    # so this path is O(rare · k log k).
+    vmax = vals.max(axis=1)
+    tied = (D == vmax[:, None]).sum(axis=1) > (vals == vmax[:, None]).sum(axis=1)
+    if tied.any():
+        pick[tied] = np.argsort(D[tied], axis=1, kind="stable")[:, :p]
+    return pick, D
+
+
 def nearest_centroids(
     vecs: DataFrame,
     cents: DataFrame,
@@ -902,10 +924,11 @@ def nearest_centroids(
     vec_col: str = "v",
     carry_vec: bool = False,
 ) -> DataFrame:
-    """``probe`` nearest centroids per vector as (id[, v], cid) rows —
-    the Arrow-GEMM twin of the expression-fold argmin used by the
-    oracled IVF path (:func:`ivf_assign` keeps the fold: its
-    assignment semantics are part of q42's oracle contract).
+    """``probe`` nearest centroids (squared L2) per vector as (id[, v],
+    cid) rows — the assigner behind ``kmeans_fit``'s Lloyd loop,
+    ``kmeans_assign`` and ``semantic_neardup``'s bucketing. The
+    oracled IVF path (:func:`ivf_assign`) ranks by cosine in JVM
+    folds instead: its assignment is part of q42's oracle contract.
 
     Why a Pandas kernel: assignment scores N×k distances, and the
     ``zip_with``/``aggregate`` fold evaluates interpreted (outside
@@ -917,12 +940,11 @@ def nearest_centroids(
     hyperplane-LSH planes and `cosine_topk_pandas`' query set) and
     ships in the task closure.
 
-    Determinism: centroids sort by cid before the GEMM, distances
-    compare via ``argmin``/stable ``argsort`` — ties break toward the
-    smallest cid, matching the struct-min fold. BLAS summation order
-    differs from the sequential fold in the last ulps, so callers are
-    the recall-gated / rows-only surfaces (kmeans_fit's Lloyd loop,
-    semantic_neardup's bucketing), never an oracled assignment."""
+    Determinism: ties break toward the smallest cid (:func:`_nearest`).
+    BLAS summation order differs from a sequential fold in the last
+    ulps, so no oracled output depends on these picks. Only vectors
+    of exactly the centroids' dim are assigned: a null or
+    other-length vector gets no row."""
     import numpy as np
     import pandas as pd
 
@@ -932,12 +954,7 @@ def nearest_centroids(
     # kmeans_fit Lloyd loop keeps generations driver-side between
     # iterations (optimization round 12, the pq_fit trim) and skips
     # the per-iteration collect job this would otherwise run
-    rows = sorted(
-        cents
-        if isinstance(cents, list)
-        else cents.select("cid", "cv").collect(),
-        key=lambda r: r["cid"],
-    )  # bounded: k×dim doubles
+    rows = cents if isinstance(cents, list) else cents.select("cid", "cv").collect()
 
     id_field = vecs.schema[id_col]
     vec_field = vecs.schema[vec_col]
@@ -948,56 +965,19 @@ def nearest_centroids(
     out_schema = StructType(fields)
 
     if not rows:
-        # empty centroid table (empty-corpus fit): no assignments —
-        # the shape the expr fold's broadcast join also produced
+        # empty centroid table (empty-corpus fit): no assignments
         return local_frame(vecs.sparkSession, [], out_schema)
 
-    C = np.array([list(r["cv"]) for r in rows], dtype=np.float64)  # (k, dim)
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cn = (C * C).sum(axis=1)  # ||c||²; ||x||² is argmin-invariant
-    p = min(probe, len(rows))
+    cids, C, cn = _centroid_table((r["cid"], r["cv"]) for r in rows)
 
     def kern(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack(pdf[vec_col].values)  # (b, dim)
-            D = cn - 2.0 * (V @ C.T)  # (b, k)
-            if p == 1:
-                pick = D.argmin(axis=1)[:, None]  # first hit = min cid
-            elif p < D.shape[1]:
-                # O(k) select of the top-p, then stable-sort only the
-                # p candidates — a full stable argsort of all k
-                # distances is O(k log k) per row and sorts the whole
-                # (batch, k) matrix just to take the top 3-4 once
-                # auto-k reaches 2¹⁶. Sorting the candidate COLUMN
-                # INDICES ascending first, then a stable value sort,
-                # reproduces full-argsort tie semantics (ties break
-                # toward the smallest cid) within the selected set.
-                part = np.argpartition(D, p - 1, axis=1)[:, :p]
-                part.sort(axis=1)
-                vals = np.take_along_axis(D, part, axis=1)
-                order = np.argsort(vals, axis=1, kind="stable")
-                pick = np.take_along_axis(part, order, axis=1)
-                # BOUNDARY ties (a tie spanning the p-th slot) let
-                # argpartition keep an arbitrary tied member; detect
-                # rows where an unselected column equals the p-th
-                # value and redo just those with the full stable sort
-                # — exact float64 ties only arise from duplicate
-                # centroids, so this path is O(rare · k log k).
-                vmax = vals.max(axis=1)
-                tied = (D == vmax[:, None]).sum(axis=1) > (
-                    vals == vmax[:, None]
-                ).sum(axis=1)
-                if tied.any():
-                    pick[tied] = np.argsort(
-                        D[tied], axis=1, kind="stable"
-                    )[:, :p]
-            else:
-                pick = np.argsort(D, axis=1, kind="stable")[:, :p]
-            b, ids = len(pdf), pdf[id_col].values
+            pick, _ = _nearest(np.stack(pdf[vec_col].values), C, cn, probe)
+            p = pick.shape[1]
             cols = {
-                id_col: np.repeat(ids, p),
+                id_col: np.repeat(pdf[id_col].values, p),
                 "cid": cids[pick].reshape(-1).astype(np.int32),
             }
             if carry_vec:
@@ -1009,14 +989,13 @@ def nearest_centroids(
             ]
 
     # null/ragged vectors can't enter np.stack (same guard as the
-    # hyperplane kernel): drop them before the Arrow exchange
-    dim = C.shape[1]
+    # hyperplane kernel): drop them before the Arrow exchange.
     # Input partitioning is the CALLER's contract: an automatic
     # repartition here would re-shuffle every Lloyd iteration for
     # nothing — measured ~0.5 s/query at fixture scale, where the
     # k×batch GEMMs are far cheaper than one extra exchange (and a
     # real warehouse scan arrives multi-split anyway).
     clean = vecs.select(id_col, vec_col).where(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
+        F.col(vec_col).isNotNull() & (F.size(vec_col) == C.shape[1])
     )
     return clean.mapInPandas(kern, out_schema)

@@ -93,8 +93,25 @@ def test_ivf_recall_with_fitted_centroids(spark, emb):
     assert len(a & e) / len(e) >= 0.6  # nprobe 3/8 of a 3-iter fit
 
 
+def _fold_assign(vecs, cents):
+    """Reference assign: broadcast join + struct-min aggregate over a
+    sequential squared-L2 fold — pure JVM, bit-reproducible, ties
+    toward the smallest cid. (_id, vd) × (cid, cv) → (_id, cid)."""
+    d = F.aggregate(
+        F.zip_with("vd", "cv", lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return (
+        vecs.join(F.broadcast(cents))
+        .groupBy("_id")
+        .agg(F.min(F.struct(d.alias("_d"), F.col("cid"))).alias("_m"))
+        .select("_id", F.col("_m.cid").alias("cid"))
+    )
+
+
 def test_arrow_assign_matches_expr_fold(spark, emb):
-    """The GEMM assign engine must agree with the bit-reproducible
+    """kmeans_assign's GEMM must agree with the bit-reproducible
     struct-min fold on the fixture (distances between fitted
     centroids are far wider than BLAS-vs-fold ulp divergence)."""
     cents = clustering.kmeans_fit(
@@ -105,14 +122,34 @@ def test_arrow_assign_matches_expr_fold(spark, emb):
         similarity.as_double_vec("embedding").alias("vd"),
     )
     a = {
-        (r["_id"], r["cid"])
-        for r in clustering._assign(vecs, cents, engine="arrow").collect()
+        (r["vec_id"], r["cluster_id"])
+        for r in clustering.kmeans_assign(
+            emb, cents, id_col="vec_id", vec_col="embedding"
+        ).collect()
     }
-    e = {
-        (r["_id"], r["cid"])
-        for r in clustering._assign(vecs, cents, engine="expr").collect()
+    e = {(r["_id"], r["cid"]) for r in _fold_assign(vecs, cents).collect()}
+    assert a == e and len(a) == emb.count()
+
+
+def test_assign_null_and_ragged_vectors(spark):
+    """kmeans_assign and inertia read vectors by the fit's rule: a
+    vector no longer than the centroids' dim is zero-padded to it
+    (empty is the origin), a null or longer vector gets no row."""
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [10.0, 10.0])], "cid int, cv array<double>"
+    )
+    corpus = spark.createDataFrame(
+        [(1, None), (2, [9.0]), (3, [9.0, 9.0, 9.0]), (4, []),
+         (5, [9.0, 9.0]), (6, [1.0, 0.0])],
+        "vec_id long, emb array<double>",
+    )
+    got = {
+        r["vec_id"]: r["cluster_id"]
+        for r in clustering.kmeans_assign(corpus, cents).collect()
     }
-    assert a == e
+    # [9] reads as [9, 0]: 81 from cid 0, 101 from cid 1
+    assert got == {2: 0, 4: 0, 5: 1, 6: 0}
+    assert clustering.inertia(corpus, cents) == 81.0 + 0.0 + 2.0 + 1.0
 
 
 def test_nearest_centroids_drops_null_and_ragged(spark, emb):

@@ -1171,15 +1171,26 @@ def test_mp4_sample_table_multichunk_stsc():
 
 def test_error_text_is_cut_at_200_characters(spark):
     """Every entry point cuts its per-row error text at 200
-    characters — decode_media_features too."""
+    characters — decode_media_features too — and an unknown image
+    type reads the same in decode_media_features and media_embedding."""
     mtype = "image/" + "x" * 250
     df = spark.createDataFrame(
-        [(1, b"P6\n1 1\n255\n\x00\x00\x00", mtype, None, None, None)],
+        [
+            (1, b"P6\n1 1\n255\n\x00\x00\x00", mtype, None, None, None),
+            (2, b"II*\x00", "image/tiff", None, None, None),
+        ],
         multimodal.MEDIA_SCHEMA,
     )
-    (row,) = multimodal.decode_media_features(df).collect()
-    full = f"ValueError: unsupported media_type: {mtype}"
-    assert row.decode_error == full[:200] and len(row.decode_error) == 200
+    want = {
+        r.media_id: f"ValueError: unsupported media_type: {r.media_type}"[:200]
+        for r in df.collect()
+    }
+    assert len(want[1]) == 200
+    for out, col in (
+        (multimodal.decode_media_features(df), "decode_error"),
+        (multimodal.media_embedding(df), "embed_error"),
+    ):
+        assert {r.media_id: r[col] for r in out.collect()} == want, col
 
 
 def test_gray_luma_is_the_gray_mean():

@@ -223,7 +223,7 @@ def test_gemm_verify_blocking_invariant(spark, sf_dir, monkeypatch):
             (r.vec_a, r.vec_b): r.score
             for r in similarity.semantic_neardup(
                 emb, "vec_id", "embedding", threshold=0.45, n_iter=1,
-                probe=2, verify="gemm",
+                probe=2,
             ).collect()
         }
 
@@ -324,3 +324,67 @@ def test_two_level_routing_matches_flat(spark, sf_dir):
     }
     assert got <= exact  # exact GEMM verification ⇒ no false positives
     assert len(got & exact) / max(len(exact), 1) >= 0.9
+
+
+def test_embedding_family_has_one_kernel():
+    """One nearest-centroid distance, one ADC scan, no engine switch:
+    an ``ast`` scan fails if any of these comes back — a second
+    function under operators/ computing ``… − 2.0 * (… @ …)``, a
+    second ADC ``mapInPandas`` in pq.py (its other one is the
+    subspace assign), or an ``engine``/``verify`` parameter in
+    similarity.py, clustering.py or dedup.py."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(similarity.__file__).parent
+
+    def sites(path, hit):
+        """Names of the innermost functions holding a node ``hit``
+        accepts, one entry per node."""
+        out = []
+
+        def walk(node, fn):
+            for child in ast.iter_child_nodes(node):
+                name = fn
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    name = child.name
+                if hit(child):
+                    out.append(name)
+                walk(child, name)
+
+        walk(ast.parse(path.read_text()), None)
+        return out
+
+    def centroid_distance(n):
+        return (
+            isinstance(n, ast.BinOp)
+            and isinstance(n.op, ast.Sub)
+            and isinstance(n.right, ast.BinOp)
+            and isinstance(n.right.op, ast.Mult)
+            and isinstance(n.right.left, ast.Constant)
+            and n.right.left.value == 2
+            and isinstance(n.right.right, ast.BinOp)
+            and isinstance(n.right.right.op, ast.MatMult)
+        )
+
+    found = {
+        (p.name, fn)
+        for p in sorted(ops.glob("*.py"))
+        for fn in sites(p, centroid_distance)
+    }
+    assert found == {("similarity.py", "_nearest")}, found
+
+    def map_in_pandas(n):
+        return isinstance(n, ast.Attribute) and n.attr == "mapInPandas"
+
+    assert sorted(sites(ops / "pq.py", map_in_pandas)) == [
+        "_adc_topk", "_assign_all_subs"
+    ]
+
+    for name in ("similarity.py", "clustering.py", "dedup.py"):
+        for node in ast.walk(ast.parse((ops / name).read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.Lambda)):
+                a = node.args
+                args = a.posonlyargs + a.args + a.kwonlyargs
+                bad = {x.arg for x in args} & {"engine", "verify"}
+                assert not bad, (name, getattr(node, "name", "lambda"), bad)
